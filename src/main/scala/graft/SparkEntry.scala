@@ -1775,14 +1775,7 @@ object SparkEntry {
       // per row, so the final order is deterministic either way.
       val parts: Seq[() => DataFrame] =
         Seq(() => fk(), () => rules(), () => ben(), () => outl(), () => vol())
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(parts.size)
-      val collected = try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        val futs = parts.map(p => scala.concurrent.Future(p().collect()))
-        futs.flatMap(f => scala.concurrent.Await.result(f,
-          scala.concurrent.duration.Duration.Inf))
-      } finally pool.shutdown()
+      val collected = Par.map(parts)(p => p().collect()).flatten
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("component",
           org.apache.spark.sql.types.StringType, nullable = false),

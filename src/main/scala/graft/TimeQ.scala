@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: time named queries steady-state (3 runs each, tables
   * pre-warmed, caches cleared between runs) — finer-grained than
@@ -10,12 +9,7 @@ object TimeQ {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args.drop(1).toSeq
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     Tables.all.foreach(n => Tables.load(spark, dir, n).count())
     names.foreach { n =>
       (1 to 3).foreach { i =>

@@ -17,7 +17,6 @@ object Corrector {
     def gte(c: Column, v: Any): Column = c >= v
     def lt(c: Column, v: Any): Column = c < v
     def between(c: Column, lo: Any, hi: Any): Column = c >= lo && c <= hi
-    def isNullSearch(c: Column): Column = c.isNull
   }
 
   /** home.py:1384-1389 drop the column. */
@@ -78,10 +77,6 @@ object Corrector {
   }
   def normalizePhone(df: DataFrame, column: String): DataFrame =
     df.withColumn(column, normalizePhone(col(column)))
-
-  /** Type casting repairs (string↔date↔numeric). */
-  def castColumn(df: DataFrame, column: String, to: String): DataFrame =
-    df.withColumn(column, col(column).cast(to))
 
   /** Fill nulls with a constant. */
   def fillNulls(df: DataFrame, column: String, value: Any): DataFrame =

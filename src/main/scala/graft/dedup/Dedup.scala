@@ -965,8 +965,8 @@ object Dedup {
   // to 0.5 (capped) — the safe plan at corpus scale has to be the one
   // you get without thinking, because an uncapped inverted index lets
   // every stop-token join all its documents pairwise. Callers that
-  // relied on the old exact-recall default should switch to these
-  // named variants instead of passing the `Double.NaN` sentinel.
+  // relied on the old exact-recall default pass `relDfCap =
+  // Double.NaN` (or, for the self-join, use the named variant below).
 
   /** [[jaccardJoin]] with guaranteed exact recall (uncapped inverted
     * index — every pair sharing any token is a candidate). O(Σ df²)
@@ -978,23 +978,4 @@ object Dedup {
                        allPairsMaxDocs: Long = 10000L): DataFrame =
     jaccardJoin(df, textCol, idCol, threshold, relDfCap = Double.NaN,
       allPairsMaxDocs = allPairsMaxDocs)
-
-  /** [[nearDupMatches]] with guaranteed exact recall (uncapped
-    * bipartite index). Same scale caveat as [[jaccardJoinExact]].
-    */
-  def nearDupMatchesExact(batch: DataFrame, store: DataFrame, textCol: String,
-                          idCol: String, threshold: Double,
-                          allPairsMaxDocs: Long = 10000L): DataFrame =
-    nearDupMatches(batch, store, textCol, idCol, threshold,
-      relDfCap = Double.NaN, allPairsMaxDocs = allPairsMaxDocs)
-
-  /** [[dedupNearAgainstStore]] with guaranteed exact recall (uncapped
-    * bipartite index). Same scale caveat as [[jaccardJoinExact]].
-    */
-  def dedupNearAgainstStoreExact(batch: DataFrame, store: DataFrame,
-                                 textCol: String, idCol: String,
-                                 threshold: Double,
-                                 allPairsMaxDocs: Long = 10000L): DataFrame =
-    dedupNearAgainstStore(batch, store, textCol, idCol, threshold,
-      relDfCap = Double.NaN, allPairsMaxDocs = allPairsMaxDocs)
 }

@@ -899,24 +899,12 @@ object Profiler {
     // same SQL double total order, rounded by the same Spark Round
     // (evaluated in a 1-row plan, never re-implemented on the driver).
     // per-column quantile jobs are independent — run the columns
-    // concurrently (guide §2.6), quartile phase then MAD phase
-    // pool capped at 8 (ADVICE r16): a wide profile must not launch one
-    // concurrent distributed sort per column — 8 keeps the scheduler
-    // back-filling stragglers without flooding it
-    def inPool[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(math.max(xs.size, 1), 8))
-      try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        xs.map(x => scala.concurrent.Future(f(x)))
-          .map(fu => scala.concurrent.Await.result(fu,
-            scala.concurrent.duration.Duration.Inf))
-      } finally pool.shutdown()
-    }
+    // concurrently (guide §2.6), quartile phase then MAD phase, at
+    // most 8 at once (ADVICE r16): a wide profile must not launch one
+    // concurrent distributed sort per column
     def litOrNull(o: Option[Double]) =
       o.map(lit(_)).getOrElse(lit(null).cast(DoubleType))
-    val quartiles = inPool(cols) { c =>
+    val quartiles = graft.Par.map(cols) { c =>
       val v = col(c).cast(DoubleType)
       val (_, qs) = sortedQuantiles(df, v, Seq(0.25, 0.5, 0.75))
       // ROUNDED stats come from Spark's own Round over the raw
@@ -929,7 +917,7 @@ object Profiler {
         if (roundedRow.isNullAt(i)) None else Some(roundedRow.getDouble(i))
       (c, opt(0), opt(1), opt(2))
     }
-    val statsPerCol = inPool(quartiles) { case (c, q1r, medr, q3r) =>
+    val statsPerCol = graft.Par.map(quartiles) { case (c, q1r, medr, q3r) =>
       val v = col(c).cast(DoubleType)
       // MAD from the ROUNDED median, same machinery; a null median
       // (empty/all-null column) nulls every deviation, like the

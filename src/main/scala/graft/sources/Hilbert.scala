@@ -22,9 +22,8 @@ import org.apache.spark.sql.types._
   * codegen'd binary expression ([[HilbertIndex2]]; a pure-Column
   * formulation would double the expression tree per bit step), fully
   * integer, so an external SQL engine re-derives it by unrolling the
-  * same steps (the q_d103 oracle does exactly that). Bucketing and
-  * the write path mirror [[Zorder]] verbatim — same integer DIV
-  * bucket rule, same range-partition + sort-within + write shape.
+  * same steps (the q_d103 oracle does exactly that). Bucketing
+  * mirrors [[Zorder]] verbatim — the same integer DIV bucket rule.
   */
 object Hilbert {
 
@@ -50,20 +49,6 @@ object Hilbert {
       .drop("_min1", "_max1", "_min2", "_max2")
   }
 
-  /** Hilbert-ordered parquet write — [[Zorder.zorderWrite]] with the
-    * better curve: range-partition on the Hilbert index, sort within,
-    * write; every file covers one contiguous curve segment = one
-    * tight rectangle of the 2-D value space.
-    */
-  def hilbertWrite(df: DataFrame, c1: String, c2: String, path: String,
-                   numFiles: Int = 32, bits: Int = 16): Unit = {
-    require(numFiles > 0, s"numFiles must be positive: $numFiles")
-    withHilbertValue(df, c1, c2, bits)
-      .repartitionByRange(numFiles, col("h_value"))
-      .sortWithinPartitions(col("h_value"))
-      .write.mode("overwrite").parquet(path)
-  }
-
   /** n-D generalization (r15, D103b): real clustering keys are often
     * 3–4 columns, and Skilling's transpose is dimension-generic —
     * [[withHilbertValue]] for any number of integer columns via
@@ -86,16 +71,6 @@ object Hilbert {
     df.crossJoin(broadcast(bounds))
       .withColumn(hCol, HilbertIndexN(buckets, bits))
       .drop(cols.indices.flatMap(i => Seq(s"_min$i", s"_max$i")): _*)
-  }
-
-  /** n-D Hilbert write: one tight n-D box of the value space per file. */
-  def hilbertWriteN(df: DataFrame, cols: Seq[String], path: String,
-                    numFiles: Int = 32, bits: Int = 16): Unit = {
-    require(numFiles > 0, s"numFiles must be positive: $numFiles")
-    withHilbertValueN(df, cols, bits)
-      .repartitionByRange(numFiles, col("h_value"))
-      .sortWithinPartitions(col("h_value"))
-      .write.mode("overwrite").parquet(path)
   }
 }
 

@@ -490,50 +490,11 @@ object SnapshotLog {
     (numAll, strScan)
   }
 
-  /** Run `f` over `xs` on a bounded pool (footer reads are tiny
-    * driver-side metadata IO — independent, latency-dominated; a
-    * 75-file commit paid them sequentially before r17).
-    */
-  private def inFooterPool[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
-    if (xs.size <= 1) return xs.map(f)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(xs.size, 8))
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      xs.map(x => scala.concurrent.Future(f(x)))
-        .map(fu => scala.concurrent.Await.result(fu,
-          scala.concurrent.duration.Duration.Inf))
-    } finally pool.shutdown()
-  }
-
-  /** Exact total row count of data files from parquet FOOTERS alone
-    * (r17): a compaction needs N only to choose its output file
-    * count — paying a full table scan for it is pure read
-    * amplification (at 100 TB, a full extra pass per maintenance
-    * commit). Block row counts are authoritative parquet metadata.
-    * None on any surprise → caller falls back to the scan count.
-    */
-  private def footerRowCount(spark: SparkSession,
-                             absFiles: Seq[String]): Option[Long] = try {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sessionState.newHadoopConf()
-    val counts = inFooterPool(absFiles) { abs =>
-      val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(abs), conf)
-      val r = ParquetFileReader.open(in)
-      val md = try r.getFooter finally r.close()
-      md.getBlocks.asScala.map(_.getRowCount).sum
-    }
-    Some(counts.sum)
-  } catch { case scala.util.control.NonFatal(_) => None }
-
   /** Per-file numeric bounds from parquet footers (r16): Some((stats,
     * handledCols)) when every file's footer carries clean stats for
     * the plain-integer subset of `statsCols`; None = caller must use
-    * the scan path for everything. Footers are read on a bounded pool
-    * (r17) — they are independent metadata fetches.
+    * the scan path for everything. Footers are read concurrently
+    * ([[graft.Par.map]], r17) — they are independent metadata fetches.
     */
   private def footerNumStats(spark: SparkSession, dir: String,
                              relFiles: Seq[String], statsCols: Seq[String])
@@ -545,7 +506,7 @@ object SnapshotLog {
     import scala.jdk.CollectionConverters._
     val conf = spark.sessionState.newHadoopConf()
     val base = fs(spark, dir).makeQualified(new org.apache.hadoop.fs.Path(dir))
-    val perFileSeq = inFooterPool(relFiles) { rel =>
+    val perFileSeq = graft.Par.map(relFiles) { rel =>
       val in = HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(base, rel), conf)
       val r = ParquetFileReader.open(in)
@@ -1038,7 +999,11 @@ object SnapshotLog {
     * Schema evolution across the range null-fills older steps'
     * missing columns; each step reads under ITS destination
     * version's committed schema. Metadata-only commits contribute
-    * nothing.
+    * nothing. A table that already has a column the feed reserves
+    * (`_cdf_side`, `_cdf_net`, `_cdf_k`, `_change_type`,
+    * `_commit_version`) is refused with an IllegalArgumentException
+    * naming it, before any job runs: the feed would overwrite that
+    * column and corrupt the diff.
     */
   def readChanges(spark: SparkSession, dir: String,
                   fromVersion: Long, toVersion: Long = -1L): DataFrame = {
@@ -1074,8 +1039,8 @@ object SnapshotLog {
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
             case None => spark.read.parquet(other: _*).filter(lit(false))
           }
-        val insRaw = side(added, gone)
-        val delRaw = side(gone, added)
+        val insRaw = noCdfColumns(side(added, gone), dir)
+        val delRaw = noCdfColumns(side(gone, added), dir)
         // pure-insert (append) / pure-delete steps skip the rewrite
         // anti-diff entirely (r16): the multiset difference against an
         // EMPTY side is the identity on one side and empty on the
@@ -1113,10 +1078,25 @@ object SnapshotLog {
       }
     }
     if (steps.isEmpty)
-      read(spark, dir, to).filter(lit(false))
+      noCdfColumns(read(spark, dir, to), dir).filter(lit(false))
         .withColumn("_change_type", lit(""))
         .withColumn("_commit_version", lit(0L))
     else steps.reduce(_.unionByName(_, allowMissingColumns = true))
+  }
+
+  /** The columns [[readChanges]] adds to its output or uses inside
+    * its rewrite diff.
+    */
+  private val CdfReserved: Set[String] =
+    Set("_cdf_side", "_cdf_net", "_cdf_k", "_change_type", "_commit_version")
+
+  private def noCdfColumns(df: DataFrame, dir: String): DataFrame = {
+    df.columns.find(CdfReserved).foreach { c =>
+      throw new IllegalArgumentException(
+        s"[graft] readChanges: table $dir has a column named '$c', " +
+          "which the change feed reserves; rename it first")
+    }
+    df
   }
 
   /** The files [[readPrunedStr]] would open. */

@@ -28,9 +28,6 @@ object Sources {
   def readJsonLines(spark: SparkSession, path: String): DataFrame =
     spark.read.json(path)
 
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /** ORC — the other columnar lake format Spark ships natively
     * (predicate pushdown, column pruning, and splittable stripes,
     * same as parquet; pick whichever the lake standardized on).

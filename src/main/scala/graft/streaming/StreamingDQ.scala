@@ -714,8 +714,8 @@ object StreamingDQ {
 
   /** Write one parquet arrival file per slice (strictly increasing
     * modification times = arrival order), submitting the per-slice
-    * single-file jobs CONCURRENTLY (r16, guide §2.6 "overlap
-    * independent jobs"): each slice is still its own
+    * single-file jobs CONCURRENTLY, at most 8 at once (r16, guide §2.6
+    * "overlap independent jobs"): each slice is still its own
     * scan-filter-coalesce(1) write — byte-identical files to the
     * sequential loop this replaces — but the N tiny latency-dominated
     * jobs now overlap, so the harness pays ~max(slice job) instead of
@@ -730,24 +730,12 @@ object StreamingDQ {
                                 root: java.nio.file.Path): Unit = {
     import java.nio.file.Files
     val tmp = Files.createTempDirectory("graft_replay_tmp")
-    // max(.,1) so an empty slice list can't throw from the pool ctor
-    // (ADVICE r16); the schema param the old signature took was unused
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(slices.size, 1))
-    val parts = try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val futs = slices.zipWithIndex.map { case (slice, k) =>
-        scala.concurrent.Future {
-          val stage = s"$tmp/b$k"
-          slice.coalesce(1).write.mode("overwrite").parquet(stage)
-          new java.io.File(stage).listFiles()
-            .filter(f => f.getName.endsWith(".parquet")).head
-        }
-      }
-      futs.map(f => scala.concurrent.Await.result(f,
-        scala.concurrent.duration.Duration.Inf))
-    } finally pool.shutdown()
+    val parts = graft.Par.map(slices.zipWithIndex) { case (slice, k) =>
+      val stage = s"$tmp/b$k"
+      slice.coalesce(1).write.mode("overwrite").parquet(stage)
+      new java.io.File(stage).listFiles()
+        .filter(f => f.getName.endsWith(".parquet")).head
+    }
     val base = System.currentTimeMillis() - 3600000L
     parts.zipWithIndex.foreach { case (part, k) =>
       val dest = root.resolve(f"batch_$k%04d.parquet")

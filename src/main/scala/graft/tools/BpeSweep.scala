@@ -1,14 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** BPE induction viability sweep (r13 verdict #3): wall-time and
   * realized batch amortization of [[graft.text.Bpe.learnMergesBatched]]
   * at merge counts up to real-tokenizer territory (the gate stops at
   * 64; a 32k vocabulary is ~2k driver round-trips at batch 16 — the
   * adaptive growth is what this sweep measures).
   *
-  * Usage: SPARK_GRAFT_CPUS=32 runMain graft.tools.BpeSweep <sfDir> [merges,...]
+  * Usage: runMain graft.tools.BpeSweep <sfDir> [merges,...]
   * Prints one JSON line per merge count: wall seconds, jobs (driver
   * round-trips), realized mean batch, max batch.
   */
@@ -18,15 +16,7 @@ object BpeSweep {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val sizes = if (args.length > 1) args(1).split(",").map(_.toInt).toSeq
                 else Seq(64, 256, 1024)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     println(s"corpus $dir: docs=${docs.count()}")
     sizes.foreach { n =>

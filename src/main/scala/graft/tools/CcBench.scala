@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Head-to-head fixpoint benchmark (r8 verdict #6): min-label +
@@ -13,14 +12,7 @@ object CcBench {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "bigdata/x50"
     val runs = if (args.length > 1) args(1).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val pairs = graft.dedup.Dedup
       .minhashPairs(docs, "text", "doc_id", 0.75, allPairsMaxSets = 0)

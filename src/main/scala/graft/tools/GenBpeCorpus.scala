@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** BPE-depth corpus generator (r15, r14 verdict next-round #4): the
@@ -37,13 +36,7 @@ object GenBpeCorpus {
     val out = if (args.length > 0) args(0) else "bigdata/bpe"
     val nDocs = if (args.length > 1) args(1).toInt else 5000
     val wordsPerDoc = if (args.length > 2) args(2).toInt else 200
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     val sylls = for (c <- Consonants; v <- Vowels) yield s"$c$v"
     val sylArr = array(sylls.map(lit(_)): _*)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{CacheScope, Tables}
 import graft.dedup.Dedup
@@ -12,12 +12,7 @@ import graft.dedup.Dedup
 object IdxProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     Tables.all.foreach(n => Tables.load(spark, dir, n).count())
     def time[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
@@ -59,12 +54,7 @@ object IdxProbe {
 object MatchProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     Tables.all.foreach(n => Tables.load(spark, dir, n).count())
     def time[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
@@ -104,12 +94,7 @@ object MatchProbe {
 object MatchProbe2 {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     Tables.all.foreach(n => Tables.load(spark, dir, n).count())
     def time[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
@@ -152,12 +137,7 @@ object BenchStyle {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args.drop(1).toSeq
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     Tables.all.foreach(n => Tables.load(spark, dir, n).count())
     names.foreach { n =>
       (1 to 3).foreach { i =>
@@ -175,12 +155,7 @@ object BenchStyle {
 object SizeBound {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val docs = Tables.load(spark, dir, "documents")
     docs.select(size(Dedup.wordSet(col("text"))).as("sz"))
       .agg(min(col("sz")), expr("percentile(sz, array(0.05,0.25,0.5,0.75,0.95))"), max(col("sz")))
@@ -208,12 +183,7 @@ object SizeBound {
 object StreamProbe {
   def main(args: Array[String]): Unit = {
     val dir0 = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     Tables.all.foreach(n => Tables.load(spark, dir0, n).count())
     (1 to 2).foreach { round =>
       val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Candidate-volume measurement for D97b blocked margin mining (r13
@@ -20,15 +19,7 @@ object MiningVolume {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "bigdata/x50"
     val cells = if (args.length > 1) args(1).toInt else 16
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val src = emb.filter(col("vec_id") % 2 === 0)
     val tgt = emb.filter(col("vec_id") % 2 === 1)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ann.{Ann, Pq}
 
@@ -12,7 +11,7 @@ import graft.ann.{Ann, Pq}
   * training buys at corpus scale.
   *
   * Usage:
-  *   SPARK_GRAFT_CPUS=32 runMain graft.tools.PqRecall \
+  *   runMain graft.tools.PqRecall \
   *     [embDir] [nQueries] [k] [nlist] [nprobe] [m] [ksub] [rerank]
   * Prints one JSON line per codebook flavor.
   */
@@ -27,13 +26,7 @@ object PqRecall {
     val m = if (args.length > 5) args(5).toInt else 8
     val ksub = if (args.length > 6) args(6).toInt else 16
     val rerank = if (args.length > 7) args(7).toInt else 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     val emb = graft.CacheScope.persist(
       spark.read.parquet(s"$dir/embeddings.parquet"))
     val n = emb.count()

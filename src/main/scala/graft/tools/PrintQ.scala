@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump one SparkEntry query's rows to stdout — for pinning literal
   * oracle VALUES (gate-row scheme) and quick inspection without the
   * full Verify sweep. Usage: PrintQ <sfDir> <queryName>...
@@ -9,15 +7,7 @@ import org.apache.spark.sql.SparkSession
 object PrintQ {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     args.drop(1).foreach { name =>
       println(s"== $name")
       graft.SparkEntry.queries(name)(spark, sfDir).show(1000, truncate = false)

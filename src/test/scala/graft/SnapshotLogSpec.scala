@@ -286,4 +286,15 @@ class SnapshotLogSpec extends SparkSpec {
     assert(!old.files.forall(p => new java.io.File(new java.net.URI(p).getPath).exists()))
     assert(SnapshotLog.read(spark, dir).as[Long].collect().sorted.toSeq == (1L to 50L))
   }
+
+  test("readChanges refuses a data column named like a change-feed column") {
+    val dir = tmp("graft_cdf_reserved")
+    SnapshotLog.write((1L to 10L).map(i => (i, i % 2)).toDF("id", "_cdf_side")
+      .repartition(2), dir, statsCols = Seq("id"))
+    // a rewrite step: both added and removed files, the diff path
+    // that keys its +1/-1 side marker on `_cdf_side`
+    SnapshotLog.updateRange(spark, dir, "id", 3L, 4L, Map("_cdf_side" -> lit(7L)))
+    val e = intercept[IllegalArgumentException](SnapshotLog.readChanges(spark, dir, 0L))
+    assert(e.getMessage.contains("'_cdf_side'"))
+  }
 }
