@@ -185,6 +185,44 @@ class PropertySpec extends SparkSpec {
     assert(degradedJ.size <= exactJ.size && degradedS.size <= exactS.size)
   }
 
+  test("similarPairs equals a brute-force all-pairs tf-idf reference, capped and uncapped") {
+    // hot words sit in most strings, so their grams' df runs past the
+    // relative cap floor(0.5·N); strings made only of hot words have
+    // prefixes that run into those grams. Hot grams also sort before
+    // the cold ones lexically, so a prefix taken in gram order instead
+    // of df order starts with grams the cap then drops. Every fifth
+    // string gets a near-duplicate so every threshold has pairs; 1.0
+    // gives the shortest prefixes.
+    val word = Gen.chooseNum(4, 7).flatMap(k =>
+      Gen.listOfN(k, Gen.oneOf("kmnorstu".toSeq)).map(_.mkString))
+    val cold = sample(word, 12).distinct
+    val docGen = for {
+      nh <- Gen.chooseNum(1, 4); nc <- Gen.chooseNum(0, 2)
+      hs <- Gen.listOfN(nh, Gen.oneOf("abad", "ebal"))
+      cs <- Gen.listOfN(nc, Gen.oneOf(cold))
+    } yield (hs ++ cs).mkString(" ")
+    val texts = sample(docGen, 80)
+    val docs = (texts ++ texts.grouped(5).map(_.head + "x")).zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }
+    val ref = TfIdfRef.pairs(docs)
+    val cap = docs.size / 2
+    val df = docs.toDF("id", "s")
+    def got(d: org.apache.spark.sql.DataFrame) = d.collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val dropped = Seq(0.3, 0.6, 0.9, 1.0).map { t =>
+      val exact = ref.collect { case (k, (c, _)) if TfIdfRef.round4(c) >= t => k -> TfIdfRef.round4(c) }
+      val capped = exact.filter { case (k, _) => ref(k)._2 <= cap }
+      assert(exact.nonEmpty, s"no pairs at $t")
+      assert(got(graft.similarity.StringSim.similarPairs(df, "s", "id", t,
+        relDfCap = Double.NaN)) == exact, s"uncapped at $t")
+      assert(got(graft.similarity.StringSim.similarPairs(df, "s", "id", t,
+        candidateBudget = Long.MaxValue)) == capped, s"capped at $t")
+      exact.size - capped.size
+    }
+    assert(dropped.sum > 0, "the cap dropped no pair: the capped case tested nothing")
+    CacheScope.clear()
+  }
+
   test("crossEntropy is positive and PSI is zero against self on random corpora") {
     val wordGen = Gen.oneOf("w1", "w2", "w3", "w4", "w5", "w6")
     val docGen = Gen.chooseNum(1, 12).flatMap(n => Gen.listOfN(n, wordGen).map(_.mkString(" ")))

@@ -8,7 +8,8 @@ import graft.dedup.Dedup
   * every path that gained it — including the one adversarial corner,
   * a pair whose exact Jaccard sits BELOW the threshold but whose
   * round(j, 4) rounds UP across it (the half-up slack the filter's
-  * 1e-4 margin exists for).
+  * 1e-4 margin exists for). The same corner is pinned for the tf-idf
+  * cosine prefix filter of `StringSim.similarPairs`.
   */
 class R17OptSpec extends SparkSpec {
   import spark.implicits._
@@ -76,6 +77,34 @@ class R17OptSpec extends SparkSpec {
     val exact = Dedup.nearDupMatches(batch, store, "text", "doc_id", 0.9,
       relDfCap = Double.NaN, allPairsMaxDocs = 0L).collect()
     assert(exact.length == 1 && exact(0).getDouble(2) == 0.9)
+    CacheScope.clear()
+  }
+
+  test("rounding-boundary pair survives the cosine prefix filter: similarPairs (capped + uncapped)") {
+    // y's grams are a subset of x's with equal weights, so cos(x, y) =
+    // ‖y‖/‖x‖, and x's rarer (df 1) grams rank before every shared
+    // (df 2) gram: the shared grams are x's suffix, whose norm is
+    // exactly cos·‖x‖. At threshold round(cos, 4) > cos an unmargined
+    // prefix bound puts no shared gram in x's prefix and drops the
+    // pair; one-gram digit fillers only raise N so shared grams keep
+    // idf > 0.
+    val letters = "abcdefghijklmnopqrstuvwxyz"
+    val family = for {
+      l <- 4 to 16; e <- 1 to 6; f <- 1 to 6
+      docs = Seq(1L -> letters.take(l), 2L -> letters.take(l + e)) ++
+        (1 to f).map(i => (10L + i) -> i.toString * 3)
+      c = TfIdfRef.pairs(docs)((1L, 2L))._1
+      if TfIdfRef.round4(c) - c > 1e-6
+    } yield (docs, c)
+    val (docs, c) = family.head
+    val m = TfIdfRef.round4(c)
+    val df = docs.toDF("id", "s")
+    def at12(d: org.apache.spark.sql.DataFrame) = d.collect()
+      .filter(r => r.getLong(0) == 1L && r.getLong(1) == 2L).map(_.getDouble(2)).toSeq
+    assert(at12(graft.similarity.StringSim.similarPairs(df, "s", "id", m,
+      dfCap = 1000000000L, relDfCap = Double.NaN)) == Seq(m), s"capped, cos $c")
+    assert(at12(graft.similarity.StringSim.similarPairs(df, "s", "id", m,
+      relDfCap = Double.NaN)) == Seq(m), s"uncapped, cos $c")
     CacheScope.clear()
   }
 
