@@ -1629,6 +1629,7 @@ object SparkEntry {
       val bounds = cols.map { c =>
         val vals = graft.CacheScope.persist(
           li.select(col(c).cast("double").as("v")).filter(col("v").isNotNull)
+            // bounded by the gate table's column: a certification window
             .withColumn("rn", row_number().over(Window.orderBy("v"))))
         val n = vals.agg(count(lit(1)).as("n"))
         qs.map { q =>

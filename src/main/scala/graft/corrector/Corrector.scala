@@ -94,32 +94,18 @@ object Corrector {
 
   /** Stable row index for index-based search/edit (home.py:1373-1377
     * — pandas positional index has no distributed equivalent, so the
-    * index is DEFINED by a sort order). The unpartitioned row_number
-    * window is a SINGLE-PARTITION sort — correct and fine for
-    * dimension-sized tables, a silent scale-killer on a fact table.
-    * The d34 guard pattern applied (r12 verdict #5): one bounded
-    * limit+count probe (the scan stops at maxRows+1 rows), and a
-    * LOUD refusal past `maxRows` pointing at the keyed alternative
-    * instead of submitting a job that funnels the corpus through one
-    * task. Callers that genuinely want a huge global index should
-    * index by a key (sort key prefix) or zipWithIndex-style
-    * two-pass — positional indexing at fact scale is a smell the
-    * reference's pandas heritage doesn't surface.
+    * index is DEFINED by a sort order): `row_index` (INT, 0-based) =
+    * the D96 distributed rank under `orderCols`
+    * ([[graft.operators.Rank.globalRank]] — range-partitioned, never
+    * one task), rows that tie on `orderCols` broken by an id pinned
+    * with the rank's partitioning.
     */
-  def withRowIndex(df: DataFrame, orderCols: Seq[String],
-                   maxRows: Long = 10000000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val probe = df.limit(
-      math.min(maxRows + 1, Int.MaxValue.toLong).toInt).count()
-    if (probe > maxRows)
-      throw new IllegalStateException(
-        s"[graft] Corrector.withRowIndex: input exceeds $maxRows rows — " +
-          "a global positional index would single-partition sort the " +
-          "corpus. Index by a key instead (filter/join on the key), or " +
-          "raise maxRows explicitly if the table really fits one task.")
-    df.withColumn("row_index",
-      row_number().over(Window.orderBy(orderCols.map(col).toIndexedSeq: _*)) - 1)
-  }
+  def withRowIndex(df: DataFrame, orderCols: Seq[String]): DataFrame =
+    graft.operators.Rank.globalRank(
+        df.withColumn("_rid", monotonically_increasing_id()),
+        orderCols.map(col), col("_rid"))
+      .withColumn("row_index", col("global_rank").cast("int"))
+      .drop("_rid", "global_rank")
 
   /** home.py:1966-1990 sorting transformation. */
   def sortBy(df: DataFrame, cols: Seq[(String, Boolean)]): DataFrame =

@@ -290,29 +290,6 @@ object Dedup {
     batch.join(hit, batch(idCol) === hit("batch_id"), "left_anti")
   }
 
-  /** MinHash signature of a token-set column: k independent hash
-    * functions (xxhash64 with the slot index as seed), each minimized
-    * over the set. Pure expressions — whole-stage codegen, no UDF,
-    * and ANSI-safe (no overflow arithmetic).
-    */
-  def minhashSignature(tokens: Column, k: Int): Column = {
-    val sigs = (0 until k).map { i =>
-      array_min(transform(tokens, t => xxhash64(lit(i), t)))
-    }
-    array(sigs.toIndexedSeq: _*)
-  }
-
-  /** LSH band keys from a signature: `bands` hashes of `rowsPerBand`
-    * consecutive signature slots each.
-    */
-  def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column = {
-    val keys = (0 until bands).map { bnd =>
-      val sl = slice(sig, bnd * rowsPerBand + 1, rowsPerBand)
-      struct(lit(bnd).as("band"), xxhash64(sl).as("bh"))
-    }
-    array(keys.toIndexedSeq: _*)
-  }
-
   /** Exact Jaccard on two set columns (used for candidate
     * verification).
     */

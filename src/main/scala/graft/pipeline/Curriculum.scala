@@ -56,8 +56,8 @@ object Curriculum {
         .as("difficulty_micro"))
     val hist = scored.filter(col("difficulty_micro").isNotNull)
       .groupBy("difficulty_micro").agg(count(lit(1)).as("_cnt"))
-    // running CDF over the distinct-difficulty frame (bounded by
-    // difficulty cardinality — never corpus-sized)
+    // bounded by difficulty cardinality: a running CDF over the
+    // distinct-difficulty frame, never corpus-sized
     val cum = hist.withColumn("cnt_le",
       sum("_cnt").over(Window.orderBy("difficulty_micro")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))

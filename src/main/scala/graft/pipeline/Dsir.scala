@@ -61,24 +61,12 @@ object Dsir {
       .groupBy(col(idCol), col("bucket")).agg(count(lit(1)).as("cnt"))
   }
 
-  /** Per-bucket importance log-ratio table from the target and raw
-    * corpora: (bucket, lr_micro) with
-    * λ_b = ln((t_b + 1)/(T + B)) − ln((r_b + 1)/(R + B))
-    * (add-one smoothing over the `buckets`-sized feature space, so
-    * buckets unseen in either corpus are defined). Output is bounded
-    * by `buckets` — a dimension, not a corpus: safe to broadcast.
-    * The totals ride as broadcast one-row aggregates (no driver
-    * count action).
-    */
-  def bucketLogRatios(target: DataFrame, raw: DataFrame,
-                      textCol: String, idCol: String,
-                      buckets: Int = 10000): DataFrame =
-    bucketLogRatiosFromFeatures(
-      hashedFeatures(target, textCol, idCol, buckets),
-      hashedFeatures(raw, textCol, idCol, buckets), buckets)
-      .select(col("bucket"), col("lr_micro"))
-
-  // the λ table from PRE-COMPUTED (id, bucket, cnt) feature frames —
+  // Per-bucket importance log-ratio table (bucket, lr_micro) with
+  // λ_b = ln((t_b + 1)/(T + B)) − ln((r_b + 1)/(R + B)) (add-one
+  // smoothing over the `buckets`-sized feature space, so buckets
+  // unseen in either corpus are defined); bounded by `buckets` — a
+  // dimension, not a corpus: safe to broadcast. Built from
+  // PRE-COMPUTED (id, bucket, cnt) feature frames —
   // lets importanceWeights featurize the raw corpus ONCE and reuse
   // the persisted frame for both the model and the scoring pass.
   // Besides the quantized lr_micro, each bucket carries

@@ -168,8 +168,8 @@ object Pipeline {
     * (sampled range boundaries, every partition sorts in parallel) —
     * there is NO single-task window and NO global row-number here,
     * because a position COLUMN would funnel 100 TB through one task;
-    * consumers that need positions take them per-partition after the
-    * sort (e.g. `spark_partition_id` + a partition-local index).
+    * consumers that need positions take them from the distributed
+    * rank ([[graft.operators.Rank.globalRank]]).
     */
   def shuffleKey(keyCol: Column, seed: String): Column =
     md5(concat(lit(seed), lit(":"), keyCol.cast("string")))

@@ -99,11 +99,11 @@ object Drift {
     * portable by construction.
     *
     * Cost shape: one groupBy per side on the VALUE (map-side
-    * combined), one full-outer merge, then a cumulative window over
-    * the DISTINCT values — a single-partition sort bounded by the
-    * column's distinct count, NOT the corpus (fine for discrete/
-    * bounded-cardinality columns, the certification flavor). The
-    * 100 TB path for truly continuous columns is the mergeable-KLL
+    * combined), one full-outer merge, then cum_a/cum_b as running sums
+    * over the DISTINCT values from the range-partitioned primitive
+    * ([[graft.operators.Rank.runningSums]]) — parallel, never one
+    * task, however many distinct values a continuous column has. The
+    * 100 TB path that avoids the exact merge is the mergeable-KLL
     * grid: sketch both sides (D67), evaluate both CDFs on a common
     * quantile grid, take the max gap — within ±2·ε of exact by KLL's
     * published rank error; see `ksOnGrid` in the spec suite.
@@ -113,24 +113,18 @@ object Drift {
       .groupBy(col(c).cast("double").as("v")).agg(count(lit(1)).as("ca"))
     val cb = b.filter(col(c).isNotNull)
       .groupBy(col(c).cast("double").as("v")).agg(count(lit(1)).as("cb"))
-    // persisted: the merged value frame feeds both the totals and the
-    // cumulative pass (the Keywords/Dsir shared-frame rule)
-    val merged = graft.CacheScope.persist(
-      ca.join(cb, Seq("v"), "full_outer")
-        .select(col("v"), coalesce(col("ca"), lit(0L)).as("ca"),
-          coalesce(col("cb"), lit(0L)).as("cb")))
-    val totals = merged.agg(
-      F.sum(col("ca")).as("n_a"), F.sum(col("cb")).as("n_b"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy("v")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
+    val merged = ca.join(cb, Seq("v"), "full_outer")
+      .select(col("v"), coalesce(col("ca"), lit(0L)).as("ca"),
+        coalesce(col("cb"), lit(0L)).as("cb"))
     // DECIMAL(38,0) cross-products: exact at any corpus size (n_a·n_b
     // overflows a long past ~3e9 rows/side — the KMV discipline)
-    merged.crossJoin(broadcast(totals))
+    graft.operators.Rank.runningSums(merged, Nil, Seq(col("v").asc),
+        Seq("cuma" -> col("ca"), "cumb" -> col("cb")))
       .select(
-        F.sum(col("ca")).over(w).cast("decimal(38,0)").as("cuma"),
-        F.sum(col("cb")).over(w).cast("decimal(38,0)").as("cumb"),
-        col("n_a").cast("decimal(38,0)").as("na"),
-        col("n_b").cast("decimal(38,0)").as("nb"))
+        col("cuma").cast("decimal(38,0)").as("cuma"),
+        col("cumb").cast("decimal(38,0)").as("cumb"),
+        col("cuma_total").cast("decimal(38,0)").as("na"),
+        col("cumb_total").cast("decimal(38,0)").as("nb"))
       .select(abs(col("cuma") * col("nb") - col("cumb") * col("na")).as("gap"),
         col("na"), col("nb"))
       .agg(F.max(col("gap")).as("ks_num"),

@@ -386,11 +386,11 @@ object Profiler {
     // r16 note: the unpartitioned window below is a DELIBERATE
     // certification shape (PlanAuditSpec pins the production operator,
     // numericStatsApprox, as sort-free; this gate certifies the
-    // sketch against exact rank bounds). A rankColumn/valuesAtRanks
-    // rewrite was measured SLOWER at gate scale (2.03 s vs 1.77 s at
-    // sf0.1 — ~10 small jobs of orchestration vs one fused sort of a
-    // 600k-value column) and reverted; at 100 TB this gate's exact
-    // certification is not what you run — the approx operator is.
+    // sketch against exact rank bounds). A rewrite on the distributed
+    // sort-based rank was measured SLOWER at gate scale (2.03 s vs
+    // 1.77 s at sf0.1 — ~10 small jobs of orchestration vs one fused
+    // sort of a 600k-value column) and reverted; at 100 TB this gate's
+    // exact certification is not what you run — the approx operator is.
     val perCol = cols.map { c =>
       val v = col(c).cast(DoubleType)
       // unrounded approx values, one GK sketch for all three quantiles
@@ -398,6 +398,7 @@ object Profiler {
         approx_percentile(v, array(qs.map(lit): _*), lit(accuracy)).as("_av"))
       val vals = graft.CacheScope.persist(
         df.select(v.as("v")).filter(col("v").isNotNull)
+          // bounded by the certified column's row count (gate scale only)
           .withColumn("rn", row_number().over(Window.orderBy("v"))))
       val n = vals.agg(count(lit(1)).as("n"))
       val rows = qs.zipWithIndex.map { case (q, i) =>
@@ -877,75 +878,40 @@ object Profiler {
     * a3-proven contract) agree on every outlier verdict. Nothing
     * downstream touches the unrounded interpolated quantile.
     *
-    * Cost shape: THREE full scans regardless of column count (one
-    * array-percentile agg for all quartiles; one MAD agg against the
-    * broadcast one-row stats frame; one counting agg) — the exact
-    * certification flavor, like a14. The 100 TB production path is the
-    * mergeable-KLL profile (D67 `quantileSketches`): sketch once,
-    * derive fences from certified-±ε quantiles, then ONE counting
-    * scan.
+    * Cost shape: a fixed number of jobs whatever the column count —
+    * two exact sort-based quantile passes ([[stackedQuantiles]]: all
+    * columns stacked into one (col_id, v) frame, quartiles first, then
+    * the MADs around the rounded medians), each collecting only the
+    * ≤ 2·|ps| values per column at the target ranks, then ONE counting
+    * scan — the exact certification flavor, like a14. The 100 TB
+    * production path is the mergeable-KLL profile (D67
+    * `quantileSketches`): sketch once, derive fences from certified-±ε
+    * quantiles, then ONE counting scan.
     */
   def outlierProfile(df: DataFrame, cols: Seq[String],
                      iqrK: Double = 1.5, madZ: Double = 3.5): DataFrame = {
-    val spark = df.sparkSession
-    // passes 1+2 (r16): quartiles/medians and MADs via the DISTRIBUTED
-    // sort-based exact quantile ([[sortedQuantiles]]) instead of the
-    // `percentile` aggregate, whose hold-every-distinct-value buffer
-    // merge is single-threaded per column and O(distinct values) in
-    // memory — measured 3.3-3.9 s PER PASS on sf0.1's 600k-distinct
-    // l_extendedprice where the sorted-rank plan pays ~0.5 s, and a
-    // non-starter at 100 TB. Values are bit-identical: the same
-    // (higher-pos)·lower + (pos-lower)·higher interpolation on the
-    // same SQL double total order, rounded by the same Spark Round
-    // (evaluated in a 1-row plan, never re-implemented on the driver).
-    // per-column quantile jobs are independent — run the columns
-    // concurrently (guide §2.6), quartile phase then MAD phase, at
-    // most 8 at once (ADVICE r16): a wide profile must not launch one
-    // concurrent distributed sort per column
-    def litOrNull(o: Option[Double]) =
-      o.map(lit(_)).getOrElse(lit(null).cast(DoubleType))
-    val quartiles = graft.Par.map(cols) { c =>
-      val v = col(c).cast(DoubleType)
-      val (_, qs) = sortedQuantiles(df, v, Seq(0.25, 0.5, 0.75))
-      // ROUNDED stats come from Spark's own Round over the raw
-      // interpolated doubles (1-row local plan, no cluster work)
-      val roundedRow = spark.range(1).select(
-        round(litOrNull(qs(0)), 4).as("q1"),
-        round(litOrNull(qs(1)), 4).as("med"),
-        round(litOrNull(qs(2)), 4).as("q3")).head()
-      def opt(i: Int): Option[Double] =
-        if (roundedRow.isNullAt(i)) None else Some(roundedRow.getDouble(i))
-      (c, opt(0), opt(1), opt(2))
-    }
-    val statsPerCol = graft.Par.map(quartiles) { case (c, q1r, medr, q3r) =>
-      val v = col(c).cast(DoubleType)
-      // MAD from the ROUNDED median, same machinery; a null median
-      // (empty/all-null column) nulls every deviation, like the
-      // percentile-over-null-input it replaces
-      val madInput = medr.map(m => abs(v - lit(m)))
-        .getOrElse(lit(null).cast(DoubleType))
-      val (_, madQ) = sortedQuantiles(df, madInput, Seq(0.5))
-      val madr = {
-        val r = spark.range(1).select(
-          round(litOrNull(madQ(0)), 4)).head()
-        if (r.isNullAt(0)) None else Some(r.getDouble(0))
-      }
-      (c, q1r, medr, q3r, madr)
-    }
+    def v(i: Int) = col(cols(i)).cast(DoubleType)
+    val quart = stackedQuantiles(df, cols.indices.map(v), Seq(0.25, 0.5, 0.75))
+      .map(_.map(_.map(round4)))
+    // MAD from the ROUNDED median; a null median (empty/all-null
+    // column) nulls every deviation, like the percentile-over-null-
+    // input it replaces
+    val mads = stackedQuantiles(df, cols.indices.map { i =>
+      quart(i)(1).map(m => abs(v(i) - lit(m))).getOrElse(lit(null).cast(DoubleType))
+    }, Seq(0.5)).map(_.head.map(round4))
     // pass 3: ONE counting scan for every column against constant
-    // fences (the rounded stats ride as literals — the former
-    // crossJoin(broadcast(stats)) one-row frames are gone); the fence
+    // fences (the rounded stats ride as literals); the fence
     // arithmetic keeps the exact expression shape (q1 − (q3−q1)·k
     // over the 4-dp stats), so every comparison bit matches
-    val cntStructs = statsPerCol.map { case (c, q1o, medo, q3o, mado) =>
-      val v = col(c).cast(DoubleType)
+    val cntStructs = cols.indices.map { i =>
       def l(o: Option[Double]) = o.map(lit(_)).getOrElse(lit(null).cast(DoubleType))
-      val q1 = l(q1o); val q3 = l(q3o); val med = l(medo); val mad = l(mado)
+      val Seq(q1, med, q3) = quart(i).map(l)
+      val mad = l(mads(i))
       val lo = q1 - (q3 - q1) * iqrK
       val hi = q3 + (q3 - q1) * iqrK
       struct(
-        lit(c).as("column"),
-        count(v).as("cnt"),
+        lit(cols(i)).as("column"),
+        count(v(i)).as("cnt"),
         first(q1).as("q1"), first(med).as("median"), first(q3).as("q3"),
         // fences display at FIVE dp: they are exact 5-dp decimals
         // (4-dp quartile ± 1.5×4-dp IQR), so a 4-dp re-round would sit
@@ -955,116 +921,79 @@ object Profiler {
         first(round(lo, 5)).as("lo_fence"),
         first(round(hi, 5)).as("hi_fence"),
         first(mad).as("mad"),
-        count(when(v < lo || v > hi, 1)).as("iqr_outliers"),
-        count(when(abs(v - med) * 0.6745 > mad * madZ, 1))
+        count(when(v(i) < lo || v(i) > hi, 1)).as("iqr_outliers"),
+        count(when(abs(v(i) - med) * 0.6745 > mad * madZ, 1))
           .as("robust_outliers"))
     }
-    df.agg(array(cntStructs.toIndexedSeq: _*).as("_c"))
+    df.agg(array(cntStructs: _*).as("_c"))
       .select(explode(col("_c")).as("c"))
       .select("c.*")
       .orderBy("column")
   }
 
-  /** Exact interpolated quantiles of one double-valued expression by
-    * DISTRIBUTED SORT + rank selection (r16): range-partition the
-    * non-null values, count per partition (a P-row frame), locate the
-    * floor/ceil global ranks of each requested percentage inside their
-    * partitions, pick those rows with a per-partition row_number over
-    * the pinned sorted projection, and interpolate on the driver with
-    * the `percentile` aggregate's exact formula —
-    * `(higher − pos)·lowerKey + (pos − lower)·higherKey`, pos =
-    * p·(N−1). The SQL sort shares `percentile`'s double total order
-    * (NaN greatest, −0.0 < 0.0), so the selected keys — and therefore
-    * every bit of the result — match. What changes is the cost shape:
-    * `percentile` holds every distinct value in ONE aggregation buffer
-    * whose merge is single-threaded and whose memory is O(distinct);
-    * here the widest structures are a shuffle of the column and a
-    * P-row count frame — the shape that survives 100 TB.
+  /** Spark's own ROUND(x, 4), evaluated on the driver: the same
+    * Catalyst expression class a `round(lit(x), 4)` plan constant-folds
+    * through, so the same bits, and no job.
+    */
+  private def round4(x: Double): Double = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Round}
+    Round(Literal(x), Literal(4)).eval().asInstanceOf[Double]
+  }
+
+  /** Exact interpolated quantiles of each double-valued expression in
+    * `values`, by DISTRIBUTED SORT + rank selection: the expressions
+    * are stacked into one (col_id, v) frame of non-null values, ranked
+    * per col_id by the shared range-partitioned primitive
+    * ([[graft.operators.Rank.runningSums]]), and only the rows at the
+    * floor/ceil ranks of each position p·(n−1) are collected; the
+    * driver interpolates with the `percentile` aggregate's exact
+    * formula — `(higher − pos)·lowerKey + (pos − lower)·higherKey`.
+    * The SQL sort shares `percentile`'s double total order (NaN
+    * greatest), so the selected keys — and therefore every bit of the
+    * result — match. What changes is the cost shape: `percentile`
+    * holds every distinct value in ONE aggregation buffer whose merge
+    * is single-threaded and whose memory is O(distinct), per column;
+    * here the widest structures are one shuffle of the stacked values
+    * and a (partitions × columns)-row offsets frame, and the job count
+    * does not grow with the column count.
     *
-    * Returns (non-null count, value per percentage — None when the
-    * input has no non-null rows, where `percentile` yields null).
+    * Returns, per expression, one value per percentage — None when the
+    * expression has no non-null rows (where `percentile` yields null).
     */
-  private def sortedQuantiles(df: DataFrame, value: Column,
-                              ps: Seq[Double]): (Long, Seq[Option[Double]]) = {
-    val rc = rankColumn(df, value)
-    // the pinned column's useful life ends inside this call (ADVICE
-    // r16: with C columns the quartile+MAD phases otherwise leave 2C
-    // full-column frames pinned until the host's CacheScope.clear());
-    // unpersist eagerly, CacheScope stays the safety net
-    if (rc.n == 0) { rc.sorted.unpersist(false); return (0L, ps.map(_ => None)) }
-    val positions = ps.map(p => p * (rc.n - 1))
-    val ranks = positions
-      .flatMap(pos => Seq(math.floor(pos).toLong, math.ceil(pos).toLong))
-      .distinct
-    val at = valuesAtRanks(rc, ranks)
-    rc.sorted.unpersist(false)
-    val vals = positions.map { pos =>
-      val lower = math.floor(pos).toLong
-      val higher = math.ceil(pos).toLong
-      val lk = at(lower)
-      if (higher == lower) Some(lk)
-      else Some((higher - pos) * lk + (pos - lower) * at(higher))
-    }
-    (rc.n, vals)
-  }
-
-  /** A column's non-null values range-partitioned and pinned, with the
-    * per-partition counts that turn a GLOBAL 0-indexed rank into a
-    * (partition, local offset) address — [[sortedQuantiles]]'s
-    * machinery (r16). (An approxQuantileCheck rewrite on top of it was
-    * measured slower at gate scale and reverted — see the comment at
-    * that operator.)
-    */
-  private case class RankedColumn(sorted: DataFrame, n: Long,
-                                  bounds: Seq[(Int, Long, Long)])
-
-  private def rankColumn(df: DataFrame, value: Column): RankedColumn = {
-    val spark = df.sparkSession
-    val nn = df.select(value.cast(DoubleType).as("v"))
-      .filter(col("v").isNotNull)
-    val parts = math.max(spark.sessionState.conf.numShufflePartitions, 1)
-    // no sortWithinPartitions: only the (few) partitions holding a
-    // target rank ever need sorting, and the row_number window in
-    // [[valuesAtRanks]] sorts exactly those
-    val sorted = graft.CacheScope.persist(
-      nn.repartitionByRange(parts, col("v"))
-        .select(spark_partition_id().as("_pid"), col("v")))
-    val cnts = sorted.groupBy("_pid").agg(count(lit(1)).as("_n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    var acc = 0L
-    val bounds = cnts.map { case (pid, cn) =>
-      val lo = acc; acc += cn; (pid, lo, acc)
-    }.toSeq
-    RankedColumn(sorted, acc, bounds)
-  }
-
-  /** Values at the given GLOBAL 0-indexed ranks of the sorted column:
-    * locate each rank's partition from the count frame, sort only the
-    * partitions holding a target (a bounded per-partition window),
-    * and collect the ≤|ranks| hits.
-    */
-  private def valuesAtRanks(rc: RankedColumn,
-                            ranks: Seq[Long]): Map[Long, Double] = {
-    if (ranks.isEmpty) return Map.empty
-    val located: Map[Long, (Int, Long)] = ranks.distinct.map { r =>
-      val (pid, lo, _) = rc.bounds.find(b => r >= b._2 && r < b._3).getOrElse(
-        throw new IllegalStateException(s"rank $r outside 0..${rc.n - 1}"))
-      r -> (pid, r - lo)
-    }.toMap
-    val wanted = located.values.toSeq.distinct
-    val pred = wanted.map { case (pid, off) =>
-      col("_pid") === pid && col("_rn") === off
+  private def stackedQuantiles(df: DataFrame, values: Seq[Column],
+                               ps: Seq[Double]): IndexedSeq[Seq[Option[Double]]] = {
+    if (values.isEmpty) return IndexedSeq.empty
+    val stacked = df.select(explode(array(values.zipWithIndex.map { case (e, i) =>
+        struct(lit(i).as("col_id"), e.cast(DoubleType).as("v"))
+      }: _*)).as("_s"))
+      .select("_s.*").filter(col("v").isNotNull)
+    val ranked = graft.operators.Rank.runningSums(stacked, Seq("col_id"),
+      Seq(col("v").asc), Seq("_n" -> lit(1L)))
+    // the floor/ceil ranks of p·(n−1): the same double product the
+    // driver interpolates with below
+    val rank = col("_n") - 1
+    val wanted = ps.flatMap { p =>
+      val pos = lit(p) * (col("_n_total") - 1)
+      Seq(rank === floor(pos), rank === ceil(pos))
     }.reduce(_ || _)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("_pid").orderBy("v")
-    val picked = rc.sorted
-      .filter(col("_pid").isin(wanted.map(_._1).distinct: _*))
-      .withColumn("_rn", (row_number().over(w) - 1).cast("long"))
-      .filter(pred)
-      .select("_pid", "_rn", "v")
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    located.map { case (r, addr) => r -> picked(addr) }
+    val hits = ranked.filter(wanted)
+      .select(col("col_id"), rank, col("v"), col("_n_total"))
+      .collect().groupBy(_.getInt(0))
+    values.indices.map { i =>
+      hits.get(i) match {
+        case None => ps.map(_ => None)
+        case Some(rows) =>
+          val n = rows.head.getLong(3)
+          val at = rows.map(r => r.getLong(1) -> r.getDouble(2)).toMap
+          ps.map { p =>
+            val pos = p * (n - 1)
+            val lower = math.floor(pos).toLong
+            val higher = math.ceil(pos).toLong
+            if (higher == lower) Some(at(lower))
+            else Some((higher - pos) * at(lower) + (pos - lower) * at(higher))
+          }
+      }
+    }
   }
 
   /** Functional-dependency violation profile (SURVEY §2 A18): for

@@ -144,17 +144,15 @@ object Sources {
     * in `outDir`; maintenance jobs compact yesterday's partition
     * without touching the other 10 years.
     *
-    * Shape for 100 TB, the D96 two-pass discipline grouped by
-    * partition key: (optionally) range-partition on (partitionCols ++
-    * sortCols), PIN the partitioning (localCheckpoint — the sampled
-    * boundaries and per-task row orders must be identical in both
-    * passes), count rows per (spark partition, hive partition) — a
-    * metadata-sized frame — then per-hive-partition dense rank =
-    * cumulative offset + local row_number, slot = rank div
-    * targetRows. Every hive partition spreads over ceil(n_p/target)
-    * TASKS (never one task per hive partition — a 500 GB date
-    * partition stays parallel), and `maxRecordsPerFile = targetRows`
-    * keeps the per-directory file count ceil-EXACT even when hash
+    * Shape for 100 TB: per-hive-partition dense rank = the D96
+    * running row count ([[graft.operators.Rank.runningSums]] grouped
+    * by partition key — (optionally) range-partition on
+    * (partitionCols ++ sortCols), pin, count per (spark partition,
+    * hive partition), a metadata-sized frame, then offset + local
+    * count), slot = rank div targetRows. Every hive partition spreads
+    * over ceil(n_p/target) TASKS (never one task per hive partition — a
+    * 500 GB date partition stays parallel), and `maxRecordsPerFile =
+    * targetRows` keeps the per-directory file count ceil-EXACT even when hash
     * placement co-locates two slots of one partition in a task (the
     * dense ranks guarantee exactly one sub-target remainder chunk
     * per partition, so Σceil over task chunks = ceil over the
@@ -176,44 +174,11 @@ object Sources {
     val raw = spark.read.parquet(inDir)
     val pruned =
       if (partitionFilter != null) raw.filter(partitionFilter) else raw
-    val shaped =
-      if (sortCols.nonEmpty)
-        pruned.repartitionByRange(
-          (partitionCols ++ sortCols).map(col): _*)
-      else pruned
-    // freeze boundaries + per-task row order across the two passes
-    // (the D96/globalRank pin: recompute must not re-sample)
-    val pinned = graft.CacheScope.track(
-      shaped.withColumn("_pid", spark_partition_id()).localCheckpoint(true))
     val key = partitionCols.map(col)
-    val counts = pinned.groupBy((col("_pid") +: key): _*)
-      .agg(count(lit(1)).as("_n"))
-    // offsets: window over the metadata-sized counts frame, per hive
-    // partition in pid order (= range order when sortCols given)
-    val offsets = counts.withColumn("_off",
-        coalesce(sum(col("_n")).over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(key: _*).orderBy(col("_pid"))
-            .rowsBetween(Long.MinValue, -1)), lit(0L)))
-      .select((col("_pid").as("_opid") +:
-        partitionCols.map(c => col(c).as(s"_o_$c"))) :+ col("_off"): _*)
-    val localOrder =
-      if (sortCols.nonEmpty) sortCols.map(col(_).asc)
-      // no sort contract: any stable per-task order works for slot
-      // counting; monotonically_increasing_id is frozen by the pin
-      else Seq(monotonically_increasing_id().asc)
-    val local = org.apache.spark.sql.expressions.Window
-      .partitionBy((col("_pid") +: key): _*).orderBy(localOrder: _*)
-    // null-safe join keys: a null partition value is a legal hive
-    // partition (__HIVE_DEFAULT_PARTITION__); === would drop its rows
-    val joinCond = (col("_pid") === col("_opid")) +:
-      partitionCols.map(c => col(c) <=> col(s"_o_$c"))
-    pinned
-      .withColumn("_lr", row_number().over(local).cast("long") - 1)
-      .join(broadcast(offsets), joinCond.reduce(_ && _))
-      .withColumn("_slot", expr(s"(_off + _lr) div ${targetRows}L"))
-      .drop(("_pid" +: "_lr" +: "_off" +: "_opid" +:
-        partitionCols.map(c => s"_o_$c")): _*)
+    graft.operators.Rank.runningSums(pruned, partitionCols,
+        sortCols.map(col(_).asc), Seq("_n" -> lit(1L)))
+      .withColumn("_slot", expr(s"(_n - 1) div ${targetRows}L"))
+      .drop("_n", "_n_total")
       .repartition((key :+ col("_slot")): _*)
       .sortWithinPartitions(
         (partitionCols ++ Seq("_slot") ++ sortCols).map(col): _*)

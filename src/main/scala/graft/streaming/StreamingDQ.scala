@@ -551,19 +551,24 @@ object StreamingDQ {
         graft.operators.Rank.globalRank(batch, sortCols, idCol)
           .withColumn("global_rank", col("global_rank") + offset)
           .withColumn("shard", expr(s"global_rank div ${rowsPerShard}L")))
-      ranked
-        .repartition(col("shard"))
-        .sortWithinPartitions(col("shard"), col("global_rank"))
-        .write.mode("append").partitionBy("shard").json(outDir)
-      // touched-shard increments: one row per shard in THIS batch
-      val inc = ranked
-        .withColumn("_h", graft.dedup.Dedup.portableTokenHash60(
-          concat_ws("|", idCol, coalesce(contentCol, lit("")))))
-        .groupBy(col("shard"))
-        .agg(count(lit(1)).as("rows"),
-          min(idCol).cast("long").as("mn"), max(idCol).cast("long").as("mx"),
-          expr("bit_xor(_h)").as("xr"))
-        .collect()
+      // the pin ends with the batch: the cached ranked frame (and the
+      // offsets broadcast its plan holds) must not pile up one per
+      // micro-batch until the host's CacheScope.clear
+      val inc = try {
+        ranked
+          .repartition(col("shard"))
+          .sortWithinPartitions(col("shard"), col("global_rank"))
+          .write.mode("append").partitionBy("shard").json(outDir)
+        // touched-shard increments: one row per shard in THIS batch
+        ranked
+          .withColumn("_h", graft.dedup.Dedup.portableTokenHash60(
+            concat_ws("|", idCol, coalesce(contentCol, lit("")))))
+          .groupBy(col("shard"))
+          .agg(count(lit(1)).as("rows"),
+            min(idCol).cast("long").as("mn"), max(idCol).cast("long").as("mx"),
+            expr("bit_xor(_h)").as("xr"))
+          .collect()
+      } finally ranked.unpersist(false)
       inc.foreach { r =>
         val (sh, n, mn, mx, xr) = (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4))

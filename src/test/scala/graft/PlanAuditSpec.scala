@@ -349,4 +349,60 @@ class PlanAuditSpec extends SparkSpec {
     val scanNodes = "\\(\\d+\\) Scan parquet".r.findAllIn(plan("q_a19_infer_types")).size
     assert(scanNodes == 1, s"expected 1 scan, saw $scanNodes")
   }
+  /** Rows each SinglePartition exchange wrote, over every plan `body`
+    * executes — eager pins included (a QueryExecutionListener sees
+    * them all; a sentinel action marks the end of `body`'s events).
+    */
+  private def singlePartitionRows(body: => Unit): Seq[Long] = {
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val sentinel = spark.range(1)
+      sentinel.collect()
+      eventually(timeout(30.seconds), interval(50.millis)) {
+        assert(seen.asScala.exists(_ eq sentinel.queryExecution))
+      }
+    } finally spark.listenerManager.unregister(listener)
+    val helper = new AdaptiveSparkPlanHelper {}
+    seen.asScala.toSeq.flatMap { qe =>
+      helper.collectWithSubqueries(qe.executedPlan) {
+        case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition =>
+          e.metrics("shuffleRecordsWritten").value
+      }
+    }
+  }
+
+  test("KS drift CDF never funnels its distinct-value frame through one partition") {
+    val a = spark.range(3000).selectExpr("CAST(id AS DOUBLE) AS v")
+    val b = spark.range(1500, 4500).selectExpr("CAST(id AS DOUBLE) AS v")
+    val rows = singlePartitionRows {
+      val r = graft.profile.Drift.ksStatistic(a, b, "v").collect()(0)
+      assert(r.getAs[Long]("n_a") == 3000 && r.getAs[Double]("ks") == 0.5)
+    }
+    // only bounded frames may meet in one task: partial aggregates and
+    // the partitions-sized offsets frame, never the 4500 values
+    assert(rows.forall(_ <= 64), s"single-partition exchanges wrote $rows rows")
+  }
+
+  test("row index never funnels its rows through one partition") {
+    val df = spark.range(3000).selectExpr("id", "CAST(id * 7 % 3000 AS STRING) AS s")
+    val rows = singlePartitionRows {
+      assert(graft.corrector.Corrector.withRowIndex(df, Seq("s"))
+        .agg(org.apache.spark.sql.functions.max("row_index")).head().getInt(0) == 2999)
+    }
+    assert(rows.forall(_ <= 64), s"single-partition exchanges wrote $rows rows")
+  }
 }

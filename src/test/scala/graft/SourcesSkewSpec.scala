@@ -232,17 +232,36 @@ class SourcesSkewSpec extends SparkSpec {
     assert(idx == Map("a" -> 0, "b" -> 1, "c" -> 2))
   }
 
-  test("withRowIndex refuses loud past maxRows instead of single-partition sorting") {
-    // r12 verdict #5: the global row_number window is a silent
-    // scale-killer without a guard — the probe is a bounded
-    // limit+count, and the refusal names the keyed alternative
-    val big = spark.range(100).toDF("k").withColumn("s", col("k").cast("string"))
-    val ex = intercept[IllegalStateException] {
-      Corrector.withRowIndex(big, Seq("s"), maxRows = 50L)
+  test("withRowIndex over 9 range partitions with ties equals a global row_number") {
+    // the index is a distributed rank (no single-task window, no row
+    // cap): spread 600 rows with heavy ties in (g, s) over 9 range
+    // partitions and compare against one unpartitioned row_number
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.shuffle.partitions", "9")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try {
+      val df = spark.range(600).toDF("k")
+        .withColumn("g", (col("k") * 7919 % 5).cast("int"))
+        .withColumn("s", (col("k") * 31 % 11).cast("string"))
+      val got = Corrector.withRowIndex(df, Seq("g", "s")).collect()
+      val idx = got.map(_.getAs[Int]("row_index"))
+      assert(idx.sorted.toSeq == (0 until 600))
+      assert(got.map(_.getAs[Long]("k")).toSet.size == 600)
+      // tied rows may take either tied slot; the key at every index
+      // must be the reference's
+      val want = df.withColumn("rn", row_number().over(
+          org.apache.spark.sql.expressions.Window.orderBy("g", "s")) - 1)
+        .collect().map(r => r.getAs[Int]("rn") -> (r.getAs[Int]("g"), r.getAs[String]("s")))
+        .sortBy(_._1).toSeq
+      val have = got.map(r => r.getAs[Int]("row_index") -> (r.getAs[Int]("g"), r.getAs[String]("s")))
+        .sortBy(_._1).toSeq
+      assert(have == want)
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
-    assert(ex.getMessage.contains("single-partition"))
-    // under the bound the semantics are unchanged
-    assert(Corrector.withRowIndex(big, Seq("s"), maxRows = 100L).count() == 100)
   }
 
   test("approx numeric stats agree with exact on a small column") {
