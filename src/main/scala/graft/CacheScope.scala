@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Registry for DataFrames persisted inside lazily-returned plans.
   *
@@ -46,11 +47,21 @@ object CacheScope {
     df
   }
 
-  /** Unpersist (non-blocking) every tracked frame and drop the refs. */
+  /** Unpersist (non-blocking) every tracked frame and drop the refs.
+    * A checkpointed frame (e.g. [[graft.operators.Rank]]'s
+    * `localCheckpoint` pin) keeps its blocks in the RDD under its
+    * plan, not in the cache manager, so that RDD is unpersisted too;
+    * frames built on the pin cannot be read after this.
+    */
   def clear(): Unit = synchronized {
     tracked.foreach { df =>
-      try df.unpersist(false)
-      catch { case _: Exception => () } // session may already be stopped
+      try {
+        df.unpersist(false)
+        df.queryExecution.logical match {
+          case r: LogicalRDD if r.rdd.isCheckpointed => r.rdd.unpersist(false)
+          case _ => ()
+        }
+      } catch { case _: Exception => () } // session may already be stopped
     }
     tracked.clear()
   }

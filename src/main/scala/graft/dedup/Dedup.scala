@@ -1,6 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines: exact,
@@ -12,8 +13,9 @@ import org.apache.spark.sql.functions._
   *  - MinHash signatures are pure array expressions (codegen) and
   *    candidate generation is a self-join keyed on (band, bandHash),
   *    i.e. a shuffle on the band key, linear + output-sized;
-  *  - the Jaccard join is an inverted-index join keyed on token with
-  *    a document-frequency cap to kill stop-token skew;
+  *  - the exact Jaccard joins are inverted-index joins keyed on the
+  *    tokens of each set's df-ordered prefix, with a
+  *    document-frequency cap to kill stop-token skew;
   *  - verification always recomputes the exact measure on candidate
   *    pairs only.
   */
@@ -38,19 +40,6 @@ object Dedup {
     val toks = tokens.distinct().limit(65).collect()
       .map(_.getString(0)).filter(_ != null).sorted
     if (toks.length <= 64) Some(toks) else None
-  }
-
-  /** Dense 0..63 token→bit dict from a proven-tiny vocabulary. Bit
-    * ASSIGNMENT order is irrelevant to the popcount jaccard — the
-    * dict just has to be one consistent dense injection into
-    * [0, 64), used for both join sides within the call.
-    */
-  private def tinyVocabDict(spark: org.apache.spark.sql.SparkSession,
-                            toks: Array[String]): DataFrame = {
-    import spark.implicits._
-    require(toks.length <= 64,
-      s"tinyVocabDict called with ${toks.length} tokens — branch guard broken")
-    broadcast(toks.zipWithIndex.toSeq.toDF("tok", "tid"))
   }
 
   /** Distinct word n-gram shingles — the canonical MinHash granule
@@ -134,20 +123,20 @@ object Dedup {
   /** NEAR-dup matches of a new ingest batch against an existing
     * corpus: exact token-set Jaccard ≥ threshold, computed through a
     * BIPARTITE inverted index — batch tokens join store tokens on the
-    * token, pair-count = |intersection|, Jaccard from the two set
-    * sizes. Exact (index-based, not probabilistic LSH), and linear in
-    * tokens + candidate pairs: a batch×store cross product never
-    * forms — only doc pairs sharing ≥ 1 surviving token meet.
-    * `dfCap` (absolute) and `relDfCap` (fraction of the STORE,
-    * resolved in-plan — no driver-side count) drop tokens present in
-    * more than that many STORE documents from candidate generation
-    * (stop-token skew guard, same contract as [[jaccardJoin]]):
-    * scores stay exact because surviving pairs are re-scored on full
-    * sets; recall requires sharing one sub-cap token. The DEFAULT is
-    * capped (`relDfCap = 0.5`) — an uncapped bipartite index lets a
-    * store-side stop-token join every batch doc to every store doc
-    * that contains it. Pass `relDfCap = Double.NaN` (and leave
-    * `dfCap` at its default) for exact recall.
+    * token, and every distinct candidate pair is re-scored on its two
+    * full sets. Exact, and linear in tokens + candidate pairs: a
+    * batch×store cross product never forms. Candidates come from the
+    * [[jaccardJoin]] prefix filter with df counted on the STORE (a
+    * batch-only token has df 0); its proof carries over, so the output
+    * equals the all-tokens result under the same cap. `dfCap`
+    * (absolute) and `relDfCap` (fraction of the STORE, resolved
+    * in-plan) drop tokens present in more than that many STORE
+    * documents from candidate generation (same contract as
+    * [[jaccardJoin]]); recall then requires sharing one sub-cap token.
+    * The DEFAULT is capped (`relDfCap = 0.5`) — an uncapped bipartite
+    * index lets a store-side stop-token join every batch doc to every
+    * store doc that contains it. Pass `relDfCap = Double.NaN` (and
+    * leave `dfCap` at its default) for exact recall.
     *
     * CONTRACT NOTE — dfCap and the tiny-vocabulary plan: when the
     * probe selects the ≤64-word bitmap plan, `dfCap` is IGNORED. That
@@ -156,8 +145,8 @@ object Dedup {
     * every shared token is over-cap), never lose or mis-score any —
     * the cap is a candidate-generation knob, not a semantic filter.
     * Callers that need cap-pruned semantics regardless of vocabulary
-    * size should pass `allPairsMaxDocs = 0` to pin the
-    * inverted-index plan.
+    * size should pass `allPairsMaxDocs = 0` to pin the inverted-index
+    * plan.
     */
   def nearDupMatches(batch: DataFrame, store: DataFrame, textCol: String,
                      idCol: String, threshold: Double,
@@ -167,7 +156,7 @@ object Dedup {
                      candidateBudget: Long =
                        graft.similarity.CandidateGuard.DefaultBudget,
                      guardStrict: Boolean = false): DataFrame = {
-    // tokenized sides are re-read by the probe, the dict, and the
+    // tokenized sides are re-read by the probe, the df table and the
     // scoring plan — pin them for the call (CacheScope-tracked, the
     // host clears between units of work) instead of re-tokenizing the
     // corpus on every branch
@@ -175,99 +164,52 @@ object Dedup {
       batch.select(col(idCol).as("batch_id"), wordSet(col(textCol)).as("ws_b")))
     val sd = graft.CacheScope.persist(
       store.select(col(idCol).as("store_id"), wordSet(col(textCol)).as("ws_s")))
-    // ≤64-word vocabularies defeat an inverted index the same way
-    // they defeat jaccardJoin's: every token is in a large fraction
-    // of BOTH sides, so the token join degenerates toward
-    // |batch|×|store|×|vocab| rows. Probe (ONE bounded job, same
-    // contract as jaccardJoin's) and switch to int64-bitmap
-    // popcounts: encode each side once, broadcast the store bitmaps
-    // (8 B/doc), and evaluate |batch|×|store| popcount pairs in one
-    // shuffle-free nested-loop stage — recall-complete, cap ignored.
-    val allDocs = bd.select(struct(lit("b"), col("batch_id")).as("sid"), col("ws_b").as("ws"))
-      .union(sd.select(struct(lit("s"), col("store_id")), col("ws_s")))
-    // two bounded probe jobs, cheapest first: the doc count never
-    // explodes tokens (limit ends the scan at cap+1 rows), and the
-    // vocab witness only runs once the prefix is PROVEN to be the
-    // whole corpus (≤ cap docs); tinyVocab's 65-cutoff collect is
-    // BOTH the witness and the dict source — one scan (r12 review:
-    // the first split ran the distinct aggregation twice)
-    val nd = allDocs
-      .limit(math.min(allPairsMaxDocs + 1, Int.MaxValue.toLong).toInt).count()
-    val tv =
-      if (nd <= allPairsMaxDocs)
-        tinyVocab(allDocs.select(explode(col("ws")).as("tok")))
-      else None
-    if (tv.isDefined) {
-      val dict = tinyVocabDict(batch.sparkSession, tv.get)
-      def asBits(side: DataFrame, idName: String, wsName: String, out: String) =
-        side.select(col(idName), explode(col(wsName)).as("tok"))
-          .join(dict, "tok").groupBy(idName)
-          .agg(expr("bit_or(shiftleft(1L, tid))").as(out))
-      val inter = bit_count(col("bits_b").bitwiseAND(col("bits_s"))).cast("double")
-      return asBits(bd, "batch_id", "ws_b", "bits_b")
-        .crossJoin(broadcast(asBits(sd, "store_id", "ws_s", "bits_s")))
-        .select(col("batch_id"), col("store_id"),
-          round(inter / (bit_count(col("bits_b")) + bit_count(col("bits_s")) - inter), 4)
-            .as("jaccard"))
-        .filter(col("jaccard") >= threshold)
-    }
     val bi = bd.select(col("batch_id"), size(col("ws_b")).as("sz_b"),
       explode(col("ws_b")).as("tok"))
-    val si0 = sd.select(col("store_id"), size(col("ws_s")).as("sz_s"),
+    val si = sd.select(col("store_id"), size(col("ws_s")).as("sz_s"),
       explode(col("ws_s")).as("tok"))
-    val uncapped = dfCap == Long.MaxValue && relDfCap.isNaN
-    val si =
-      if (uncapped) si0
-      else {
-        // relative cap resolves the store size with a broadcast-scalar
-        // cross join INSIDE the plan; the guard's bounded single-row
-        // volume probe is the only driver action on this path.
-        // Persisted (one row per distinct store token, batch df rides
-        // along for the volume guard): probed once, filtered once.
-        val sbase = si0.groupBy("tok").agg(count(lit(1)).as("df_"))
-        val grouped = graft.CacheScope.persist(
-          (if (relDfCap.isNaN) sbase
-           else sbase.crossJoin(broadcast(sd.agg(count(lit(1)).as("_n")))))
-            .join(bi.groupBy("tok").agg(count(lit(1)).as("bdf_")), Seq("tok"), "left")
-            .withColumn("bdf_", coalesce(col("bdf_"), lit(0L))))
-        val effCap =
-          if (relDfCap.isNaN) lit(dfCap)
-          else least(lit(dfCap), floor(lit(relDfCap) * col("_n")))
-        // volume guard (SCALE_SWEEP Finding 1), bipartite flavor: a
-        // surviving token contributes batchDf·storeDf candidate rows
-        val capCol = graft.similarity.CandidateGuard
-          .resolve(grouped, col("df_"), effCap, candidateBudget,
-            "Dedup.nearDupMatches", volume = Some(col("bdf_") * col("df_")),
-            strict = guardStrict)
-          .map(c => least(effCap, lit(c))).getOrElse(effCap)
-        si0.join(grouped.filter(col("df_") <= capCol).select("tok"), "tok")
-      }
-    val scored =
-      if (uncapped)
-        // uncapped: the inverted-index pair count IS the exact
-        // intersection — no re-score pass; size-impossible pairs drop
-        // before the groupBy (r17; see [[sizeBoundKeeps]])
-        bi.join(si, "tok")
-          .filter(sizeBoundKeeps(col("sz_b"), col("sz_s"), threshold))
-          .groupBy("batch_id", "store_id", "sz_b", "sz_s")
-          .agg(count(lit(1)).as("inter"))
-          .select(col("batch_id"), col("store_id"),
-            round(col("inter") / (col("sz_b") + col("sz_s") - col("inter")), 4)
-              .as("jaccard"))
-      else {
-        // capped: candidates from surviving tokens, exact re-score on
-        // the full sets so the cap can never mis-score a pair; the
-        // size-bound prefilter kills size-impossible pairs before the
-        // distinct (r17; see [[sizeBoundKeeps]])
-        val cands = bi.select(col("tok"), col("batch_id"), col("sz_b"))
-          .join(si.select(col("tok"), col("store_id"), col("sz_s")), "tok")
-          .filter(sizeBoundKeeps(col("sz_b"), col("sz_s"), threshold))
-          .select("batch_id", "store_id").distinct()
-        cands.join(bd, "batch_id").join(sd, "store_id")
-          .select(col("batch_id"), col("store_id"),
-            round(jaccard(col("ws_b"), col("ws_s")), 4).as("jaccard"))
-      }
-    scored.filter(col("jaccard") >= threshold)
+    // ≤64-word vocabularies defeat an inverted index the same way
+    // they defeat jaccardJoin's, and take the bitmap plan: the store
+    // bitmaps (8 B/doc) broadcast, |batch|×|store| pairs scored in one
+    // shuffle-free stage. Same two bounded probe jobs as jaccardJoin's,
+    // over both sides.
+    val tv =
+      if (bd.select("ws_b").union(sd.select("ws_s"))
+          .limit(math.min(allPairsMaxDocs + 1, Int.MaxValue.toLong).toInt)
+          .count() <= allPairsMaxDocs) tinyVocab(bi.select("tok").union(si.select("tok")))
+      else None
+    if (tv.isDefined)
+      return bitmapJaccard(bi.select("batch_id", "tok"), si.select("store_id", "tok"),
+          tv.get)((b, s) => b.crossJoin(broadcast(s)))
+        .toDF("batch_id", "store_id", "jaccard")
+        .filter(col("jaccard") >= threshold)
+    // (tok, df_, bdf_, _n), one row per STORE token: df_ counts store
+    // docs, bdf_ batch docs (the guard's volume term), _n the store.
+    // Persisted: the guard probes it, both prefix sides join it.
+    val dfTbl = graft.CacheScope.persist(
+      si.select(col("tok"), lit(1L).as("s"), lit(0L).as("b"))
+        .union(bi.select(col("tok"), lit(0L), lit(1L)))
+        .groupBy("tok").agg(sum("s").as("df_"), sum("b").as("bdf_"))
+        .filter(col("df_") > 0)
+        .crossJoin(broadcast(sd.agg(count(lit(1)).as("_n")))))
+    // bipartite volume: a surviving token contributes batchDf·storeDf
+    // candidate rows
+    val capOk = capFilter(dfTbl, dfCap, relDfCap, candidateBudget,
+      "Dedup.nearDupMatches", Some(col("bdf_") * col("df_")), guardStrict)
+    // over-cap tokens leave the store side only: no batch token can
+    // meet them there
+    val bpre = inPrefix(bi.join(dfTbl.select("tok", "df_"), Seq("tok"), "left")
+        .withColumn("df_", coalesce(col("df_"), lit(0L))), "batch_id", "sz_b", threshold)
+      .select("tok", "batch_id", "sz_b")
+    val spre = inPrefix(si.join(dfTbl, "tok"), "store_id", "sz_s", threshold)
+      .filter(capOk).select("tok", "store_id", "sz_s")
+    bpre.join(spre, "tok")
+      .filter(sizeBoundKeeps(col("sz_b"), col("sz_s"), threshold))
+      .select("batch_id", "store_id").distinct()
+      .join(bd, "batch_id").join(sd, "store_id")
+      .select(col("batch_id"), col("store_id"),
+        round(jaccard(col("ws_b"), col("ws_s")), 4).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
   }
 
   /** Drop batch rows with a near-duplicate already in the store —
@@ -298,6 +240,15 @@ object Dedup {
     inter / (size(a) + size(b) - inter)
   }
 
+  /** The filters' threshold, integer-scaled: floor(t′·10⁶) with
+    * t′ = max(t − 1e-4, 0). The downstream filter is
+    * `round(j, 4) >= t`, which half-up rounding lets a pair with true
+    * J ≥ t − 5e-5 pass — the 1e-4 margin covers that slack plus float
+    * noise, and flooring only loosens the filters further.
+    */
+  private def scaledCut(threshold: Double): Long =
+    math.floor(math.max(threshold - 1e-4, 0.0) * 1e6).toLong
+
   /** Sound size-bound candidate prefilter (r17, guide §1.2/§2.3 —
     * don't compute what you throw away / shuffle fewer bytes):
     * |A∩B| ≤ min(|A|,|B|) and |A∪B| ≥ max(|A|,|B|), so
@@ -306,17 +257,76 @@ object Dedup {
     * the candidate distinct / set-attach joins removes ~2/3 of the
     * candidate volume on near-dup-heavy corpora (measured at sf0.1:
     * 2.92 M → 0.98 M c33 candidates at t=0.9) without touching the
-    * output. The cutoff is threshold MINUS 1e-4: the downstream
-    * filter is `round(j, 4) >= t`, which half-up rounding lets a pair
-    * with true J ≥ t − 5e-5 pass — the 1e-4 margin covers that slack
-    * plus float noise, and the comparison itself is exact integer
-    * arithmetic (sizes are ints; sz·10^6 stays far below 2^63).
+    * output. The comparison is exact integer arithmetic against
+    * [[scaledCut]] (sizes are ints; sz·10^6 stays far below 2^63).
     */
   private def sizeBoundKeeps(szA: Column, szB: Column,
-                             threshold: Double): Column = {
-    val cut = math.floor(math.max(threshold - 1e-4, 0.0) * 1e6).toLong
+                             threshold: Double): Column =
     least(szA, szB).cast("long") * lit(1000000L) >=
-      lit(cut) * greatest(szA, szB).cast("long")
+      lit(scaledCut(threshold)) * greatest(szA, szB).cast("long")
+
+  /** The rows of `inv` — one per (set `id`, token `tok`), with the set
+    * size `sz` and the token's `df_` — that lie in their set's prefix:
+    * the first |x| − ⌈t′·|x|⌉ + 1 tokens under the global order
+    * (df_, tok), t′ = [[scaledCut]]/10⁶ (see [[jaccardJoin]] for why
+    * no qualifying pair is lost). At 1-based position p,
+    * ⌈c·|x|/10⁶⌉ ≤ |x| + 1 − p ⟺ c·|x| ≤ (|x| + 1 − p)·10⁶ — the
+    * [[sizeBoundKeeps]] integer arithmetic.
+    */
+  private def inPrefix(inv: DataFrame, id: String, sz: String,
+                       threshold: Double): DataFrame = {
+    val n = col(sz).cast("long")
+    inv.withColumn("_pos", row_number().over(
+        Window.partitionBy(id).orderBy(col("df_"), col("tok"))))
+      .filter(lit(scaledCut(threshold)) * n <= (n + 1 - col("_pos")) * lit(1000000L))
+      .drop("_pos")
+  }
+
+  /** The inverted-index plans' cap test: `df_ ≤` min(`dfCap`,
+    * `relDfCap`·`_n`), tightened by [[graft.similarity.CandidateGuard]]
+    * when the candidate volume over the tokens under the cap — Σ df_²,
+    * or Σ `volume` — blows `budget`; the guard probes `dfTbl`, one row
+    * per token carrying `df_` and `_n`. Uncapped calls (both caps at
+    * their no-op values) get `true` and run no probe.
+    */
+  private def capFilter(dfTbl: DataFrame, dfCap: Long, relDfCap: Double,
+                        budget: Long, opName: String, volume: Option[Column],
+                        strict: Boolean): Column =
+    if (dfCap == Long.MaxValue && relDfCap.isNaN) lit(true)
+    else {
+      val effCap =
+        if (relDfCap.isNaN) lit(dfCap)
+        else least(lit(dfCap), floor(lit(relDfCap) * col("_n")))
+      col("df_") <= graft.similarity.CandidateGuard
+        .resolve(dfTbl, col("df_"), effCap, budget, opName, volume, strict)
+        .map(c => least(effCap, lit(c))).getOrElse(effCap)
+    }
+
+  /** The ≤64-word bitmap plan of [[jaccardJoin]], [[nearDupMatches]]
+    * and [[minhashPairs]]: the sets of `a` and `b`, exploded
+    * `(id, tok)` rows, each become ONE int64 — bit tid for each token,
+    * tids from a literal map of the proven-tiny vocabulary `toks` —
+    * and `pair` joins the encoded sides `(id_a, bits_a)` and
+    * `(id_b, bits_b)`. Every pair it keeps is scored as `jaccard` =
+    * round(J, 4) from two popcounts; recall-complete, caps ignored.
+    * The encodings are persisted (8 B/set) and hold no join: a cached
+    * plan would pin a broadcast dict's hashed relation until
+    * [[graft.CacheScope.clear]].
+    */
+  private def bitmapJaccard(a: DataFrame, b: DataFrame, toks: Array[String])(
+      pair: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    require(toks.length <= 64, s"bitmap plan needs <= 64 tokens, got ${toks.length}")
+    val tid = typedLit(toks.zipWithIndex.toMap)
+    def bits(side: DataFrame) = graft.CacheScope.persist(side.toDF("id", "tok")
+      .select(col("id"), tid(col("tok")).as("tid"))
+      .groupBy("id").agg(expr("bit_or(shiftleft(1L, tid))").as("bits")))
+    val ea = bits(a)
+    val eb = if (b eq a) ea else bits(b)
+    val inter = bit_count(col("bits_a").bitwiseAND(col("bits_b"))).cast("double")
+    pair(ea.toDF("id_a", "bits_a"), eb.toDF("id_b", "bits_b"))
+      .select(col("id_a"), col("id_b"),
+        round(inter / (bit_count(col("bits_a")) + bit_count(col("bits_b")) - inter), 4)
+          .as("jaccard"))
   }
 
   /** MinHash+LSH near-duplicate pairs with exact verification:
@@ -379,8 +389,9 @@ object Dedup {
     // the corpus vocabulary fits in 64 slots (categorical/code-like
     // corpora), each word-set compresses to ONE int64 bitmap: the
     // verify side ships 8 bytes per doc (broadcast to a map-side
-    // join) and Jaccard evaluates as two popcounts. General path
-    // falls back to the word-set arrays.
+    // join) and Jaccard evaluates as two popcounts
+    // ([[bitmapJaccard]]). General path falls back to the word-set
+    // arrays.
     //
     // Plan choice runs bounded probe jobs, not full-corpus counts
     // (the r2 gates ran a full token-distinct shuffle plus a second
@@ -407,45 +418,32 @@ object Dedup {
       else if (exploded.select("tok").limit(100000).distinct().count() <= 64)
         tinyVocab(exploded.select("tok"))
       else None
-    val verified =
-      if (tv.isDefined) {
-        val dict = tinyVocabDict(df.sparkSession, tv.get)
-        val side = graft.CacheScope.persist(exploded.join(dict, "tok")
-          .groupBy("id")
-          .agg(expr("bit_or(shiftleft(1L, tid))").as("bits"))) // 8B/doc; both join sides
-        val inter = bit_count(col("bits_a").bitwiseAND(col("bits_b"))).cast("double")
-        val jac = round(
-          inter / (bit_count(col("bits_a")) + bit_count(col("bits_b")) - inter), 4)
-        if (smallCorpus) {
-          // ALL-PAIRS popcount instead of LSH: a <=64-word vocabulary
-          // makes sets broadly similar, so banding generates ~B^2
-          // candidates ANYWAY (probability a J=0.6 pair shares a
-          // 4-row band across 32 bands is ~0.99) — the signature +
-          // band-join machinery costs more than it prunes. B^2 pairs
-          // of 8-byte bitmaps through a broadcast nested-loop join is
-          // one shuffle-free codegen'd stage (recall exactly 1); the
-          // 10k-set default cap bounds it at ~5e7 popcount pairs —
-          // well under the banding machinery's fixed cost at this
-          // corpus shape, and two orders of magnitude below the r2
-          // default that ADVICE flagged as a silent-quadratic risk.
-          side.select(col("id").as("id_a"), col("bits").as("bits_a"))
-            .join(broadcast(side.select(col("id").as("id_b"), col("bits").as("bits_b"))),
-              col("id_a") < col("id_b"))
-            .select(col("id_a"), col("id_b"), jac.as("jaccard"))
-        } else {
-          lshCandidates()
-            .join(broadcast(side.select(col("id").as("id_a"), col("bits").as("bits_a"))), "id_a")
-            .join(broadcast(side.select(col("id").as("id_b"), col("bits").as("bits_b"))), "id_b")
-            .select(col("id_a"), col("id_b"), jac.as("jaccard"))
-        }
-      } else {
+    val verified = tv match {
+      // ALL-PAIRS popcount instead of LSH on a small corpus: a
+      // <=64-word vocabulary makes sets broadly similar, so banding
+      // generates ~B^2 candidates ANYWAY (probability a J=0.6 pair
+      // shares a 4-row band across 32 bands is ~0.99) — the signature
+      // + band-join machinery costs more than it prunes. B^2 pairs of
+      // 8-byte bitmaps through a broadcast nested-loop join is one
+      // shuffle-free codegen'd stage (recall exactly 1); the 10k-set
+      // default cap bounds it at ~5e7 popcount pairs — well under the
+      // banding machinery's fixed cost at this corpus shape, and two
+      // orders of magnitude below the r2 default that ADVICE flagged
+      // as a silent-quadratic risk.
+      case Some(toks) if smallCorpus =>
+        bitmapJaccard(exploded, exploded, toks)(
+          (a, b) => a.join(broadcast(b), col("id_a") < col("id_b")))
+      case Some(toks) =>
+        bitmapJaccard(exploded, exploded, toks)(
+          (a, b) => lshCandidates().join(broadcast(a), "id_a").join(broadcast(b), "id_b"))
+      case None =>
         val side = clustered.select(col("sid").as("id"), col("ws"))
         lshCandidates()
           .join(side.select(col("id").as("id_a"), col("ws").as("ws_a")), "id_a")
           .join(side.select(col("id").as("id_b"), col("ws").as("ws_b")), "id_b")
           .select(col("id_a"), col("id_b"),
             round(jaccard(col("ws_a"), col("ws_b")), 4).as("jaccard"))
-      }
+    }
     val setPairs = verified.filter(col("jaccard") >= threshold)
 
     // Expand set pairs back to doc pairs (cross product of the two
@@ -817,25 +815,36 @@ object Dedup {
       .distinct()
   }
 
-  /** Exact n-gram (token-set) Jaccard similarity join via inverted
-    * index: explode tokens → self-join on token → pair-count =
-    * |intersection| → Jaccard from set sizes. `dfCap` (absolute) and
-    * `relDfCap` (fraction of the corpus, resolved INSIDE the plan —
-    * no driver-side count) drop tokens present in more than that many
-    * documents (stop-token skew guard; candidate-complete as long as
-    * a qualifying pair shares at least one sub-cap token). The
-    * DEFAULT is capped (`relDfCap = 0.5`): on a 100 TB corpus an
-    * uncapped index lets every stop-token join all its documents
-    * pairwise — the classic stop-token n² blowup — so the safe plan
-    * has to be the one you get without thinking. Surviving pairs are
-    * re-scored EXACTLY on the full sets, so the cap can only lose
-    * pairs whose every shared token sits in > half the corpus.
-    * Exact recall is an explicit opt-in: pass `relDfCap = Double.NaN`
-    * (and leave `dfCap` at its default) for the uncapped single-pass
-    * plan. Corpora whose vocabulary fits in 64 words
-    * (≤ `allPairsMaxDocs` docs) instead run exact all-pairs bitmap
-    * popcounts — recall-complete, caps ignored — because an inverted
-    * index cannot prune sets drawn from a tiny vocabulary.
+  /** Exact token-set Jaccard similarity join: every pair (id_a < id_b)
+    * with round(J, 4) ≥ `threshold`, scored on the full sets.
+    *
+    * Filter, then verify (ICDE 2022, PAPERS.md): a set's PREFIX is
+    * its first |x| − ⌈t′·|x|⌉ + 1 tokens under the global order
+    * (df, token), t′ = max(threshold − 1e-4, 0) ([[inPrefix]]).
+    * Candidates are the distinct pairs sharing a token that is in BOTH
+    * prefixes and has df ≤ the cap, with sizes that can reach t′
+    * ([[sizeBoundKeeps]]); each is re-scored exactly. The prefix
+    * loses no pair the cap keeps:
+    *   1. J ≥ t′ gives |x∩y| ≥ ⌈t′·|x|⌉, so x∩y cannot fit in x's
+    *      suffix: the rarest shared token lies in both prefixes;
+    *   2. that token has the smallest df of all shared tokens,
+    *   3. so it passes the cap whenever any shared token does.
+    * So the emitted (pair, score) set equals the all-tokens result
+    * under the same cap, and [[graft.similarity.CandidateGuard]]'s Σ df²
+    * probe stays an upper bound on the candidates.
+    *
+    * Caps: `dfCap` (absolute) and `relDfCap` (fraction of the corpus,
+    * resolved INSIDE the plan — no driver-side count) keep tokens
+    * present in more than that many documents out of candidate
+    * generation. The DEFAULT is capped (`relDfCap = 0.5`): uncapped,
+    * every stop-token joins its documents pairwise at low thresholds,
+    * the classic n² blowup. The cap only loses pairs whose every
+    * shared token sits over it. Exact recall is an explicit opt-in: pass
+    * `relDfCap = Double.NaN` (and leave `dfCap` at its default), or
+    * call [[jaccardJoinExact]]. Corpora whose vocabulary fits in 64
+    * words (≤ `allPairsMaxDocs` docs) instead run exact all-pairs
+    * bitmap popcounts — recall-complete, caps ignored — because an
+    * inverted index cannot prune sets drawn from a tiny vocabulary.
     */
   def jaccardJoin(df: DataFrame, textCol: String, idCol: String,
                   threshold: Double, dfCap: Long = Long.MaxValue,
@@ -849,92 +858,38 @@ object Dedup {
     val inv = docs.select(col("id"), col("sz"), explode(col("ws")).as("tok"))
     // Bounded probe jobs decide the plan (see minhashPairs; r12 split
     // shape): a token-free limit+count over a ≤ allPairsMaxDocs+1 doc
-    // prefix — the limit ends the scan early — then, only when the
-    // prefix is proven to be the whole corpus, a 65-cutoff map-side
-    // distinct vocab witness (no countDistinct Expand over the token
-    // stream).
-    val nd = docs
-      .limit(math.min(allPairsMaxDocs + 1, Int.MaxValue.toLong).toInt)
-      .count()
+    // prefix, then, only when that prefix is the whole corpus, the
+    // 65-cutoff vocab witness. Sets drawn from ≤64 words are broadly
+    // similar, so an inverted index degenerates toward all-pairs
+    // candidates anyway — score all pairs directly.
     val tv =
-      if (nd <= allPairsMaxDocs) tinyVocab(inv.select("tok")) else None
+      if (docs.limit(math.min(allPairsMaxDocs + 1, Int.MaxValue.toLong).toInt)
+          .count() <= allPairsMaxDocs) tinyVocab(inv.select("tok"))
+      else None
     if (tv.isDefined) {
-      // <=64-word vocabulary: each set is ONE int64 bitmap, and sets
-      // drawn from so few words are broadly similar — an inverted
-      // index degenerates toward all-pairs candidates anyway, so do
-      // exact all-pairs popcounts directly (one shuffle-free
-      // broadcast-nested-loop stage). This plan is recall-complete,
-      // so the dfCap (a candidate-pruning knob for the inverted-index
-      // plan) has nothing left to prune.
-      val dict = tinyVocabDict(df.sparkSession, tv.get)
-      val side = graft.CacheScope.persist(inv.join(dict, "tok")
-        .groupBy("id")
-        .agg(expr("bit_or(shiftleft(1L, tid))").as("bits"))) // 8B/doc; both join sides
-      val inter = bit_count(col("bits_a").bitwiseAND(col("bits_b"))).cast("double")
-      side.select(col("id").as("id_a"), col("bits").as("bits_a"))
-        .join(broadcast(side.select(col("id").as("id_b"), col("bits").as("bits_b"))),
-          col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"),
-          round(inter / (bit_count(col("bits_a")) + bit_count(col("bits_b")) - inter), 4)
-            .as("jaccard"))
-        .filter(col("jaccard") >= threshold)
-    } else if (dfCap == Long.MaxValue && relDfCap.isNaN) {
-      // exact path: pair-count over the full inverted index IS the
-      // intersection size — no second pass needed
-      val a = inv.select(col("tok"), col("id").as("id_a"), col("sz").as("sz_a"))
-      val b = inv.select(col("tok"), col("id").as("id_b"), col("sz").as("sz_b"))
-      // size-impossible pairs can never pass the threshold filter —
-      // drop their token-collision rows before the pair-count groupBy
-      // (r17; see [[sizeBoundKeeps]])
-      a.join(b, "tok")
-        .filter(col("id_a") < col("id_b") &&
-          sizeBoundKeeps(col("sz_a"), col("sz_b"), threshold))
-        .groupBy("id_a", "id_b", "sz_a", "sz_b")
-        .agg(count(lit(1)).as("inter"))
-        .select(col("id_a"), col("id_b"),
-          round(col("inter") / (col("sz_a") + col("sz_b") - col("inter")), 4).as("jaccard"))
-        .filter(col("jaccard") >= threshold)
-    } else {
-      // capped path: stop-tokens (document frequency > the cap) are
-      // dropped from CANDIDATE GENERATION only — they are the skew
-      // source and contribute no selectivity. The Jaccard itself is
-      // then recomputed exactly on the full sets, so a surviving pair
-      // is never mis-scored; recall requires sharing >= 1 rare token.
-      // A relative cap resolves N with a broadcast-scalar cross join
-      // inside the plan (no docs.count(); the guard's bounded
-      // single-row volume probe is the capped path's one action). The df
-      // frame is persisted (one row per distinct token): the volume
-      // guard probes it once, then the keep-filter re-reads it.
-      val base = inv.groupBy("tok").agg(count(lit(1)).as("df_"))
-      val grouped = graft.CacheScope.persist(
-        if (relDfCap.isNaN) base
-        else base.crossJoin(broadcast(docs.agg(count(lit(1)).as("_n")))))
-      val effCap =
-        if (relDfCap.isNaN) lit(dfCap)
-        else least(lit(dfCap), floor(lit(relDfCap) * col("_n")))
-      // volume guard (SCALE_SWEEP Finding 1): tighten the cap in-plan
-      // when Σ_{df≤cap} df² candidate rows would blow the budget
-      val capCol = graft.similarity.CandidateGuard
-        .resolve(grouped, col("df_"), effCap, candidateBudget, "Dedup.jaccardJoin",
-          strict = guardStrict)
-        .map(c => least(effCap, lit(c))).getOrElse(effCap)
-      val keep = grouped.filter(col("df_") <= capCol)
-      val capped = inv.join(keep.select("tok"), "tok")
-      // sizes ride the token join so size-impossible pairs die before
-      // the candidate distinct (r17; see [[sizeBoundKeeps]])
-      val cands = capped.select(col("tok"), col("id").as("id_a"), col("sz").as("sz_a"))
-        .join(capped.select(col("tok"), col("id").as("id_b"), col("sz").as("sz_b")), "tok")
-        .filter(col("id_a") < col("id_b") &&
-          sizeBoundKeeps(col("sz_a"), col("sz_b"), threshold))
-        .select("id_a", "id_b")
-        .distinct()
-      cands
-        .join(docs.select(col("id").as("id_a"), col("ws").as("ws_a")), "id_a")
-        .join(docs.select(col("id").as("id_b"), col("ws").as("ws_b")), "id_b")
-        .select(col("id_a"), col("id_b"),
-          round(jaccard(col("ws_a"), col("ws_b")), 4).as("jaccard"))
+      val ids = inv.select("id", "tok")
+      return bitmapJaccard(ids, ids, tv.get)(
+          (a, b) => a.join(broadcast(b), col("id_a") < col("id_b")))
         .filter(col("jaccard") >= threshold)
     }
+    // (tok, df_, _n), one row per token. Persisted: the guard probes
+    // it, the prefix ranking joins it.
+    val dfTbl = graft.CacheScope.persist(inv.groupBy("tok").agg(count(lit(1)).as("df_"))
+      .crossJoin(broadcast(docs.agg(count(lit(1)).as("_n")))))
+    val capOk = capFilter(dfTbl, dfCap, relDfCap, candidateBudget,
+      "Dedup.jaccardJoin", None, guardStrict)
+    val pre = inPrefix(inv.join(dfTbl, "tok"), "id", "sz", threshold)
+      .filter(capOk).select("tok", "id", "sz")
+    pre.toDF("tok", "id_a", "sz_a").join(pre.toDF("tok", "id_b", "sz_b"), "tok")
+      .filter(col("id_a") < col("id_b") &&
+        sizeBoundKeeps(col("sz_a"), col("sz_b"), threshold))
+      .select("id_a", "id_b")
+      .distinct()
+      .join(docs.select(col("id").as("id_a"), col("ws").as("ws_a")), "id_a")
+      .join(docs.select(col("id").as("id_b"), col("ws").as("ws_b")), "id_b")
+      .select(col("id_a"), col("id_b"),
+        round(jaccard(col("ws_a"), col("ws_b")), 4).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
   }
 
   // ---- named exact-recall entry points ----------------------------
@@ -943,12 +898,14 @@ object Dedup {
   // you get without thinking, because an uncapped inverted index lets
   // every stop-token join all its documents pairwise. Callers that
   // relied on the old exact-recall default pass `relDfCap =
-  // Double.NaN` (or, for the self-join, use the named variant below).
+  // Double.NaN` (or, for the self-join, use the named variant below);
+  // capped and uncapped calls run the same prefix-filtered plan.
 
-  /** [[jaccardJoin]] with guaranteed exact recall (uncapped inverted
-    * index — every pair sharing any token is a candidate). O(Σ df²)
-    * candidate volume: safe only when stop-token document frequencies
-    * are bounded; prefer the capped default at corpus scale.
+  /** [[jaccardJoin]] with guaranteed exact recall: no df cap, so every
+    * pair sharing a token in both prefixes is a candidate. The prefix
+    * filter bounds candidates by the threshold, not by token rarity:
+    * at low thresholds a stop-token still joins its documents
+    * pairwise — prefer the capped default at corpus scale.
     */
   def jaccardJoinExact(df: DataFrame, textCol: String, idCol: String,
                        threshold: Double,

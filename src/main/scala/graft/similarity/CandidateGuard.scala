@@ -23,9 +23,9 @@ import org.apache.spark.sql.functions._
   * up-front by one bounded single-row aggregate over that (already
   * small: one row per distinct gram) frame, the same
   * one-bounded-probe-job contract as the tiny-vocabulary gates in
-  * `Dedup`. For [[StringSim.similarPairs]] the probe is an UPPER
-  * bound: its prefix-filtered join keeps a subset of the cap-join's
-  * rows. If the requested cap's volume fits the budget, the plan
+  * `Dedup`. For the prefix-filtered joins ([[StringSim.similarPairs]],
+  * `Dedup.jaccardJoin`, `Dedup.nearDupMatches`) the probe is an UPPER
+  * bound: they keep a subset of the cap-join's rows. If the requested cap's volume fits the budget, the plan
   * is untouched. Otherwise the cap auto-degrades to the LARGEST
   * ladder cap whose measured volume fits (caps only affect candidate
   * GENERATION — surviving pairs are always re-scored on full

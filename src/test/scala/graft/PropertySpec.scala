@@ -185,6 +185,73 @@ class PropertySpec extends SparkSpec {
     assert(degradedJ.size <= exactJ.size && degradedS.size <= exactS.size)
   }
 
+  test("jaccardJoin and nearDupMatches equal a brute-force Jaccard reference, capped and uncapped") {
+    // hot tokens sit in most documents, past any cap below, and sort
+    // before every cold token lexically: a prefix taken in token order
+    // instead of (df, token) order starts with tokens the cap drops.
+    // Every fifth document gets a near-duplicate (one cold token
+    // swapped, or one added), so every threshold has pairs.
+    val hot = Seq("a1", "a2", "a3")
+    val cold = (1 to 40).map(i => s"w$i")
+    val docGen = for {
+      nh <- Gen.chooseNum(1, 3); nc <- Gen.chooseNum(1, 6)
+      hs <- Gen.pick(nh, hot); cs <- Gen.pick(nc, cold)
+    } yield (hs ++ cs).mkString(" ")
+    val base = sample(docGen, 70)
+    val texts = base ++ base.indices.filter(_ % 5 == 0).map { i =>
+      val ws = base(i).split(" ")
+      if (i % 10 == 0) (ws :+ "w99").mkString(" ")
+      else (ws.init :+ cold((i * 7) % cold.size)).distinct.mkString(" ")
+    }
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    val (store, batch) = docs.partition(_._1 % 3 == 0)
+    def rows(d: Seq[(Long, String)]) = d.toDF("doc_id", "text")
+    def got(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val D = graft.dedup.Dedup
+    val dfCap = 6L
+    assert(JaccardRef.selfPairs(docs, 0.3, dfCap) != JaccardRef.selfPairs(docs, 0.3),
+      "the absolute cap must bind on this corpus")
+    for (t <- Seq(0.3, 0.6, 0.9, 1.0)) {
+      // (label, relDfCap, dfCap) -> the cap the reference applies
+      val settings = Seq(
+        ("uncapped", Double.NaN, Long.MaxValue, (_: Int) => Long.MaxValue),
+        ("relDfCap 0.5", 0.5, Long.MaxValue, (n: Int) => n / 2L),
+        ("dfCap", Double.NaN, dfCap, (_: Int) => dfCap))
+      for ((label, rel, cap, refCap) <- settings) {
+        val self = got(D.jaccardJoin(rows(docs), "text", "doc_id", t, dfCap = cap,
+          relDfCap = rel, allPairsMaxDocs = 0L, candidateBudget = Long.MaxValue))
+        assert(self == JaccardRef.selfPairs(docs, t, refCap(docs.size)), s"self-join, $label, t $t")
+        val near = got(D.nearDupMatches(rows(batch), rows(store), "text", "doc_id", t,
+          dfCap = cap, relDfCap = rel, allPairsMaxDocs = 0L, candidateBudget = Long.MaxValue))
+        assert(near == JaccardRef.storePairs(batch, store, t, refCap(store.size)),
+          s"store join, $label, t $t")
+      }
+      // a budget only the rungs at or below 16 fit: compare the
+      // reference at the cap the guard recorded
+      val cg = graft.similarity.CandidateGuard
+      def guarded(opName: String)(join: => org.apache.spark.sql.DataFrame) = {
+        cg.clearEvents()
+        val out = got(join)
+        val ev = cg.drainEvents().filter(_.opName == opName)
+        assert(ev.size == 1 && ev.head.degradedCap.isDefined, s"$opName at t $t: $ev")
+        (out, ev.head.degradedCap.get)
+      }
+      val (sdf, bdf, stdf) = (JaccardRef.df(docs), JaccardRef.df(batch), JaccardRef.df(store))
+      val (selfG, selfCap) = guarded("Dedup.jaccardJoin")(D.jaccardJoin(rows(docs), "text",
+        "doc_id", t, relDfCap = 1.0, allPairsMaxDocs = 0L,
+        candidateBudget = sdf.values.filter(_ <= 16).map(d => d * d).sum))
+      assert(selfG == JaccardRef.selfPairs(docs, t, math.min(selfCap, docs.size)),
+        s"guarded self-join, t $t")
+      val (nearG, nearCap) = guarded("Dedup.nearDupMatches")(D.nearDupMatches(rows(batch),
+        rows(store), "text", "doc_id", t, relDfCap = 1.0, allPairsMaxDocs = 0L,
+        candidateBudget = stdf.collect { case (k, d) if d <= 16 => d * bdf.getOrElse(k, 0L) }.sum))
+      assert(nearG == JaccardRef.storePairs(batch, store, t, math.min(nearCap, store.size)),
+        s"guarded store join, t $t")
+    }
+    CacheScope.clear()
+  }
+
   test("similarPairs equals a brute-force all-pairs tf-idf reference, capped and uncapped") {
     // hot words sit in most strings, so their grams' df runs past the
     // relative cap floor(0.5·N); strings made only of hot words have

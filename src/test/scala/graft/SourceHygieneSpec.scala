@@ -4,10 +4,12 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps session construction, driver thread pools and partition-id
-  * positions in one place each: under `src/main/scala` only
-  * `Session.scala` builds a SparkSession, only `Par.scala` creates a
-  * thread pool and only `operators/Rank.scala` reads partition ids.
+/** Keeps session construction, driver thread pools, partition-id
+  * positions and the ≤64-word bitmap encoding in one place each: under
+  * `src/main/scala` only `Session.scala` builds a SparkSession, only
+  * `Par.scala` creates a thread pool, only `operators/Rank.scala`
+  * reads partition ids and only `dedup/Dedup.scala` encodes token
+  * bitmaps, once.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -40,5 +42,17 @@ class SourceHygieneSpec extends AnyFunSuite {
     // would re-learn the pinning rule on its own
     val hits = strayUses(Map("spark_partition_id" -> "operators/Rank.scala"))
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("the ≤64-word bitmap encoding is written once, in dedup/Dedup.scala") {
+    // one encode+popcount helper serves every Jaccard join: a second
+    // copy would re-learn the no-join encoding (a persisted broadcast
+    // dict join pins its hashed relation until CacheScope.clear)
+    val pattern = "bit_or(shiftleft(1L, tid))"
+    val hits = strayUses(Map(pattern -> "dedup/Dedup.scala"))
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+    val home = Files.readAllLines(Paths.get("src/main/scala/graft/dedup/Dedup.scala"))
+      .asScala.count(_.contains(pattern))
+    assert(home == 1, s"$pattern appears $home times in Dedup.scala")
   }
 }
