@@ -2304,7 +2304,8 @@ object SparkEntry {
         .orderBy("doc_id")),
     // benchmark decontamination: docs sharing a 5-gram shingle with
     // the held-out slice are flagged (doc side streams through one
-    // shingle-keyed semi join; benchmark shingles broadcast)
+    // semi join keyed on the shingle's xxhash64; the benchmark's
+    // shingles broadcast grouped by that hash and match exactly)
     "q_d23_decontam" -> ((s, d) => {
       val all = t(s, d, "documents")
       Dedup.contaminatedIds(all.filter(col("doc_id") % 11 =!= 0), "text", "doc_id",

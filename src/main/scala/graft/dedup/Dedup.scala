@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * Scale design: nothing here is O(n²) in the corpus —
   *  - exact dedup is a hash group-by on a 128-bit content hash;
   *  - MinHash signatures are pure array expressions (codegen) and
-  *    candidate generation is a self-join keyed on (band, bandHash),
-  *    i.e. a shuffle on the band key, linear + output-sized;
+  *    candidate generation is one aggregate keyed on the long hash of
+  *    (band, band rows), i.e. a shuffle on the bucket key, linear +
+  *    output-sized;
   *  - the exact Jaccard joins are inverted-index joins keyed on the
   *    tokens of each set's df-ordered prefix, with a
   *    document-frequency cap to kill stop-token skew;
@@ -330,9 +331,17 @@ object Dedup {
   }
 
   /** MinHash+LSH near-duplicate pairs with exact verification:
-    * shingle → minhash → band → bucket self-join → exact Jaccard ≥
-    * `threshold`. Emits (id_a < id_b, jaccard). The only shuffles are
-    * the band-key exchange and the final distinct — both linear in
+    * shingle → minhash → band → bucket aggregate → exact Jaccard ≥
+    * `threshold`. Emits (id_a < id_b, jaccard). Each (band, band rows)
+    * bucket is keyed by ONE long, `xxhash64(band, rows)`, and its
+    * members are collected by one aggregate that emits every pair
+    * inside the bucket — no join on the bucket key, so no hashed
+    * relation keyed on bytes is built (a broadcast one would stay
+    * pinned under a persisted result). Equal (band, rows) always hash
+    * equal, so no candidate is lost; a 64-bit collision can only add
+    * a candidate, and every candidate is verified by the exact
+    * `round(jaccard, 4) >= threshold`. The only shuffles are the
+    * bucket-key exchange and the final distinct — both linear in
     * candidates, never corpus².
     */
   def minhashPairs(df: DataFrame, textCol: String, idCol: String,
@@ -358,10 +367,10 @@ object Dedup {
     // LSH candidate generation: signatures via explode -> groupBy with
     // k codegen'd MIN aggregates (higher-order array functions are
     // interpreted in Spark — an agg over exploded tokens stays in
-    // whole-stage codegen and map-side combines), then band keys and a
-    // bucket self-join. Candidate ids deduped FIRST (narrow 2-column
-    // shuffle) so exact verification runs once per pair, not once per
-    // colliding band.
+    // whole-stage codegen and map-side combines), then long band keys
+    // and one bucket aggregate whose member list pairs with itself.
+    // Candidate ids deduped FIRST (narrow 2-column shuffle) so exact
+    // verification runs once per pair, not once per colliding band.
     def lshCandidates(): DataFrame = {
       val sigCols = (0 until k).map(i => min(xxhash64(lit(i), col("tok"))).as(s"_s$i"))
       // exploded tokens per id are exactly the distinct words, so the
@@ -369,16 +378,17 @@ object Dedup {
       // rides the signature aggregation for free (r17)
       val sigs = exploded.groupBy("id")
         .agg(sigCols.head, (sigCols.tail :+ count(lit(1)).as("_sz")): _*)
-      val bandCols = (0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          xxhash64(array((0 until rowsPerBand).map(j => col(s"_s${b * rowsPerBand + j}")): _*))
-            .as("bh"))
+      val bandKeys = (0 until bands).map { b =>
+        xxhash64(lit(b), array((0 until rowsPerBand).map(j => col(s"_s${b * rowsPerBand + j}")): _*))
       }
-      val keyed = graft.CacheScope.persist(sigs
-        .select(col("id"), explode(array(bandCols: _*)).as("bk"), col("_sz"))
-        .select("bk", "id", "_sz")) // bands x ids only (~20B/row); read by both join sides
-      keyed.select(col("bk"), col("id").as("id_a"), col("_sz").as("sz_a"))
-        .join(keyed.select(col("bk"), col("id").as("id_b"), col("_sz").as("sz_b")), "bk")
+      // bands x ids only (~20B/row), read once by the bucket aggregate
+      val keyed = sigs.select(explode(array(bandKeys: _*)).as("bk"), col("id"), col("_sz"))
+      keyed.groupBy("bk").agg(collect_list(struct(col("id"), col("_sz"))).as("m"))
+        .filter(size(col("m")) > 1)
+        .select(explode(col("m")).as("a"), col("m"))
+        .select(col("a"), explode(col("m")).as("b"))
+        .select(col("a.id").as("id_a"), col("a._sz").as("sz_a"),
+          col("b.id").as("id_b"), col("b._sz").as("sz_b"))
         .filter(col("id_a") < col("id_b") &&
           sizeBoundKeeps(col("sz_a"), col("sz_b"), threshold))
         .select("id_a", "id_b")
@@ -654,19 +664,31 @@ object Dedup {
   /** Ids of documents sharing at least one word n-gram shingle with a
     * benchmark corpus — test-set DECONTAMINATION, the training-data
     * hygiene step that keeps eval benchmarks out of the training set.
-    * The benchmark side is distinct-aggregated shingles (benchmarks
-    * are small by construction — broadcast them); the corpus streams
-    * through one semi join keyed on the shingle, so the 100 TB side
-    * shuffles at most its exploded shingles and nothing joins
-    * pairwise.
+    * The benchmark side is its distinct shingles grouped by their
+    * `xxhash64` (benchmarks are small by construction — broadcast
+    * them); the corpus streams through one semi join keyed on the
+    * shingle's hash, and `array_contains` over the hash group keeps
+    * the match exact string equality. The long key makes the
+    * broadcast a hashed relation sized to the benchmark instead of a
+    * byte-keyed one holding a whole memory page, which a persisted
+    * result would pin. The 100 TB side shuffles at most its exploded
+    * shingles and nothing joins pairwise. `_sh` and `_h` are the
+    * operator's own column names; an `idCol` of either is refused.
     */
   def contaminatedIds(docs: DataFrame, textCol: String, idCol: String,
                       benchmark: DataFrame, benchTextCol: String,
                       n: Int = 8): DataFrame = {
+    require(idCol != "_sh" && idCol != "_h",
+      s"contaminatedIds: idCol '$idCol' collides with a reserved column name (_sh, _h)")
     val benchShingles = broadcast(
-      benchmark.select(explode(shingleSet(col(benchTextCol), n)).as("_sh")).distinct())
-    docs.select(col(idCol), explode(shingleSet(col(textCol), n)).as("_sh"))
-      .join(benchShingles, Seq("_sh"), "left_semi")
+      benchmark.select(explode(shingleSet(col(benchTextCol), n)).as("_bsh"))
+        .groupBy(xxhash64(col("_bsh")).as("_h"))
+        .agg(collect_set(col("_bsh")).as("_bshs")))
+    val shingles = docs.select(col(idCol), explode(shingleSet(col(textCol), n)).as("_sh"))
+      .withColumn("_h", xxhash64(col("_sh")))
+    shingles
+      .join(benchShingles, shingles("_h") === benchShingles("_h") &&
+        array_contains(benchShingles("_bshs"), shingles("_sh")), "left_semi")
       .select(col(idCol)).distinct()
   }
 

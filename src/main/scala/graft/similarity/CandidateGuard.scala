@@ -129,6 +129,9 @@ object CandidateGuard {
     // fixed cap semantics this way) — skip the probe job entirely, no
     // volume can exceed it
     if (budget == Long.MaxValue) return None
+    // the index's unit, for the messages: `Dedup`'s joins index word
+    // tokens, `StringSim`'s character grams
+    val unit = if (opName.startsWith("Dedup.")) "word" else "gram"
     val d = dfCol.cast("double")
     val volTerm = volume.map(_.cast("double")).getOrElse(d * d)
     def vol(cap: Column) = sum(when(dfCol <= cap, volTerm))
@@ -159,7 +162,7 @@ object CandidateGuard {
         System.err.println(
           f"[graft] $opName: requested df cap -> ~${req}%.3g candidate rows " +
             f"(budget $budget%d); auto-degrading to absolute dfCap=$c%d " +
-            f"(~${est}%.3g rows). Recall now requires a shared gram with " +
+            f"(~${est}%.3g rows). Recall now requires a shared $unit with " +
             f"df <= $c%d; raise candidateBudget to override.")
         c
       }
@@ -168,9 +171,9 @@ object CandidateGuard {
         throw new IllegalStateException(
           f"[graft] $opName: candidate volume ~${req}%.3g rows exceeds the " +
             f"$budget%d budget and even dfCap=${Ladder.last}%d measures " +
-            f"~${v(Ladder.size)}%.3g — a gram index cannot bound this corpus " +
-            "(near-identical strings share only high-df grams). Use banded " +
-            "minhash, which prunes by similarity instead of gram rarity " +
+            f"~${v(Ladder.size)}%.3g — a $unit index cannot bound this corpus " +
+            s"(near-duplicates share only high-df ${unit}s). Use banded " +
+            s"minhash, which prunes by similarity instead of $unit rarity " +
             "(Dedup.minhashPairs; batch-vs-store: " +
             "Dedup.minhashMatchesAgainstStore), or raise candidateBudget " +
             "explicitly.")

@@ -64,11 +64,19 @@ object ScaleBench {
         val cents = Ann.trainCentroidsBySample(emb, "embedding", "vec_id", 64)
         Ann.semanticPairs(emb, "embedding", "vec_id", cents, 0.99).count()
       }),
+      // the MATCH pair count: every GenCorpus batch doc has a store
+      // near-dup, so the kept-row count of dedupNearAgainstStore is 0
+      // and could not show a lost or an extra match
       "d34_near_store" -> (() =>
-        Dedup.dedupNearAgainstStore(
+        Dedup.nearDupMatches(
           docs.filter(pmod(col("doc_id"), lit(3)) =!= 0),
           docs.filter(pmod(col("doc_id"), lit(3)) === 0),
           "text", "doc_id", 0.75, dfCap = 1000, allPairsMaxDocs = 0).count()),
+      // n-gram decontamination against a held-out slice (q_d23's
+      // shape): the corpus streams through one long-keyed semi join
+      "d23_decontam" -> (() =>
+        Dedup.contaminatedIds(docs.filter(pmod(col("doc_id"), lit(11)) =!= 0), "text",
+          "doc_id", docs.filter(pmod(col("doc_id"), lit(11)) === 0), "text", n = 5).count()),
       "d42_dedup_best" -> (() =>
         Components.dedupByPairsBest(docs, "doc_id", minhash(), "id_a", "id_b",
           size(split(trim(col("text")), " +")), smallGraphMaxEdges = 0).count()),

@@ -1,16 +1,20 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{CacheManager, CachedData}
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.{CacheManager, CachedData, SparkPlan}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
 import graft.dedup.Dedup
 
 /** What graft's operators leave pinned until `CacheScope.clear`, and
   * what `clear` releases: no cached plan of the Jaccard joins or
   * `minhashPairs` holds a broadcast hash join (its hashed relation
-  * would stay pinned with the cache entry), and `clear` drops the
-  * checkpoint pin of `Rank`.
+  * would stay pinned with the cache entry); a persisted result of
+  * `minhashPairs` or `contaminatedIds` broadcasts only relations keyed
+  * on one integral column (sized to their data, not a whole memory
+  * page); and `clear` drops the checkpoint pin of `Rank`.
   */
 class CachePinSpec extends SparkSpec {
   import spark.implicits._
@@ -46,6 +50,40 @@ class CachePinSpec extends SparkSpec {
         s"plans hold a broadcast hash join:\n${withBroadcast.map(_.plan.treeString).mkString("\n")}")
       CacheScope.clear()
     }
+  }
+
+  test("persisted minhashPairs and contaminatedIds results broadcast only integral keys") {
+    val rnd = new scala.util.Random(11)
+    val docs = (0L until 60L).map { i =>
+      i -> Seq.fill(8)(s"t${rnd.nextInt(400)}").distinct.mkString(" ")
+    }.toDF("doc_id", "text")
+    val bench = docs.filter(col("doc_id") % 7 === 0)
+    val cm = spark.sharedState.cacheManager
+    // the way a pipeline keeps them: persisted, then materialized
+    val pairs = CacheScope.persist(
+      Dedup.minhashPairs(docs, "text", "doc_id", 0.3, allPairsMaxSets = 0))
+    val bad = CacheScope.persist(Dedup.contaminatedIds(docs, "text", "doc_id", bench, "text", 3))
+    pairs.count()
+    assert(bad.count() >= 9) // every benchmark doc is a corpus doc
+    def cachedPlan(df: DataFrame): SparkPlan =
+      cm.lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.DataFrame])
+        .get.cachedRepresentation.cacheBuilder.cachedPlan
+    for ((name, df) <- Seq("minhashPairs" -> pairs, "contaminatedIds" -> bad)) {
+      val plan = cachedPlan(df)
+      val buildKeys = cm.collect(plan) {
+        case j: BroadcastHashJoinExec => if (j.buildSide == BuildLeft) j.leftKeys else j.rightKeys
+      }
+      if (name == "contaminatedIds") assert(buildKeys.nonEmpty, s"no broadcast join:\n$plan")
+      val wide = buildKeys.filterNot(k => k.size == 1 &&
+        Seq(LongType, IntegerType, ShortType, ByteType).contains(k.head.dataType))
+      assert(wide.isEmpty, s"$name broadcasts a relation keyed on $wide:\n$plan")
+    }
+    val bucketJoins = cm.collect(cachedPlan(pairs)) {
+      case j: BaseJoinExec if (j.leftKeys ++ j.rightKeys).exists(_.references.exists(_.name == "bk")) => j
+    }
+    assert(bucketJoins.isEmpty,
+      s"minhashPairs joins on the bucket key:\n${bucketJoins.mkString("\n")}")
+    CacheScope.clear()
   }
 
   test("CacheScope.clear releases Rank's checkpoint pin") {

@@ -159,4 +159,25 @@ class CandidateGuardSpec extends SparkSpec {
     // intersection {stopA,stopB,stopC,alpha,beta,gamma} = 6 of 6 → 1.0
     assert(out.head.getDouble(2) == 1.0)
   }
+
+  test("guard messages name Dedup's word unit and StringSim's gram unit") {
+    val t = dfTbl(500L +: Seq.fill(50)(4L)) // degrades to 256 at budget 10k
+    def degradeLine(op: String): String = {
+      val buf = new java.io.ByteArrayOutputStream()
+      val err = System.err
+      System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+      try CandidateGuard.resolve(t, col("df_"), lit(1000L), budget = 10000L, opName = op)
+      finally System.setErr(err)
+      buf.toString("UTF-8").linesIterator.find(_.contains(s"[graft] $op:")).getOrElse("")
+    }
+    assert(degradeLine("Dedup.jaccardJoin").contains("requires a shared word with df <= 256"))
+    assert(degradeLine("StringSim.similarPairs").contains("requires a shared gram with df <= 256"))
+    val e = intercept[IllegalStateException] {
+      CandidateGuard.resolve(dfTbl(Seq.fill(5)(2L)), col("df_"), lit(1000L),
+        budget = 10L, opName = "Dedup.nearDupMatches")
+    }
+    assert(e.getMessage.contains("a word index cannot bound this corpus"), e.getMessage)
+    assert(!e.getMessage.contains("gram"), e.getMessage)
+    CandidateGuard.clearEvents()
+  }
 }
