@@ -547,12 +547,12 @@ object StreamingDQ {
     def writeBatch(batch: DataFrame, batchId: Long): Unit = synchronized {
       if (batchId <= lastBatchId) return // re-delivered batch: committed
       lastBatchId = batchId
-      val ranked = graft.CacheScope.persist(
-        graft.operators.Rank.globalRank(batch, sortCols, idCol)
-          .withColumn("global_rank", col("global_rank") + offset)
-          .withColumn("shard", expr(s"global_rank div ${rowsPerShard}L")))
-      // the pin ends with the batch: the cached ranked frame (and the
-      // offsets broadcast its plan holds) must not pile up one per
+      val rankedIn = graft.operators.Rank.globalRank(batch, sortCols, idCol)
+      val ranked = graft.CacheScope.persist(rankedIn
+        .withColumn("global_rank", col("global_rank") + offset)
+        .withColumn("shard", expr(s"global_rank div ${rowsPerShard}L")))
+      // the pins end with the batch: the ranked rows and the rank
+      // primitive's own checkpoint must not pile up one per
       // micro-batch until the host's CacheScope.clear
       val inc = try {
         ranked
@@ -568,7 +568,10 @@ object StreamingDQ {
             min(idCol).cast("long").as("mn"), max(idCol).cast("long").as("mx"),
             expr("bit_xor(_h)").as("xr"))
           .collect()
-      } finally ranked.unpersist(false)
+      } finally {
+        graft.CacheScope.release(ranked)
+        graft.CacheScope.release(rankedIn)
+      }
       inc.foreach { r =>
         val (sh, n, mn, mx, xr) = (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4))

@@ -53,14 +53,13 @@ object Bpe {
 
   /** Learn the top-`numMerges` BPE merges. Returns (rank, left,
     * right, merged, pair_count) rows, rank 1..N in learn order;
-    * stops early (fewer rows) if no adjacent pair remains. Lineage is
-    * truncated with a localCheckpoint every `checkpointEvery`
-    * iterations — without it a deep run accumulates one nested cached
-    * plan per merge and the driver OOMs on plan bookkeeping long
-    * before the data does.
+    * stops early (fewer rows) if no adjacent pair remains. Every
+    * round's word frame is a [[graft.CacheScope.persist]] pin, whose
+    * plan is one checkpoint leaf, so a deep run never nests one plan
+    * per merge (the driver would OOM on plan bookkeeping long before
+    * the data).
     */
-  def learnMerges(df: DataFrame, textCol: String, numMerges: Int,
-                  checkpointEvery: Int = 8): DataFrame = {
+  def learnMerges(df: DataFrame, textCol: String, numMerges: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
@@ -95,7 +94,6 @@ object Bpe {
             lit(s"$D${m.left}$D$D${m.right}$D"),
             lit(s"$D${m.left}${m.right}$D")).as("s"),
           col("cnt")))
-        if (rank % checkpointEvery == 0) words = words.localCheckpoint()
         rank += 1
       }
     }
@@ -131,16 +129,15 @@ object Bpe {
     *
     * Scale shape: identical to [[learnMerges]] (one corpus scan,
     * vocab-frame iterations) with the driver round-trips divided by
-    * the realized batch size; lineage is truncated with a
-    * localCheckpoint every `checkpointEvery` iterations so a 32k-
-    * merge run never builds a 32k-deep plan.
+    * the realized batch size; every iteration's word frame is a
+    * pinned checkpoint leaf, so a 32k-merge run never builds a
+    * 32k-deep plan.
     */
   def learnMergesBatched(df: DataFrame, textCol: String, numMerges: Int,
                          batchSize: Int = 16,
-                         checkpointEvery: Int = 8,
                          maxBatchSize: Int = 256): DataFrame =
     learnMergesBatchedWithStats(df, textCol, numMerges, batchSize,
-      checkpointEvery, maxBatchSize)._1
+      maxBatchSize)._1
 
   /** [[learnMergesBatched]] plus the realized batch size of every
     * driver round-trip — the measurement surface for the ≥1k-merge
@@ -149,7 +146,6 @@ object Bpe {
     */
   def learnMergesBatchedWithStats(df: DataFrame, textCol: String,
                                   numMerges: Int, batchSize: Int = 16,
-                                  checkpointEvery: Int = 8,
                                   maxBatchSize: Int = 256)
       : (DataFrame, Seq[Int]) = {
     val spark = df.sparkSession
@@ -165,7 +161,6 @@ object Bpe {
         .select(delimited(col("w")).as("s"), col("cnt")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
     val realized = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var iter = 0
     var done = false
     // ADAPTIVE batch growth (r13 verdict #3): the per-iteration floor
     // (~one vocab-frame job) dominates a real 32k-vocab induction, so
@@ -220,8 +215,6 @@ object Bpe {
             call_function("replace", acc,
               lit(s"$D$l$D$D$r$D"), lit(s"$D$l$r$D"))
           }.as("s"), col("cnt")))
-        iter += 1
-        if (iter % checkpointEvery == 0) words = words.localCheckpoint()
       }
     }
     (merges.toSeq

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.ann.Ann
 
 class MarginMiningSpec extends SparkSpec {
@@ -104,8 +106,26 @@ class MarginMiningSpec extends SparkSpec {
     val tgt = (200L to 260L).map(i => (i, vec(i * 3 + 1))).toDF("id", "v")
     val cents = Array.tabulate(4)(c => Array.tabulate(dim)(j =>
       (((c * 37 + j * 5) % 11) - 5).toDouble))
-    val plan = Ann.marginMiningBlocked(src, "id", "v", tgt, "id", "v",
-      cents, 3, 0L).queryExecution.executedPlan.toString
+    // the pair frame is a CacheScope pin: its join runs while the
+    // frame is built (an eager localCheckpoint action), and the
+    // returned plan reads only its rows, so both plans are checked
+    val ran = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = ran.put(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val plan = try {
+      val out = Ann.marginMiningBlocked(src, "id", "v", tgt, "id", "v", cents, 3, 0L)
+      // listener events arrive in order: everything before the marker
+      // action ran while the frame was built
+      val marker = spark.range(1)
+      marker.collect()
+      val eager = Iterator.continually(ran.take()).takeWhile(_ ne marker.queryExecution)
+        .map(_.executedPlan.toString).toSeq
+      assert(eager.nonEmpty, "the pair frame's join did not run while the frame was built")
+      (eager :+ out.queryExecution.executedPlan.toString).mkString("\n")
+    } finally spark.listenerManager.unregister(listener)
     // the production contract: a cell-keyed shuffle join (both sides
     // exchanged on _cell), NOT batchTopK's query-side broadcast — the
     // whole point of the blocked path is that neither corpus rides a

@@ -9,9 +9,25 @@ package graft
 class PlanAuditSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
-  private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, dir).queryExecution
-      .explainString(org.apache.spark.sql.execution.FormattedMode)
+  private def plan(name: String): String = explain(SparkEntry.queries(name)(spark, dir))
+
+  private def explain(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+
+  /** `name`'s plan, after checking that it reads pinned rows: a
+    * `CacheScope` pin is a checkpoint leaf over a persisted RDD (a
+    * `Scan ExistingRDD` in the physical plan), tracked for `clear`.
+    */
+  private def pinnedPlan(name: String): String = {
+    val df = SparkEntry.queries(name)(spark, dir)
+    val p = explain(df)
+    val pins = CacheScope.pinsOf(df)
+    assert(pins.nonEmpty && pins.forall(_.queryExecution.logical
+        .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]) &&
+      p.contains("Scan ExistingRDD"),
+      s"$name: expected pinned intermediates in the plan:\n${p.take(2000)}")
+    p
+  }
 
   test("bitmap-dedup vocab path has no single-partition window (r11 verdict #8)") {
     // the ≤64-token dict is now a bounded driver-built broadcast
@@ -201,13 +217,11 @@ class PlanAuditSpec extends SparkSpec {
       s"one scan expected:\n$p")
   }
 
-  test("e2e pipeline keeps its reused frames pinned (InMemoryRelation in plan)") {
+  test("e2e pipeline keeps its reused frames pinned (checkpoint leaves in plan)") {
     // without the CacheScope pins every downstream consumer re-derives
     // filter+repair+dedup (measured: the difference between one 2.9 s
     // pair job and re-running the whole upstream chain per stage)
-    val p = plan("q_e2e_pipeline")
-    assert(p.contains("InMemoryTableScan") || p.contains("InMemoryRelation"),
-      s"expected pinned intermediates in the e2e plan:\n${p.take(2000)}")
+    pinnedPlan("q_e2e_pipeline")
     CacheScope.clear()
   }
 
@@ -215,9 +229,7 @@ class PlanAuditSpec extends SparkSpec {
     // two pins: the span-gate survivor frame (feeds DSIR's raw AND
     // target featurization) and DSIR's raw feature frame (feeds the
     // bucket model AND the scoring join)
-    val p = plan("q_e2e_curation")
-    assert(p.contains("InMemoryTableScan") || p.contains("InMemoryRelation"),
-      s"expected pinned intermediates in the curation plan:\n${p.take(2000)}")
+    pinnedPlan("q_e2e_curation")
     CacheScope.clear()
   }
 
@@ -226,9 +238,7 @@ class PlanAuditSpec extends SparkSpec {
     // (one tokenize+hash pass, not two), and every join in the
     // pipeline is keyed (fingerprint, then (id, pos)) — a cartesian
     // appearing here would mean the coverage anti-join lost its keys
-    val p = plan("q_d58_span_removal")
-    assert(p.contains("InMemoryTableScan") || p.contains("InMemoryRelation"),
-      s"expected the pinned span frame:\n${p.take(2000)}")
+    val p = pinnedPlan("q_d58_span_removal")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"span removal must stay key-joined:\n${p.take(2000)}")
     CacheScope.clear()

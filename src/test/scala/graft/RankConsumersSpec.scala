@@ -114,6 +114,9 @@ class RankConsumersSpec extends SparkSpec {
   }
 
   test("stream shard writer releases each batch's pin: no cached broadcast join after 3 batches") {
+    val sc = spark.sparkContext
+    CacheScope.clear()
+    val rddsBefore = sc.getPersistentRDDs.keySet
     val dir = java.nio.file.Files.createTempDirectory("graft-shard-pin").toString
     val docs = spark.range(120).selectExpr("id AS doc_id", "concat('doc ', id) AS text")
     val manifest = graft.streaming.StreamingDQ.streamJsonlShardsReplay(
@@ -132,6 +135,10 @@ class RankConsumersSpec extends SparkSpec {
     assert(withBroadcast.isEmpty,
       s"${withBroadcast.size} cached writer plans still hold a broadcast join")
     assert(fromWriter.isEmpty, s"${fromWriter.size} cached writer frames left")
+    // each batch's pins (the ranked rows and the rank checkpoint under
+    // them) are released when the batch ends, not at CacheScope.clear
+    val left = sc.getPersistentRDDs.keySet -- rddsBefore
+    assert(left.isEmpty, s"${left.size} batch pins still persisted after 3 batches: $left")
     CacheScope.clear()
   }
 }

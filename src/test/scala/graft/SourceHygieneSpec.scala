@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `src/main/scala` only `Session.scala` builds a SparkSession, only
   * `Par.scala` creates a thread pool, only `operators/Rank.scala`
   * reads partition ids and only `dedup/Dedup.scala` encodes token
-  * bitmaps, once.
+  * bitmaps, once. No `CacheScope.persist` call drops the pin it
+  * returns.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -42,6 +43,28 @@ class SourceHygieneSpec extends AnyFunSuite {
     // would re-learn the pinning rule on its own
     val hits = strayUses(Map("spark_partition_id" -> "operators/Rank.scala"))
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("no CacheScope.persist call discards the pin it returns") {
+    // a pin is a NEW frame: the input is not cached, so a statement
+    // that drops the returned frame pins rows nothing reads and leaves
+    // every later read of the input to re-derive its plan
+    val root = Paths.get("src/main/scala")
+    val walk = Files.walk(root)
+    val files = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toVector
+                finally walk.close()
+    val call = "CacheScope.persist("
+    // the text before the call binds or passes its value
+    val uses = Seq("(", ",", "=>", "else", "return", "yield")
+    val dropped = for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex.toSeq
+      code = line.trim
+      if !code.startsWith("//") && !code.startsWith("*") && code.contains(call)
+      before = line.substring(0, line.indexOf(call)).stripSuffix("graft.").trim
+      if !before.contains("=") && !uses.exists(before.endsWith)
+    } yield s"$f:${i + 1}: $code"
+    assert(dropped.isEmpty, dropped.mkString("\n", "\n", ""))
   }
 
   test("the ≤64-word bitmap encoding is written once, in dedup/Dedup.scala") {
