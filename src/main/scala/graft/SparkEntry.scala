@@ -1606,9 +1606,9 @@ object SparkEntry {
         StructField("props", StringType)))
       graft.sources.Sources.conformSchema(variant, target).orderBy("event_id")
     }),
-    // mergeable KLL quantile sketches (custom TypedImperativeAggregate):
-    // the two halves of lineitem sketched INDEPENDENTLY, merged via
-    // KllMergeAgg, quartiles extracted — certified a14-style against
+    // mergeable KLL quantile sketches (Spark's kll_* functions): the
+    // two halves of lineitem sketched INDEPENDENTLY, merged via
+    // kll_merge_agg_double, quartiles extracted — certified a14-style against
     // EXACT order statistics at rank q±3% over the union (KLL k=200
     // two-sided rank error ~1.65%; the 3% margin makes the claim's
     // failure probability negligible despite KLL's unseedable

@@ -169,96 +169,6 @@ object Components {
     labels.select(col("n").as("node"), col("lbl").as("component"))
   }
 
-  /** Connected components via LARGE-STAR / SMALL-STAR alternation —
-    * the alternative fixpoint evaluated against min-label + pointer
-    * jumping (r8 verdict #6; measurement in SCALE_SWEEP.md). Instead
-    * of a (node, label) frame, the EDGE SET itself is rewritten each
-    * round until it becomes a star forest rooted at component minima:
-    *
-    *  - large-star: every node connects its LARGER neighbors to the
-    *    minimum of its neighborhood (incl. itself) — long chains
-    *    contract toward minima from the high side;
-    *  - small-star: every node connects its SMALLER-or-self
-    *    neighborhood to that neighborhood's minimum — stars flatten.
-    *
-    * Both steps preserve connectivity and strictly shrink the sum of
-    * edge endpoints until the fixpoint, which gives the same cheap
-    * single-aggregate convergence probe as the label loop. Edges stay
-    * canonical (u > v), deduped per round; per-round state is one
-    * edge frame (localCheckpoint'ed — same lineage-truncation
-    * reasoning as the label loop).
-    *
-    * Round complexity: O(log² n) worst-case vs pointer jumping's
-    * O(log diameter) — but each round is 2 shuffles on the CURRENT
-    * edge frame (which shrinks toward one edge per non-root node)
-    * vs the label loop's 3 on a constant-width frame. Which wins is
-    * an empirical question per graph shape; see SCALE_SWEEP.md for
-    * the x50 dedup-graph measurement.
-    */
-  def connectedComponentsStars(pairs: DataFrame, aCol: String, bCol: String,
-                               maxIters: Int = 50): DataFrame = {
-    val e0 = pairs.select(col(aCol).cast("long").as("src"),
-      col(bCol).cast("long").as("dst"))
-    // CacheScope-tracked (not a bare .persist()): the node frame
-    // outlives this call inside the returned plan, so the host's
-    // clear() must be able to unpin it (same leak class as ADVICE r2)
-    val nodes = graft.CacheScope.persist(
-      e0.select(explode(array(col("src"), col("dst"))).as("node")).distinct())
-    var edges = e0.filter(col("src") =!= col("dst"))
-      .select(greatest(col("src"), col("dst")).as("u"),
-        least(col("src"), col("dst")).as("v"))
-      .distinct().localCheckpoint(true)
-    // monotone convergence probe: large-star/small-star only ever
-    // re-target edges at smaller minima, so sum(u)+sum(v) is
-    // non-increasing and stabilizes exactly at the fixpoint (the
-    // count rides along so an edge-count change can't alias a sum tie)
-    def probe(e: DataFrame): (java.math.BigDecimal, Long) = {
-      val r = e.agg(
-        F.sum((col("u") + col("v")).cast("decimal(38,0)")).as("s"),
-        F.count(lit(1)).as("c")).head
-      (r.getDecimal(0), r.getLong(1))
-    }
-    var prev = probe(edges)
-    var iters = 0
-    var done = prev._2 == 0L
-    while (!done && iters < maxIters) {
-      // large-star over the symmetric view: for node a, m = min(N(a) ∪ {a});
-      // connect larger neighbors b > a to m (b > a >= m, so (b, m) is canonical)
-      val sym = edges.select(col("u").as("a"), col("v").as("b"))
-        .union(edges.select(col("v").as("a"), col("u").as("b")))
-      val lmins = sym.groupBy("a").agg(F.min(col("b")).as("mb"))
-        .select(col("a"), least(col("mb"), col("a")).as("m"))
-      val large = sym.join(lmins, "a").filter(col("b") > col("a"))
-        .select(col("b").as("u"), col("m").as("v")).distinct()
-      // small-star on the canonical orientation: for node u, m = min of its
-      // smaller neighbors; re-target the rest of them at m, keep (u, m)
-      val smins = large.groupBy("u").agg(F.min(col("v")).as("m"))
-      val next = large.join(smins, "u")
-        .filter(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(smins.select(col("u"), col("m").as("v")))
-        .distinct()
-        .localCheckpoint(false)
-      val cur = probe(next)
-      edges = next
-      done = cur._1.compareTo(prev._1) == 0 && cur._2 == prev._2
-      prev = cur
-      iters += 1
-    }
-    if (!done && prev._2 != 0L)
-      throw new IllegalStateException(
-        s"connectedComponentsStars did not converge in $maxIters rounds " +
-          s"(probe $prev still moving) — broken fixpoint, not graph size.")
-    // fixpoint edge set is a star forest: non-roots point straight at
-    // their component minimum; roots (never on the u side) label themselves
-    val out = nodes
-      .join(edges.select(col("u").as("node"), col("v").as("component")),
-        Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("component"), col("node")).as("component"))
-    out
-  }
-
   /** Keep one document per near-duplicate component (the smallest id)
     * plus every document not mentioned in `pairs` — the "collapse
     * duplicates" end of a dedup pipeline. Anti-join on the loser set:

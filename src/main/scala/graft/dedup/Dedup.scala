@@ -195,8 +195,8 @@ object Dedup {
         .crossJoin(broadcast(sd.agg(count(lit(1)).as("_n")))))
     // bipartite volume: a surviving token contributes batchDf·storeDf
     // candidate rows
-    val capOk = capFilter(dfTbl, dfCap, relDfCap, candidateBudget,
-      "Dedup.nearDupMatches", Some(col("bdf_") * col("df_")), guardStrict)
+    val capOk = graft.similarity.CandidateGuard.capFilter(dfTbl, dfCap, relDfCap,
+      candidateBudget, "Dedup.nearDupMatches", Some(col("bdf_") * col("df_")), guardStrict)
     // over-cap tokens leave the store side only: no batch token can
     // meet them there
     val bpre = inPrefix(bi.join(dfTbl.select("tok", "df_"), Seq("tok"), "left")
@@ -282,26 +282,6 @@ object Dedup {
       .filter(lit(scaledCut(threshold)) * n <= (n + 1 - col("_pos")) * lit(1000000L))
       .drop("_pos")
   }
-
-  /** The inverted-index plans' cap test: `df_ ≤` min(`dfCap`,
-    * `relDfCap`·`_n`), tightened by [[graft.similarity.CandidateGuard]]
-    * when the candidate volume over the tokens under the cap — Σ df_²,
-    * or Σ `volume` — blows `budget`; the guard probes `dfTbl`, one row
-    * per token carrying `df_` and `_n`. Uncapped calls (both caps at
-    * their no-op values) get `true` and run no probe.
-    */
-  private def capFilter(dfTbl: DataFrame, dfCap: Long, relDfCap: Double,
-                        budget: Long, opName: String, volume: Option[Column],
-                        strict: Boolean): Column =
-    if (dfCap == Long.MaxValue && relDfCap.isNaN) lit(true)
-    else {
-      val effCap =
-        if (relDfCap.isNaN) lit(dfCap)
-        else least(lit(dfCap), floor(lit(relDfCap) * col("_n")))
-      col("df_") <= graft.similarity.CandidateGuard
-        .resolve(dfTbl, col("df_"), effCap, budget, opName, volume, strict)
-        .map(c => least(effCap, lit(c))).getOrElse(effCap)
-    }
 
   /** The ≤64-word bitmap plan of [[jaccardJoin]], [[nearDupMatches]]
     * and [[minhashPairs]]: the sets of `a` and `b`, exploded
@@ -898,8 +878,8 @@ object Dedup {
     // it, the prefix ranking joins it.
     val dfTbl = graft.CacheScope.persist(inv.groupBy("tok").agg(count(lit(1)).as("df_"))
       .crossJoin(broadcast(docs.agg(count(lit(1)).as("_n")))))
-    val capOk = capFilter(dfTbl, dfCap, relDfCap, candidateBudget,
-      "Dedup.jaccardJoin", None, guardStrict)
+    val capOk = graft.similarity.CandidateGuard.capFilter(dfTbl, dfCap, relDfCap,
+      candidateBudget, "Dedup.jaccardJoin", None, guardStrict)
     val pre = inPrefix(inv.join(dfTbl, "tok"), "id", "sz", threshold)
       .filter(capOk).select("tok", "id", "sz")
     pre.toDF("tok", "id_a", "sz_a").join(pre.toDF("tok", "id_b", "sz_b"), "tok")

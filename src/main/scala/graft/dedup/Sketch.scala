@@ -33,25 +33,6 @@ object Sketch {
   def contentHashHex(c: Column): Column =
     substring(md5(regexp_replace(lower(trim(c)), "\\s+", " ")), 1, 15)
 
-  /** KMV overlap estimate of corpora `a` and `b`: ONE summary row
-    * (k, k_used, inter_cnt, j_est, union_est[, j_exact,
-    * union_exact]) where j_est = |bottom-k(A∪B) ∩ A∩B| / k_used and
-    * union_est = (k_used−1)/U_(k) with U_(k) the k-th smallest hash
-    * mapped into [0,1) over the 16^15 hash space (guarded to ≥2^−60
-    * so the all-zero hash cannot divide by zero). k_used < k iff the
-    * union has fewer than k distinct contents (then the sketch IS
-    * the union and j_est/union_est are exact by construction).
-    *
-    * When k_used < k the sketch saw the ENTIRE union, so j_est is the
-    * exact Jaccard and union_est reports k_used itself (the (k−1)/U_(k)
-    * estimator is only for the truncated case — applied to a complete
-    * set it would be biased low by one element and by hash luck).
-    *
-    * `withExact = true` additionally computes the exact Jaccard and
-    * union cardinality from the merged membership frame (one extra
-    * full aggregation — the gate/diagnostic flavor; production
-    * default false keeps the whole result k-bounded).
-    */
   /** Cross-SOURCE duplication matrix — the dataset-card answer to
     * "which of my sources are copies of each other" asked BEFORE
     * committing to cross-source dedup (CommonCrawl snapshots overlap
@@ -93,17 +74,17 @@ object Sketch {
   /** Theta-sketch source set algebra (SURVEY §2 D83) — the sketch
     * answer to the questions [[sourceOverlapMatrix]] answers exactly:
     * per-source mergeable theta sketches of normalized content
-    * (ONE map-side-combined aggregation over the corpus), then the
-    * FULL pairwise algebra — distinct counts, union, intersection,
+    * (ONE map-side-combined `theta_sketch_agg` over the corpus), then
+    * the FULL pairwise algebra — distinct counts, union, intersection,
     * and both set differences — composed on the bounded per-source
-    * frame via [[graft.functions.ThetaSetOp]], plus one `__all__`
-    * row carrying the union over every source (the
-    * profile-over-snapshot-unions path). Unlike the exact matrix,
-    * the sketches PERSIST: tomorrow's snapshot sketches once and
-    * every historical pairwise question re-answers from the
-    * dimension frame without re-scanning 100 TB of history; and
-    * unlike HLL (D64), intersection/difference are first-class
-    * rather than inclusion-exclusion on union estimates.
+    * frame with Spark's `theta_union` / `theta_intersection` /
+    * `theta_difference`, plus one `__all__` row carrying the union
+    * over every source (the profile-over-snapshot-unions path).
+    * Unlike the exact matrix, the sketches PERSIST: tomorrow's
+    * snapshot sketches once and every historical pairwise question
+    * re-answers from the dimension frame without re-scanning 100 TB
+    * of history; and unlike HLL (D64), intersection/difference are
+    * first-class rather than inclusion-exclusion on union estimates.
     *
     * Determinism: exact regime (per-source distinct ≤ 2^lgK) gives
     * exact integer counts, order- and engine-independent — the
@@ -114,34 +95,56 @@ object Sketch {
     */
   def thetaSourceAlgebra(df: DataFrame, textCol: String, sourceCol: String,
                          lgK: Int = 16): DataFrame = {
-    import graft.functions.{ThetaEstimate, ThetaMergeAgg, ThetaSetOp, ThetaSketchAgg}
-    def est(c: Column) = round(ThetaEstimate(c)).cast("long")
+    // theta_sketch_agg plans any lgK and rejects it only inside a task
+    require(lgK >= 4 && lgK <= 26, s"theta lgK out of range [4,26]: $lgK")
     val sk = graft.CacheScope.persist(
       df.groupBy(col(sourceCol).cast("string").as("src"))
-        .agg(ThetaSketchAgg(contentHashHex(col(textCol)), lgK).as("sk")))
+        .agg(theta_sketch_agg(contentHashHex(col(textCol)), lgK).as("sk")))
+    // unions at lgK 26 (the library max): the default 2^12 nominal
+    // entries would DOWNSAMPLE an exact union of larger exact inputs
+    // (x10 regression: a 4352-distinct pair union estimated 4336), and
+    // merging at the per-source lgK would do the same once TOTAL
+    // distinct passes 2^lgK. Memory grows only with retained entries,
+    // which the inputs bound, so the result stays exact whenever every
+    // input is.
     val pairs = sk
       .join(sk.select(col("src").as("src_b"), col("sk").as("sk_b")),
         col("src") < col("src_b"))
       .select(col("src").as("source_a"), col("src_b").as("source_b"),
-        est(col("sk")).as("distinct_a"),
-        est(col("sk_b")).as("distinct_b"),
-        est(ThetaSetOp(col("sk"), col("sk_b"), "union")).as("union_cnt"),
-        est(ThetaSetOp(col("sk"), col("sk_b"), "intersect")).as("inter_cnt"),
-        est(ThetaSetOp(col("sk"), col("sk_b"), "anotb")).as("a_not_b"),
-        est(ThetaSetOp(col("sk_b"), col("sk"), "anotb")).as("b_not_a"))
-    // lgK 26 (library max) for the all-source union — merging at the
-    // per-source lgK would downsample once TOTAL distinct passes
-    // 2^lgK even though every input is exact (the same regression
-    // class the ThetaSetOp union fix addressed); memory grows only
-    // with retained entries, which the inputs bound
-    val total = sk.agg(ThetaMergeAgg(col("sk"), 26).as("u"))
+        theta_sketch_estimate(col("sk")).as("distinct_a"),
+        theta_sketch_estimate(col("sk_b")).as("distinct_b"),
+        theta_sketch_estimate(theta_union(col("sk"), col("sk_b"), 26)).as("union_cnt"),
+        theta_sketch_estimate(theta_intersection(col("sk"), col("sk_b"))).as("inter_cnt"),
+        theta_sketch_estimate(theta_difference(col("sk"), col("sk_b"))).as("a_not_b"),
+        theta_sketch_estimate(theta_difference(col("sk_b"), col("sk"))).as("b_not_a"))
+    val total = sk.agg(theta_union_agg(col("sk"), 26).as("u"))
       .select(lit("__all__").as("source_a"), lit("__all__").as("source_b"),
-        est(col("u")).as("distinct_a"), est(col("u")).as("distinct_b"),
-        est(col("u")).as("union_cnt"), lit(-1L).as("inter_cnt"),
+        theta_sketch_estimate(col("u")).as("distinct_a"),
+        theta_sketch_estimate(col("u")).as("distinct_b"),
+        theta_sketch_estimate(col("u")).as("union_cnt"), lit(-1L).as("inter_cnt"),
         lit(-1L).as("a_not_b"), lit(-1L).as("b_not_a"))
     pairs.unionByName(total)
   }
 
+  /** KMV overlap estimate of corpora `a` and `b`: ONE summary row
+    * (k, k_used, inter_cnt, j_est, union_est[, j_exact,
+    * union_exact]) where j_est = |bottom-k(A∪B) ∩ A∩B| / k_used and
+    * union_est = (k_used−1)/U_(k) with U_(k) the k-th smallest hash
+    * mapped into [0,1) over the 16^15 hash space (guarded to ≥2^−60
+    * so the all-zero hash cannot divide by zero). k_used < k iff the
+    * union has fewer than k distinct contents (then the sketch IS
+    * the union and j_est/union_est are exact by construction).
+    *
+    * When k_used < k the sketch saw the ENTIRE union, so j_est is the
+    * exact Jaccard and union_est reports k_used itself (the (k−1)/U_(k)
+    * estimator is only for the truncated case — applied to a complete
+    * set it would be biased low by one element and by hash luck).
+    *
+    * `withExact = true` additionally computes the exact Jaccard and
+    * union cardinality from the merged membership frame (one extra
+    * full aggregation — the gate/diagnostic flavor; production
+    * default false keeps the whole result k-bounded).
+    */
   def corpusJaccardKmv(a: DataFrame, b: DataFrame, textCol: String,
                        k: Int = 1024, withExact: Boolean = false): DataFrame = {
     require(k > 1, s"k must be > 1, got $k")

@@ -15,11 +15,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * DataSketches `ItemsSketch`, the Misra–Gries / space-saving family)
   * as custom Catalyst aggregates — the "which values dominate"
   * counterpart of the HLL distinct (D64) and KLL quantile (D67)
-  * snapshot sketches (SURVEY §2 D69): Spark has no mergeable top-k
-  * aggregate at all, so "top tokens over any union of ingest
-  * snapshots" would re-scan history or keep exact per-item counts
-  * (unbounded state at 100 TB). ItemsSketch keeps ≤ maxMapSize
-  * counters, merges losslessly in the error-bound sense, and
+  * snapshot sketches (SURVEY §2 D69): "top tokens over any union of
+  * ingest snapshots" would otherwise re-scan history or keep exact
+  * per-item counts (unbounded state at 100 TB). Spark's mergeable
+  * `approx_top_k_accumulate` / `_combine` / `_estimate` return item
+  * counts only, with no lower/upper bound or maximum error, which
+  * the q_d69/q_d81 contract reports per item. ItemsSketch keeps
+  * ≤ maxMapSize counters, merges losslessly in the error-bound sense, and
   * guarantees `est − lb ≤ getMaximumError() ≤ 3.5·n/maxMapSize`
   * with NO_FALSE_NEGATIVES extraction returning every item whose
   * true count exceeds that error.
@@ -157,7 +159,7 @@ object FreqMergeAgg {
   * (item, est, lb, ub), NO_FALSE_NEGATIVES order (estimate desc).
   * Applied to the BOUNDED merged-sketch frame, so interpreted eval
   * (CodegenFallback) is deliberate — one heapify per dimension-sized
-  * row, never on a corpus scan (the KllQuantile rationale).
+  * row, never on a corpus scan.
   */
 case class FreqItems(child: Expression) extends UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {

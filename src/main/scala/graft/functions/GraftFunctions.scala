@@ -30,52 +30,33 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // opt-in naive-range-join rewrite (no-op unless
     // spark.graft.rangeJoin.bucketWidth is set — see RangeJoinRule)
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRule)
-    ext.injectFunction((
-      FunctionIdentifier("unicode_normalize"),
-      new ExpressionInfo(classOf[UnicodeNormalize].getName, "unicode_normalize"),
-      (children: Seq[Expression]) => UnicodeNormalizeBuilder(children)))
-    ext.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (children: Seq[Expression]) => DotProduct(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("tckn_valid"),
-      new ExpressionInfo(classOf[TcknValid].getName, "tckn_valid"),
-      (children: Seq[Expression]) => TcknValid(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("taxnum_valid"),
-      new ExpressionInfo(classOf[TaxNumValid].getName, "taxnum_valid"),
-      (children: Seq[Expression]) => TaxNumValid(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("luhn_valid"),
-      new ExpressionInfo(classOf[LuhnValid].getName, "luhn_valid"),
-      (children: Seq[Expression]) => LuhnValid(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("iban_valid"),
-      new ExpressionInfo(classOf[IbanValid].getName, "iban_valid"),
-      (children: Seq[Expression]) => IbanValid(children.head)))
+    GraftFunctions.Sql.foreach { case (name, cls, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
   }
 }
 
 object GraftFunctions {
+  /** Every graft SQL function: (name, expression class, builder). Both
+    * registration paths read this one table.
+    */
+  val Sql: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("unicode_normalize", classOf[UnicodeNormalize], UnicodeNormalizeBuilder(_)),
+    ("dot_product", classOf[DotProduct], c => DotProduct(c(0), c(1))),
+    ("tckn_valid", classOf[TcknValid], c => TcknValid(c.head)),
+    ("taxnum_valid", classOf[TaxNumValid], c => TaxNumValid(c.head)),
+    ("luhn_valid", classOf[LuhnValid], c => LuhnValid(c.head)),
+    ("iban_valid", classOf[IbanValid], c => IbanValid(c.head)))
+
   /** Idempotently registers graft SQL functions on a live session, so
     * `spark.sql("SELECT dot_product(a, b) ...")` works without
     * rebuilding the session with extensions.
     */
   def register(spark: SparkSession): Unit = {
-    org.apache.spark.sql.graft.SqlBridge.registerFunction(
-      spark, "dot_product", (children: Seq[Expression]) => DotProduct(children(0), children(1)))
-    org.apache.spark.sql.graft.SqlBridge.registerFunction(
-      spark, "tckn_valid", (children: Seq[Expression]) => TcknValid(children.head))
-    org.apache.spark.sql.graft.SqlBridge.registerFunction(
-      spark, "taxnum_valid", (children: Seq[Expression]) => TaxNumValid(children.head))
-    org.apache.spark.sql.graft.SqlBridge.registerFunction(
-      spark, "luhn_valid", (children: Seq[Expression]) => LuhnValid(children.head))
-    org.apache.spark.sql.graft.SqlBridge.registerFunction(
-      spark, "iban_valid", (children: Seq[Expression]) => IbanValid(children.head))
-    org.apache.spark.sql.graft.SqlBridge.registerFunction(
-      spark, "unicode_normalize",
-      (children: Seq[Expression]) => UnicodeNormalizeBuilder(children))
+    Sql.foreach { case (name, _, builder) =>
+      org.apache.spark.sql.graft.SqlBridge.registerFunction(spark, name, builder)
+    }
     // live-session parity for the extensions-injected optimizer rule
     // (still a no-op until spark.graft.rangeJoin.bucketWidth is set)
     if (!spark.experimental.extraOptimizations.contains(graft.plans.RangeJoinRule))

@@ -250,19 +250,19 @@ object Profiler {
   }
 
   /** MERGEABLE per-column QUANTILE sketches (Apache DataSketches KLL
-    * via the custom [[graft.functions.KllSketchAgg]] Catalyst
-    * aggregate) — the quantile counterpart of [[distinctSketches]]:
-    * Spark's GK `approx_percentile` has no user-facing mergeable
-    * form, so "median over any union of ingest snapshots" would need
-    * a history re-scan; KLL sketches merge losslessly
+    * via Spark's `kll_sketch_agg_double`) — the quantile counterpart
+    * of [[distinctSketches]]: Spark's GK `approx_percentile` has no
+    * mergeable form, so "median over any union of ingest snapshots"
+    * would need a history re-scan; KLL sketches merge losslessly
     * (~1.65% normalized rank error at k=200, certified by the
     * `q_d67` gate against exact order statistics). Output: tall
-    * (column, sketch BINARY), one row per column, one scan.
+    * (column, sketch BINARY), one row per column, one scan. KLL
+    * compaction is randomized and unseedable, so sketch BYTES are not
+    * run-deterministic; only rank-error claims are comparable.
     */
   def quantileSketches(df: DataFrame, cols: Seq[String],
                        k: Int = 200): DataFrame = {
-    val perCol = cols.map(c =>
-      graft.functions.KllSketchAgg(col(c).cast(DoubleType), k).as(c))
+    val perCol = cols.map(c => kll_sketch_agg_double(col(c).cast(DoubleType), k).as(c))
     df.agg(perCol.head, perCol.tail: _*)
       .select(explode(map(
         cols.flatMap(c => Seq(lit(c), col(c))).toIndexedSeq: _*))
@@ -271,7 +271,8 @@ object Profiler {
 
   /** Merge [[quantileSketches]] snapshot frames and extract
     * `quantiles`: (column, q, value). One bounded groupBy over
-    * ≤ |snapshots|·|cols| sketch rows; no corpus re-scan.
+    * ≤ |snapshots|·|cols| sketch rows; no corpus re-scan. A column
+    * with no non-null value has an empty sketch: its values are null.
     */
   def mergeQuantileEstimates(sketches: Seq[DataFrame],
                              quantiles: Seq[Double],
@@ -280,10 +281,12 @@ object Profiler {
     require(quantiles.nonEmpty, "mergeQuantileEstimates: need >= 1 quantile")
     val merged = sketches.reduce(_.unionByName(_))
       .groupBy(col("column"))
-      .agg(graft.functions.KllMergeAgg(col("sketch"), k).as("_m"))
+      .agg(kll_merge_agg_double(col("sketch"), k).as("_m"))
+    // kll_sketch_get_quantile_double throws on an empty sketch
     val qCols = quantiles.map(q => struct(
       lit(f"$q%.2f").as("q"),
-      graft.functions.KllQuantile(col("_m"), q).as("value")))
+      when(kll_sketch_get_n_double(col("_m")) > 0,
+        kll_sketch_get_quantile_double(col("_m"), lit(q))).as("value")))
     merged.select(col("column"), explode(array(qCols: _*)).as("_e"))
       .select(col("column"), col("_e.q").as("q"), col("_e.value").as("value"))
   }

@@ -91,6 +91,25 @@ object CandidateGuard {
     */
   val Ladder: Seq[Long] = Seq(4096L, 1024L, 256L, 64L, 16L)
 
+  /** The inverted-index plans' cap test: `df_ ≤` min(`dfCap`,
+    * `relDfCap`·`_n`), tightened by [[resolve]] when the candidate
+    * volume over the grams under the cap — Σ df_², or Σ `volume` —
+    * blows `budget`; the guard probes `dfTbl`, one row per gram
+    * carrying `df_` and `_n`. Uncapped calls (both caps at their no-op
+    * values) get `true` without evaluating `dfTbl` or running a probe.
+    */
+  def capFilter(dfTbl: => DataFrame, dfCap: Long, relDfCap: Double,
+                budget: Long, opName: String, volume: Option[Column],
+                strict: Boolean): Column =
+    if (dfCap == Long.MaxValue && relDfCap.isNaN) lit(true)
+    else {
+      val effCap =
+        if (relDfCap.isNaN) lit(dfCap)
+        else least(lit(dfCap), floor(lit(relDfCap) * col("_n")))
+      col("df_") <= resolve(dfTbl, col("df_"), effCap, budget, opName, volume, strict)
+        .map(c => least(effCap, lit(c))).getOrElse(effCap)
+    }
+
   /** Resolve the effective absolute cap for a capped inverted-index
     * plan.
     *

@@ -99,18 +99,8 @@ object StringSim {
       .withColumn("df_", count(lit(1)).over(Window.partitionBy("gram")))
       .crossJoin(broadcast(nDocs)))
 
-    val capOk =
-      if (dfCap == Long.MaxValue && relDfCap.isNaN) lit(true)
-      else {
-        val effCap = least(lit(dfCap),
-          floor(lit(if (relDfCap.isNaN) 1.0 else relDfCap) * col("_n")))
-        // volume guard: ONE single-row probe over the per-gram df table;
-        // tightens the cap when Σ_{df≤cap} df² blows the budget
-        val dfTbl = grams.select("gram", "df_", "_n").distinct()
-        col("df_") <= CandidateGuard.resolve(dfTbl, col("df_"), effCap,
-            candidateBudget, "StringSim.similarPairs", strict = guardStrict)
-          .map(c => least(effCap, lit(c))).getOrElse(effCap)
-      }
+    val capOk = CandidateGuard.capFilter(grams.select("gram", "df_", "_n").distinct(),
+      dfCap, relDfCap, candidateBudget, "StringSim.similarPairs", None, guardStrict)
 
     // ONE per-id aggregation: entries in (df_, gram) order; the map is
     // built from gram-sorted entries so every sum has a fixed order

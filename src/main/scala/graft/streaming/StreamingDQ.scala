@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, Trigger}
 import graft.quality.Rule
 
 /** Structured-Streaming data-quality monitoring: the reference's
@@ -452,57 +454,24 @@ object StreamingDQ {
     (slices, mx)
   }
 
-  /** Write `slices` as one parquet arrival file each (strictly
-    * increasing modification times = arrival order), then stream the
-    * directory with maxFilesPerTrigger=1 under Trigger.AvailableNow
-    * into an append-mode memory sink and return the emitted rows.
-    *
-    * The streaming query runs in a CLONED session (same
-    * SparkContext, own conf) with spark.sql.shuffle.partitions=4
-    * (r12 verdict #9): stateful micro-batches commit one state-store
-    * delta PER SHUFFLE PARTITION per batch, so the 32-partition
-    * session conf paid 32 store commits × batches of pure
-    * orchestration floor for report-sized state. 4 keeps the
-    * multi-partition code paths honest at an 8× lower floor;
-    * correctness is partitioning-invariant (the gates' 3×-stability
-    * protocol re-proves it each round).
+  /** Replay `slices` through `transform` into an append-mode memory
+    * sink (see [[replayStream]]) and return the emitted rows.
     */
   private def replayArrivals(slices: Seq[DataFrame],
                              schema: org.apache.spark.sql.types.StructType,
                              dir: String)(
                              transform: DataFrame => DataFrame): DataFrame = {
-    val spark = slices.head.sparkSession
-    import java.nio.file.{Files, Paths}
-    val root = Paths.get(dir)
-    def deleteRec(p: java.nio.file.Path): Unit = if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-    }
-    deleteRec(root)
-    Files.createDirectories(root)
-    writeArrivalFiles(slices, root)
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    val stream = ss.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
     val name = s"graft_replay_${replaySeq.incrementAndGet()}"
-    val ckpt = Files.createTempDirectory("graft_replay_ckpt")
-    val q = transform(stream).writeStream
-      .outputMode(OutputMode.Append).format("memory").queryName(name)
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // detach the result from the memory sink so the sink table and
-    // the checkpoint can be reclaimed immediately instead of
-    // accumulating one per replay in the session (r12 review);
-    // closed-window results are report-sized, so the local round
-    // trip is bounded
+    val ss = replayStream(slices, schema, dir)(stream => transform(stream).writeStream
+      .outputMode(OutputMode.Append).format("memory").queryName(name))
+    // detach the result from the memory sink so the sink table can be
+    // reclaimed immediately instead of accumulating one per replay in
+    // the session (r12 review); closed-window results are
+    // report-sized, so the local round trip is bounded
     val sink = ss.table(name)
     val rows = sink.collect()
     ss.catalog.dropTempView(name)
-    deleteRec(ckpt)
-    spark.createDataFrame(
+    slices.head.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), sink.schema)
   }
 
@@ -633,9 +602,8 @@ object StreamingDQ {
     if (fs.exists(outPath)) { fs.delete(outPath, true); () }
     val writer = new JsonlShardStreamWriter(
       outDir, rowsPerShard, Seq(col(numIdCol)), col(numIdCol), contentCol)
-    replayArrivalsForeachBatch(slices, df.schema, arrivalsDir) {
-      (batch, id) => writer.writeBatch(batch, id)
-    }
+    replayStream(slices, df.schema, arrivalsDir)(
+      _.writeStream.foreachBatch(writer.writeBatch _))
     writer.manifestDf(spark)
   }
 
@@ -714,9 +682,8 @@ object StreamingDQ {
     val hfs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     hfs.delete(root, true)
     val writer = new SnapshotCdcStreamWriter(tableDir, keyCols, versionCols, opCol)
-    replayArrivalsForeachBatch(slices, slices.head.schema, arrivalsDir) {
-      (batch, id) => writer.writeBatch(batch, id)
-    }
+    replayStream(slices, slices.head.schema, arrivalsDir)(
+      _.writeStream.foreachBatch(writer.writeBatch _))
     graft.sources.SnapshotLog.read(spark, tableDir)
   }
 
@@ -734,9 +701,7 @@ object StreamingDQ {
     * — which the watermark-advancement discipline depends on — is
     * slice-list-shaped, never data-shaped (spec-gated).
     */
-  private def writeArrivalFiles(slices: Seq[DataFrame],
-                                root: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
+  private def writeArrivalFiles(slices: Seq[DataFrame], root: Path): Unit = {
     val tmp = Files.createTempDirectory("graft_replay_tmp")
     val parts = graft.Par.map(slices.zipWithIndex) { case (slice, k) =>
       val stage = s"$tmp/b$k"
@@ -750,43 +715,50 @@ object StreamingDQ {
       Files.move(part.toPath, dest)
       dest.toFile.setLastModified(base + k * 60000L)
     }
-    // staging leftovers (_SUCCESS, .crc) — r12 review
-    if (Files.exists(tmp))
-      Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
+    deleteRec(tmp) // staging leftovers (_SUCCESS, .crc) — r12 review
   }
 
-  /** [[replayArrivals]]' file-arrival discipline with a foreachBatch
-    * SINK instead of the memory sink: one arrival file per slice,
-    * maxFilesPerTrigger=1, AvailableNow, shuffle partitions pinned to
-    * 4 in a cloned session (the r12 verdict #9 floor rule).
+  /** Write `slices` as one parquet arrival file each into `dir`
+    * (strictly increasing modification times = arrival order), then
+    * stream the directory with maxFilesPerTrigger=1 under
+    * Trigger.AvailableNow into the writer `sink` builds, wait for it
+    * to finish, drop its checkpoint and return the session it ran in.
+    *
+    * The streaming query runs in a CLONED session (same
+    * SparkContext, own conf) with spark.sql.shuffle.partitions=4
+    * (r12 verdict #9): stateful micro-batches commit one state-store
+    * delta PER SHUFFLE PARTITION per batch, so the 32-partition
+    * session conf paid 32 store commits × batches of pure
+    * orchestration floor for report-sized state. 4 keeps the
+    * multi-partition code paths honest at an 8× lower floor;
+    * correctness is partitioning-invariant (the gates' 3×-stability
+    * protocol re-proves it each round).
     */
-  private def replayArrivalsForeachBatch(slices: Seq[DataFrame],
-                                         schema: org.apache.spark.sql.types.StructType,
-                                         dir: String)(
-                                         batchFn: (DataFrame, Long) => Unit): Unit = {
-    val spark = slices.head.sparkSession
-    import java.nio.file.{Files, Paths}
+  private def replayStream(slices: Seq[DataFrame],
+                           schema: org.apache.spark.sql.types.StructType,
+                           dir: String)(
+                           sink: DataFrame => DataStreamWriter[Row]): SparkSession = {
     val root = Paths.get(dir)
-    def deleteRec(p: java.nio.file.Path): Unit = if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-    }
     deleteRec(root)
     Files.createDirectories(root)
     writeArrivalFiles(slices, root)
-    val ss = spark.newSession()
+    val ss = slices.head.sparkSession.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", "4")
     val stream = ss.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
     val ckpt = Files.createTempDirectory("graft_replay_ckpt")
-    val q = stream.writeStream
-      .foreachBatch(batchFn)
+    sink(stream)
       .option("checkpointLocation", ckpt.toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+      .awaitTermination()
     deleteRec(ckpt)
+    ss
+  }
+
+  private def deleteRec(p: Path): Unit = if (Files.exists(p)) {
+    Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+      .forEach(f => Files.delete(f))
   }
 
   /** Windowed per-type event counts (profiling a stream the way the

@@ -378,21 +378,34 @@ class DedupSimSpec extends SparkSpec {
     }
   }
 
-  test("connectedComponentsStars agrees with the label loop on chains, cliques, random graphs") {
+  test("connectedComponents paths agree on random, chain and clique graphs") {
     val rnd = new scala.util.Random(7)
     // 300-node random graph (sparse => many nontrivial components) +
     // a 40-node chain + a 12-clique + an isolated pair
     val randomEdges = Seq.fill(260)((rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
     val chain = (1000L until 1039L).map(i => (i, i + 1))
     val clique = (for (a <- 2000L until 2012L; b <- a + 1 until 2012L) yield (a, b)).toSeq
-    val pairs = (randomEdges ++ chain ++ clique :+ (5000L, 5001L)).toDF("id_a", "id_b")
-    val expect = graft.dedup.Components
-      .connectedComponents(pairs, "id_a", "id_b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val stars = graft.dedup.Components
-      .connectedComponentsStars(pairs, "id_a", "id_b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(stars == expect)
+    val edges = randomEdges ++ chain ++ clique :+ (5000L, 5001L)
+    // reference: min node id per component by repeated relaxation
+    val nodes = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
+    var lbl = nodes.map(n => n -> n).toMap
+    var moved = true
+    while (moved) {
+      val next = edges.foldLeft(lbl) { case (m, (a, b)) =>
+        val lo = math.min(m(a), m(b)); m.updated(a, lo).updated(b, lo)
+      }
+      moved = next != lbl
+      lbl = next
+    }
+    val pairs = edges.toDF("id_a", "id_b")
+    // the driver union-find and the distributed label loop (forced by
+    // smallGraphMaxEdges = 0)
+    for (cap <- Seq(500000L, 0L)) {
+      val got = graft.dedup.Components
+        .connectedComponents(pairs, "id_a", "id_b", smallGraphMaxEdges = cap)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == lbl, s"cap=$cap")
+    }
   }
 
   test("connectedComponents fails loud when the round budget is exhausted") {

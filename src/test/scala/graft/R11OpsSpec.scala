@@ -414,15 +414,31 @@ class R11OpsSpec extends SparkSpec {
     assert(halves == whole)
   }
 
-  test("KllQuantile on an empty sketch is null; KllSketchAgg skips nulls") {
-    val df = Seq(Some(1.0), None, Some(3.0)).toDF("v")
-    val sk = df.agg(graft.functions.KllSketchAgg(col("v"), 200).as("s"))
-    val q = sk.select(graft.functions.KllQuantile(col("s"), 0.5).as("m")).collect().head
-    assert(!q.isNullAt(0) && (q.getDouble(0) == 1.0 || q.getDouble(0) == 3.0))
-    val empty = df.filter(col("v") < 0)
-      .agg(graft.functions.KllSketchAgg(col("v"), 200).as("s"))
-      .select(graft.functions.KllQuantile(col("s"), 0.5)).collect().head
-    assert(empty.isNullAt(0))
+  test("mergeQuantileEstimates: all-null column gives null; nulls are skipped") {
+    import graft.profile.Profiler
+    val df = Seq((Some(1.0), Option.empty[Double]), (None, None), (Some(3.0), None))
+      .toDF("v", "e")
+    val got = Profiler.mergeQuantileEstimates(
+        Seq(Profiler.quantileSketches(df, Seq("v", "e"))), Seq(0.5))
+      .collect().map(r => r.getString(0) -> r).toMap
+    // the KLL median of {1, 3}: the null row is not a value
+    assert(!got("v").isNullAt(2) && got("v").getDouble(2) == 1.0)
+    // an empty sketch has no quantile (kll_sketch_get_quantile_double
+    // would throw on it)
+    assert(got("e").isNullAt(2))
+  }
+
+  test("a DataSketches KllDoublesSketch merges with kll_sketch_agg_double to exact n") {
+    // snapshot sketches persisted from KllDoublesSketch bytes must keep
+    // merging with sketches Spark builds
+    val direct = org.apache.datasketches.kll.KllDoublesSketch.newHeapInstance(200)
+    (1 to 1000).foreach(i => direct.update(i.toDouble))
+    val fresh = (1 to 500).map(_.toDouble).toDF("v")
+      .agg(kll_sketch_agg_double(col("v"), 200).as("sketch"))
+    val n = Seq(direct.toByteArray).toDF("sketch").unionByName(fresh)
+      .agg(kll_sketch_get_n_double(kll_merge_agg_double(col("sketch"), 200)))
+      .head().getLong(0)
+    assert(n == 1500L)
   }
 
   // ---- D65 Bloom ingest guard ----

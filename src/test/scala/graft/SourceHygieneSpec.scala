@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `Par.scala` creates a thread pool, only `operators/Rank.scala`
   * reads partition ids and only `dedup/Dedup.scala` encodes token
   * bitmaps, once. No `CacheScope.persist` call drops the pin it
-  * returns.
+  * returns, and no file builds Theta or KLL sketches itself.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -65,6 +65,16 @@ class SourceHygieneSpec extends AnyFunSuite {
       if !before.contains("=") && !uses.exists(before.endsWith)
     } yield s"$f:${i + 1}: $code"
     assert(dropped.isEmpty, dropped.mkString("\n", "\n", ""))
+  }
+
+  test("no src/main file uses DataSketches theta or KLL directly") {
+    // Spark's theta_* and kll_* functions build, merge and read these
+    // sketches; graft's own copy of them is gone
+    val nowhere = "<no file>"
+    val hits = strayUses(Map(
+      "org.apache.datasketches.theta" -> nowhere,
+      "org.apache.datasketches.kll" -> nowhere))
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 
   test("the ≤64-word bitmap encoding is written once, in dedup/Dedup.scala") {

@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.dedup.Sketch
-import graft.functions.{ThetaEstimate, ThetaMergeAgg, ThetaSetOp, ThetaSketchAgg}
 
 /** D83 theta set algebra: exact-regime correctness vs brute force,
   * mergeability (the property the 100 TB story rides on), set-op
-  * composition, estimation-regime published bounds, and validation.
+  * composition, estimation-regime published bounds, validation, and
+  * that sketches written by DataSketches directly still merge.
   */
 class ThetaSpec extends SparkSpec {
   import spark.implicits._
@@ -33,26 +33,24 @@ class ThetaSpec extends SparkSpec {
   test("theta sketches are mergeable: union of per-slice sketches == whole-corpus sketch") {
     val docs = (0 until 300).map(i => (i % 7, s"content ${i % 120}")).toDF("slice", "text")
     val perSlice = docs.groupBy(col("slice"))
-      .agg(ThetaSketchAgg(col("text"), 12).as("sk"))
-    val merged = perSlice.agg(
-      round(ThetaEstimate(ThetaMergeAgg(col("sk"), 12))).cast("long").as("est"))
+      .agg(theta_sketch_agg(col("text"), 12).as("sk"))
+    val merged = perSlice.agg(theta_sketch_estimate(theta_union_agg(col("sk"), 12)))
       .head().getLong(0)
-    val whole = docs.agg(
-      round(ThetaEstimate(ThetaSketchAgg(col("text"), 12))).cast("long").as("est"))
+    val whole = docs.agg(theta_sketch_estimate(theta_sketch_agg(col("text"), 12)))
       .head().getLong(0)
     assert(merged == 120L && whole == 120L)
   }
 
-  test("ThetaSetOp composes: estimate(op(op(a,b),c)) on the result sketch") {
+  test("theta_union then theta_intersection composes on the result sketch") {
     // (A ∪ B) ∩ C where A={0..49}, B={30..79}, C={60..99} → {60..79} = 20
     def sk(lo: Int, hi: Int) = (lo until hi).map(i => s"x$i").toDF("t")
-      .agg(ThetaSketchAgg(col("t"), 12).as("sk"))
+      .agg(theta_sketch_agg(col("t"), 12).as("sk"))
     val joined = sk(0, 50).select(col("sk").as("a"))
       .crossJoin(sk(30, 80).select(col("sk").as("b")))
       .crossJoin(sk(60, 100).select(col("sk").as("c")))
-    val got = joined.select(
-      round(ThetaEstimate(ThetaSetOp(ThetaSetOp(col("a"), col("b"), "union"),
-        col("c"), "intersect"))).cast("long")).head().getLong(0)
+    val got = joined.select(theta_sketch_estimate(
+      theta_intersection(theta_union(col("a"), col("b"), 26), col("c"))))
+      .head().getLong(0)
     assert(got == 20L)
   }
 
@@ -62,7 +60,7 @@ class ThetaSpec extends SparkSpec {
     // hold instead (same scheme as D69's purge-regime spec).
     val n = 50000
     val bytes = (0 until n).map(i => s"item $i").toDF("t")
-      .agg(ThetaSketchAgg(col("t"), 8).as("sk"))
+      .agg(theta_sketch_agg(col("t"), 8).as("sk"))
       .head().getAs[Array[Byte]](0)
     val s = org.apache.datasketches.theta.Sketches.heapifySketch(
       org.apache.datasketches.memory.Memory.wrap(bytes))
@@ -71,15 +69,31 @@ class ThetaSpec extends SparkSpec {
     assert(math.abs(s.getEstimate - n) / n < 0.25, "estimate grossly off")
   }
 
-  test("validation: lgK range and op names fail driver-side") {
-    intercept[IllegalArgumentException] {
-      graft.functions.ThetaSketchAgg(
-        org.apache.spark.sql.graft.SqlBridge.expression(col("x")), 2)
+  test("thetaSourceAlgebra(lgK = 2) throws before any job") {
+    val df = Seq(("A", "doc")).toDF("source", "text")
+    // theta_sketch_agg itself plans lgK 2 and fails only inside a task
+    df.agg(theta_sketch_agg(col("text"), 2)).queryExecution.executedPlan
+    // the operator builds its frames lazily, so only a driver-side
+    // check can throw from the call itself
+    val e = intercept[IllegalArgumentException] {
+      Sketch.thetaSourceAlgebra(df, "text", "source", lgK = 2)
     }
-    intercept[IllegalArgumentException] {
-      graft.functions.ThetaSetOp(
-        org.apache.spark.sql.graft.SqlBridge.expression(col("x")),
-        org.apache.spark.sql.graft.SqlBridge.expression(col("y")), "xor")
-    }
+    assert(e.getMessage.contains("lgK out of range"))
+  }
+
+  test("a DataSketches UpdateSketch of strings merges with theta_sketch_agg exactly") {
+    // the compact bytes of UpdateSketch.update(String) are the format
+    // snapshot sketches were persisted in; Spark hashes the same UTF-8
+    // bytes, so overlapping strings must collapse in the union
+    val direct = org.apache.datasketches.theta.UpdateSketch.builder()
+      .setNominalEntries(4096).build()
+    (0 until 300).foreach(i => direct.update(s"doc $i"))
+    val old = Seq(direct.compact().toByteArray).toDF("sk")
+    val fresh = (200 until 500).map(i => s"doc $i").toDF("t")
+      .agg(theta_sketch_agg(col("t"), 12).as("sk"))
+    val got = old.unionByName(fresh)
+      .agg(theta_sketch_estimate(theta_union_agg(col("sk"), 26)))
+      .head().getLong(0)
+    assert(got == 500L)
   }
 }

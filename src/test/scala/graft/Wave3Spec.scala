@@ -652,17 +652,15 @@ class Wave3Spec extends SparkSpec {
   }
 
   test("KS on the KLL quantile grid approximates exact within 2*eps") {
-    import graft.functions.{KllRank, KllSketchAgg}
     val a = (1 to 5000).map(_.toDouble).toDF("v")
     val b = (1 to 5000).map(i => i.toDouble + 1000).toDF("v")
     // exact KS = 1000/5000 = 0.2 (pure shift)
-    def sketch(df: org.apache.spark.sql.DataFrame): Array[Byte] =
-      df.agg(KllSketchAgg(col("v"), 200)).collect()(0).getAs[Array[Byte]](0)
-    val (sa, sb) = (sketch(a), sketch(b))
-    val grid = (500 to 5500 by 250).map(_.toDouble).toDF("g")
-    val approx = grid.select(
-      abs(KllRank(lit(sa), col("g")) - KllRank(lit(sb), col("g"))).as("d"))
-      .agg(max(col("d"))).collect()(0).getDouble(0)
+    val grid = (500 to 5500 by 250).map(_.toDouble).toArray
+    // the rank argument must be foldable: the whole grid in one literal
+    def ranks(df: org.apache.spark.sql.DataFrame): Seq[Double] =
+      df.agg(kll_sketch_get_rank_double(kll_sketch_agg_double(col("v"), 200), lit(grid)))
+        .head().getSeq[Double](0)
+    val approx = ranks(a).zip(ranks(b)).map { case (x, y) => math.abs(x - y) }.max
     assert(math.abs(approx - 0.2) <= 2 * 0.0165, s"grid KS $approx vs exact 0.2")
   }
 
