@@ -31,11 +31,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * dropping a commit — so that capability/config is a DEPLOYMENT
   * PRECONDITION, not something this code can conjure (r15 advice
   * #5). Where it holds, two racing committers produce one winner and
-  * one loud `FileAlreadyExistsException`, which [[append]]/
-  * [[deleteRange]]/[[updateRange]]/[[mergeInto]] absorb with a
-  * bounded rebase-and-retry loop (r16 — the Delta protocol's
+  * one loud `FileAlreadyExistsException`, which every commit absorbs
+  * with a bounded rebase-and-retry loop (r16 — the Delta protocol's
   * optimistic-concurrency story; non-rebasable overlap raises
   * `ConcurrentModificationException`).
+  *
+  * Every commit that REWRITES files — [[deleteRange]]/[[updateRange]]
+  * and their string flavors, [[mergeInto]], [[compactInPlace]] and
+  * [[compactPartitionInPlace]] — goes through one copy-on-write core,
+  * `rewriteCommit`, whose scaladoc states the conflict and carry rule
+  * once; the operations differ only in which files they touch and
+  * what they make of those files' rows. Every read of a version's
+  * rows goes through one committed-schema reader, `readUnder`.
   *
   * Data files live under `data-<uuid>/` subdirectories written by
   * Spark's parquet committer (each commit gets a FRESH subdir, so
@@ -78,6 +85,9 @@ object SnapshotLog {
                             meta: Map[String, String] = Map.empty,
                             strStats: Map[String, Map[String, (String, String)]] = Map.empty)
 
+  /** Per-file column bounds: `file -> column -> (min, max)`. */
+  private type Bounds[A] = Map[String, Map[String, (A, A)]]
+
   private def logDir(dir: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(dir, LogDirName)
 
@@ -87,6 +97,26 @@ object SnapshotLog {
   private def fs(spark: SparkSession, dir: String): org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The table root as a fully qualified path: manifest names are
+    * relative to it.
+    */
+  private def qualified(spark: SparkSession, dir: String): org.apache.hadoop.fs.Path =
+    fs(spark, dir).makeQualified(new org.apache.hadoop.fs.Path(dir))
+
+  /** Absolute data-file path → the table-relative name a manifest
+    * lists.
+    */
+  private def toRel(spark: SparkSession, dir: String): String => String = {
+    val base = qualified(spark, dir).toString
+    abs => abs.stripPrefix(base).stripPrefix("/")
+  }
+
+  private def readBytes(f: org.apache.hadoop.fs.FileSystem,
+                        p: org.apache.hadoop.fs.Path): Array[Byte] = {
+    val in = f.open(p)
+    try in.readAllBytes() finally in.close()
+  }
 
   private val VersionRe = "v(\\d{20})\\.json".r
 
@@ -132,16 +162,8 @@ object SnapshotLog {
   private def readCheckpointHint(f: org.apache.hadoop.fs.FileSystem,
                                  dir: String): Option[Long] =
     try {
-      val in = f.open(checkpointFile(dir))
-      val bytes =
-        try {
-          val bos = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](256)
-          var n = in.read(buf)
-          while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-          bos.toByteArray
-        } finally in.close()
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
+      val node = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(readBytes(f, checkpointFile(dir)))
       val v = node.path("version")
       if (v.isMissingNode) None else Some(v.asLong())
     } catch { case _: Exception => None } // absent/torn/garbage: hint only
@@ -191,75 +213,50 @@ object SnapshotLog {
           s"under $dir")
       version
     }
-    val in = f.open(versionFile(dir, v))
-    val bytes =
-      try {
-        val bos = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-        bos.toByteArray
-      } finally in.close()
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
+    import scala.jdk.CollectionConverters._
+    val root = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(readBytes(f, versionFile(dir, v)))
     require(root.path("format").asText() == "graft-log-v1",
       s"[graft] SnapshotLog: unrecognized version-file format at v$v")
-    val it = root.path("files").elements()
-    val rel = Seq.newBuilder[String]
-    while (it.hasNext) rel += it.next().asText()
-    val base = f.makeQualified(new org.apache.hadoop.fs.Path(dir))
+    val base = qualified(spark, dir)
     val abs = (r: String) => new org.apache.hadoop.fs.Path(base, r).toString
-    val stats = {
-      val node = root.path("stats")
-      if (node.isMissingNode) Map.empty[String, Map[String, (Long, Long)]]
-      else {
-        val b = Map.newBuilder[String, Map[String, (Long, Long)]]
-        val fit = node.fields()
-        while (fit.hasNext) {
-          val e = fit.next()
-          val cb = Map.newBuilder[String, (Long, Long)]
-          val cit = e.getValue.fields()
-          while (cit.hasNext) {
-            val ce = cit.next()
-            cb += ce.getKey -> (ce.getValue.get(0).asLong(),
-              ce.getValue.get(1).asLong())
-          }
-          b += abs(e.getKey) -> cb.result()
-        }
-        b.result()
-      }
-    }
-    val meta = {
-      val node = root.path("meta")
-      if (node.isMissingNode) Map.empty[String, String]
-      else {
-        val b = Map.newBuilder[String, String]
-        val mit = node.fields()
-        while (mit.hasNext) { val e = mit.next(); b += e.getKey -> e.getValue.asText() }
-        b.result()
-      }
-    }
-    val strStats = {
-      val node = root.path("strStats")
-      if (node.isMissingNode) Map.empty[String, Map[String, (String, String)]]
-      else {
-        val b = Map.newBuilder[String, Map[String, (String, String)]]
-        val fit = node.fields()
-        while (fit.hasNext) {
-          val e = fit.next()
-          val cb = Map.newBuilder[String, (String, String)]
-          val cit = e.getValue.fields()
-          while (cit.hasNext) {
-            val ce = cit.next()
-            cb += ce.getKey -> (ce.getValue.get(0).asText(),
-              ce.getValue.get(1).asText())
-          }
-          b += abs(e.getKey) -> cb.result()
-        }
-        b.result()
-      }
-    }
-    Snapshot(v, rel.result().map(abs), stats, meta, strStats)
+    val files = root.path("files").elements().asScala.map(n => abs(n.asText())).toSeq
+    val meta = root.path("meta").properties().asScala.iterator
+      .map(e => e.getKey -> e.getValue.asText()).toMap
+    Snapshot(v, files, boundsFrom(root, "stats", abs)(_.asLong()), meta,
+      boundsFrom(root, "strStats", abs)(_.asText()))
   }
+
+  /** The manifest codec for both stat maps: `field` is an object of
+    * file → column → `[min, max]`, files keyed by their table-relative
+    * name and columns in name order. An absent field is an empty map;
+    * files without an entry are written without one.
+    */
+  private def boundsFrom[A](root: com.fasterxml.jackson.databind.JsonNode,
+                            field: String, abs: String => String)(
+                            value: com.fasterxml.jackson.databind.JsonNode => A)
+      : Bounds[A] = {
+    import scala.jdk.CollectionConverters._
+    root.path(field).properties().asScala.iterator.map { e =>
+      abs(e.getKey) -> e.getValue.properties().asScala.iterator.map { c =>
+        c.getKey -> (value(c.getValue.get(0)), value(c.getValue.get(1)))
+      }.toMap
+    }.toMap
+  }
+
+  private def putBounds[A](root: com.fasterxml.jackson.databind.node.ObjectNode,
+                           field: String, relFiles: Seq[String], bounds: Bounds[A])(
+                           add: (com.fasterxml.jackson.databind.node.ArrayNode, A) => Unit)
+      : Unit =
+    if (bounds.nonEmpty) {
+      val sn = root.putObject(field)
+      relFiles.filter(bounds.contains).foreach { r =>
+        val fn = sn.putObject(r)
+        bounds(r).toSeq.sortBy(_._1).foreach { case (c, (lo, hi)) =>
+          val a = fn.putArray(c); add(a, lo); add(a, hi)
+        }
+      }
+    }
 
   /** Read a snapshot (latest by default) — exactly its file list,
     * under the MANIFEST-RECORDED schema (r15 schema evolution, the
@@ -271,24 +268,32 @@ object SnapshotLog {
     */
   def read(spark: SparkSession, dir: String, version: Long = -1L): DataFrame = {
     val s = snapshot(spark, dir, version)
-    s.meta.get(SchemaKey) match {
-      case Some(ddl) =>
-        val sch = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-        if (s.files.isEmpty)
-          // a legal empty version (e.g. a deleteRange that removed the
-          // last row) reads as zero rows UNDER THE COMMITTED SCHEMA —
-          // r15 advice #4: a full-table delete must not make the table
-          // unreadable until the next write
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
-        else spark.read.schema(sch).parquet(s.files: _*)
-      case None =>
-        require(s.files.nonEmpty,
-          s"[graft] SnapshotLog: version ${s.version} has no data files " +
-            "and no recorded schema to read an empty table under")
-        spark.read.parquet(s.files: _*)
-    }
+    readUnder(spark, s, s.files)
   }
+
+  /** The ONE committed-schema reader: `files` (some of `sn`'s) under
+    * `sn`'s manifest-recorded schema. An empty `files` reads as zero
+    * rows under that schema — a legal empty version (e.g. a
+    * deleteRange that removed the last row) must not make the table
+    * unreadable until the next write (r15 advice #4). Without a
+    * recorded schema (pre-r15) parquet infers it, and an empty `files`
+    * reads as `like` filtered to nothing — or is refused when there
+    * is nothing to infer from.
+    */
+  private def readUnder(spark: SparkSession, sn: Snapshot, files: Seq[String],
+                        like: => Seq[String] = Nil): DataFrame =
+    sn.meta.get(SchemaKey).map(org.apache.spark.sql.types.StructType.fromDDL) match {
+      case Some(sch) if files.isEmpty =>
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
+      case Some(sch) => spark.read.schema(sch).parquet(files: _*)
+      case None if files.nonEmpty => spark.read.parquet(files: _*)
+      case None =>
+        val from = like
+        require(from.nonEmpty,
+          s"[graft] SnapshotLog: version ${sn.version} has no data files " +
+            "and no recorded schema to read an empty table under")
+        spark.read.parquet(from: _*).filter(org.apache.spark.sql.functions.lit(false))
+    }
 
   /** The manifest meta key carrying the committed schema DDL. */
   val SchemaKey = "schemaDdl"
@@ -336,11 +341,7 @@ object SnapshotLog {
     * there first; [[commitRebase]] absorbs those.
     */
   private def writeVersionFileAt(spark: SparkSession, dir: String, next: Long,
-                                 relFiles: Seq[String],
-                                 stats: Map[String, Map[String, (Long, Long)]],
-                                 meta: Map[String, String],
-                                 strStats: Map[String, Map[String, (String, String)]]
-                                   = Map.empty): Unit = {
+                                 files: FileSet, meta: Map[String, String]): Unit = {
     val f = fs(spark, dir)
     f.mkdirs(logDir(dir))
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -348,25 +349,9 @@ object SnapshotLog {
     root.put("format", "graft-log-v1")
     root.put("version", next)
     val arr = root.putArray("files")
-    relFiles.foreach { r => arr.add(r); () }
-    if (stats.nonEmpty) {
-      val sn = root.putObject("stats")
-      relFiles.filter(stats.contains).foreach { r =>
-        val fn = sn.putObject(r)
-        stats(r).toSeq.sortBy(_._1).foreach { case (c, (lo, hi)) =>
-          val a = fn.putArray(c); a.add(lo); a.add(hi); ()
-        }
-      }
-    }
-    if (strStats.nonEmpty) {
-      val sn = root.putObject("strStats")
-      relFiles.filter(strStats.contains).foreach { r =>
-        val fn = sn.putObject(r)
-        strStats(r).toSeq.sortBy(_._1).foreach { case (c, (lo, hi)) =>
-          val a = fn.putArray(c); a.add(lo); a.add(hi); ()
-        }
-      }
-    }
+    files.rel.foreach { r => arr.add(r); () }
+    putBounds(root, "stats", files.rel, files.stats)(_.add(_))
+    putBounds(root, "strStats", files.rel, files.strStats)(_.add(_))
     if (meta.nonEmpty) {
       val mn = root.putObject("meta")
       meta.toSeq.sortBy(_._1).foreach { case (k2, v2) => mn.put(k2, v2); () }
@@ -396,31 +381,44 @@ object SnapshotLog {
     */
   private[graft] var raceTestHook: () => Unit = () => ()
 
+  /** Table-relative data files with their per-file stats — the file
+    * half of a version manifest.
+    */
+  private final case class FileSet(rel: Seq[String],
+                                   stats: Bounds[Long] = Map.empty,
+                                   strStats: Bounds[String] = Map.empty) {
+    def ++(o: FileSet): FileSet =
+      FileSet(rel ++ o.rel, stats ++ o.stats, strStats ++ o.strStats)
+  }
+
+  /** `sn`'s files other than `drop`, with both stat maps — what a
+    * commit carries forward without reading or writing them.
+    */
+  private def carried(sn: Snapshot, drop: Set[String], rel: String => String): FileSet = {
+    def keep[A](b: Bounds[A]): Bounds[A] =
+      b.collect { case (abs, m) if !drop(abs) => rel(abs) -> m }
+    FileSet(sn.files.filterNot(drop).map(rel), keep(sn.stats), keep(sn.strStats))
+  }
+
   /** The OPTIMISTIC-COMMIT loop (r16 — the missing half of the
     * exclusive-create story): `plan(latest)` turns the CURRENT latest
-    * snapshot (None on an empty table) into the (files, stats, meta)
-    * to commit as the next version; when the exclusive create loses a
+    * snapshot (None on an empty table) into the files and meta to
+    * commit as the next version; when the exclusive create loses a
     * race, the loop re-reads the new latest and RE-PLANS against it —
     * the Delta rebase. `plan` raises
     * `ConcurrentModificationException` itself when the new latest
-    * overlaps what the caller already rewrote (the conflict matrix's
-    * non-trivial case); data files are NEVER rewritten on retry, only
-    * the carry arithmetic re-derives. Bounded at 10 attempts with
-    * linear backoff — past that the original race loss rethrows.
+    * overlaps what the caller already rewrote (see [[rewriteCommit]]);
+    * data files are NEVER rewritten on retry, only the carry
+    * arithmetic re-derives. Bounded at 10 attempts with linear
+    * backoff — past that the original race loss rethrows.
     */
-  private final case class CommitPlan(
-      rel: Seq[String],
-      stats: Map[String, Map[String, (Long, Long)]],
-      meta: Map[String, String],
-      strStats: Map[String, Map[String, (String, String)]] = Map.empty)
-
   private def commitRebase(spark: SparkSession, dir: String)(
-      plan: Option[Snapshot] => CommitPlan): Long = {
+      plan: Option[Snapshot] => (FileSet, Map[String, String])): Long = {
     val maxAttempts = 10
     var attempt = 0
     while (true) {
       val latest = latestVersion(spark, dir).map(v => snapshot(spark, dir, v))
-      val p = plan(latest)
+      val (files, planMeta) = plan(latest)
       raceTestHook()
       val next = latest.map(_.version + 1L).getOrElse(0L)
       // C35k (r16): every commit stamps its wall-clock time, clamped
@@ -431,9 +429,9 @@ object SnapshotLog {
       val commitTime = math.max(System.currentTimeMillis(),
         latest.flatMap(_.meta.get(CommitTimeKey))
           .flatMap(t => scala.util.Try(t.toLong).toOption).getOrElse(0L))
-      val meta = p.meta + (CommitTimeKey -> commitTime.toString)
+      val meta = planMeta + (CommitTimeKey -> commitTime.toString)
       try {
-        writeVersionFileAt(spark, dir, next, p.rel, p.stats, meta, p.strStats)
+        writeVersionFileAt(spark, dir, next, files, meta)
         if (next % CheckpointInterval == 0L)
           writeCheckpointHint(fs(spark, dir), dir, next)
         return next
@@ -505,7 +503,7 @@ object SnapshotLog {
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import scala.jdk.CollectionConverters._
     val conf = spark.sessionState.newHadoopConf()
-    val base = fs(spark, dir).makeQualified(new org.apache.hadoop.fs.Path(dir))
+    val base = qualified(spark, dir)
     val perFileSeq = graft.Par.map(relFiles) { rel =>
       val in = HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(base, rel), conf)
@@ -574,7 +572,7 @@ object SnapshotLog {
       : (Map[String, Map[String, (Long, Long)]],
          Map[String, Map[String, (String, String)]]) = {
     import org.apache.spark.sql.functions._
-    val base = fs(spark, dir).makeQualified(new org.apache.hadoop.fs.Path(dir))
+    val base = qualified(spark, dir)
     val paths = relFiles.map(r => new org.apache.hadoop.fs.Path(base, r).toString)
     val df = spark.read.parquet(paths: _*)
     val strCols = statsCols.filter(c =>
@@ -651,39 +649,54 @@ object SnapshotLog {
     }
 
   /** Write `df` into a fresh uniquely-named data subdir and return
-    * the written parquet files' dir-relative names. With
-    * `partitionBy` set, files land under hive-style `_p=<value>/`
-    * subdirs keyed by that column's values — the partition column
-    * itself STAYS IN THE DATA (it is cloned into the throwaway `_p`
-    * path key), so reading an explicit file list needs no partition
-    * inference and every existing read path works unchanged; the
-    * path segment is purely the file→partition identity
-    * [[compactPartitionInPlace]] prunes on.
+    * the written parquet files' dir-relative names with their
+    * `statsCols` stats ([[collectStats]]). With `partitionBy` set,
+    * files land under hive-style `_p=<value>/` subdirs keyed by that
+    * column's values — the partition column itself STAYS IN THE DATA
+    * (it is cloned into the throwaway `_p` path key), so reading an
+    * explicit file list needs no partition inference and every
+    * existing read path works unchanged; the path segment is purely
+    * the file→partition identity [[compactPartitionInPlace]] prunes
+    * on.
     */
-  private def writeDataFiles(df: DataFrame, dir: String,
-                             partitionBy: Option[String] = None): Seq[String] = {
+  private def writeDataFiles(df: DataFrame, dir: String, partitionBy: Option[String],
+                             statsCols: Seq[String]): FileSet = {
     val sub = s"data-${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val target = new org.apache.hadoop.fs.Path(dir, sub)
     val f = fs(df.sparkSession, dir)
-    partitionBy match {
+    def list(d: org.apache.hadoop.fs.Path) =
+      Option(f.listStatus(d)).getOrElse(Array.empty).toSeq
+    def parquetIn(d: org.apache.hadoop.fs.Path, prefix: String) = list(d)
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .map(st => s"$prefix/${st.getPath.getName}")
+    val rel = partitionBy match {
       case None =>
         df.write.mode("overwrite").parquet(target.toString)
-        Option(f.listStatus(target)).getOrElse(Array.empty).toSeq
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-          .map(st => s"$sub/${st.getPath.getName}")
-          .sorted
+        parquetIn(target, sub).sorted
       case Some(c) =>
         df.withColumn("_p", org.apache.spark.sql.functions.col(c))
           .write.partitionBy("_p").mode("overwrite").parquet(target.toString)
-        Option(f.listStatus(target)).getOrElse(Array.empty).toSeq
+        list(target)
           .filter(st => st.isDirectory && st.getPath.getName.startsWith("_p="))
-          .flatMap { pd =>
-            Option(f.listStatus(pd.getPath)).getOrElse(Array.empty).toSeq
-              .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-              .map(st => s"$sub/${pd.getPath.getName}/${st.getPath.getName}")
-          }
+          .flatMap(pd => parquetIn(pd.getPath, s"$sub/${pd.getPath.getName}"))
           .sorted
     }
+    val (stats, strStats) = collectStats(df.sparkSession, dir, rel, statsCols)
+    FileSet(rel, stats, strStats)
+  }
+
+  /** The C30 compaction shaping ([[Sources.compactParquetByRows]]):
+    * `ceil(rows / targetRows)` output partitions — one count job —
+    * range-ordered on `sortCols` when given.
+    */
+  private def shaped(df: DataFrame, targetRows: Long, sortCols: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val n = df.count()
+    val nOut = math.max(1L, (n + targetRows - 1) / targetRows).toInt
+    if (sortCols.nonEmpty)
+      df.repartitionByRange(nOut, sortCols.map(col): _*)
+        .sortWithinPartitions(sortCols.map(col): _*)
+    else df.repartition(nOut)
   }
 
   /** The hive path segment's partition value for a data file written
@@ -716,13 +729,18 @@ object SnapshotLog {
     * manifest — the data-skipping index [[readPruned]] consults.
     */
   def write(df: DataFrame, dir: String, statsCols: Seq[String] = Nil,
-            meta: Map[String, String] = Map.empty): Long = {
-    val rel = writeDataFiles(df, dir)
-    val (stats, strStats) = collectStats(df.sparkSession, dir, rel, statsCols)
-    // REPLACE depends on nothing in the previous version: a lost race
-    // rebases to "take the next slot" with the same payload
+            meta: Map[String, String] = Map.empty): Long =
+    replace(df, dir, None, statsCols, meta)
+
+  /** The REPLACE commit behind [[write]] and [[writePartitionedBy]]:
+    * it depends on nothing in the previous version, so a lost race
+    * rebases to "take the next slot" with the same payload.
+    */
+  private def replace(df: DataFrame, dir: String, layout: Option[String],
+                      statsCols: Seq[String], meta: Map[String, String]): Long = {
+    val written = writeDataFiles(df, dir, layout, statsCols)
     commitRebase(df.sparkSession, dir) { _ =>
-      CommitPlan(rel, stats, meta + (SchemaKey -> df.schema.toDDL), strStats)
+      (written, meta + (SchemaKey -> df.schema.toDDL))
     }
   }
 
@@ -733,11 +751,8 @@ object SnapshotLog {
     */
   def append(df: DataFrame, dir: String, statsCols: Seq[String] = Nil): Long = {
     val spark = df.sparkSession
-    val base = fs(spark, dir).makeQualified(
-      new org.apache.hadoop.fs.Path(dir)).toString
-    def toRel(abs: String) = abs.stripPrefix(base).stripPrefix("/")
-    val newRel = writeDataFiles(df, dir)
-    val (newStats, newStr) = collectStats(spark, dir, newRel, statsCols)
+    val rel = toRel(spark, dir)
+    val written = writeDataFiles(df, dir, None, statsCols)
     // appends never conflict: a lost race rebases onto the NEW
     // latest's file set (blind append, the conflict matrix's trivial
     // row); the data files written above are reused as-is.
@@ -745,13 +760,8 @@ object SnapshotLog {
     // appender's (latest writer wins — adding a column evolves the
     // table, old files null-fill it on read; dropping one hides it)
     commitRebase(spark, dir) { latest =>
-      val prevRel = latest.map(_.files.map(toRel)).getOrElse(Seq.empty)
-      val prevStats = latest.map(_.stats.map { case (abs, m) => toRel(abs) -> m })
-        .getOrElse(Map.empty[String, Map[String, (Long, Long)]])
-      val prevStr = latest.map(_.strStats.map { case (abs, m) => toRel(abs) -> m })
-        .getOrElse(Map.empty[String, Map[String, (String, String)]])
-      CommitPlan(prevRel ++ newRel, prevStats ++ newStats,
-        Map(SchemaKey -> df.schema.toDDL), prevStr ++ newStr)
+      (latest.fold(FileSet(Nil))(carried(_, Set.empty, rel)) ++ written,
+        Map(SchemaKey -> df.schema.toDDL))
     }
   }
 
@@ -761,42 +771,18 @@ object SnapshotLog {
     * and commit them as the next version. Readers pinned to the old
     * version keep every file they resolved — the rewrite touches
     * nothing they reference; storage is reclaimed separately by
-    * [[vacuum]] once old readers have drained. Returns the new
-    * version.
+    * [[vacuum]] once old readers have drained. Only `statsCols` get
+    * stats on the new files. Returns the new version.
     */
   def compactInPlace(spark: SparkSession, dir: String, targetRows: Long,
                      sortCols: Seq[String] = Nil,
                      statsCols: Seq[String] = Nil): Long = {
     require(targetRows >= 1, s"targetRows must be >= 1, got $targetRows")
-    import org.apache.spark.sql.functions.col
-    val sn = snapshot(spark, dir)
-    val cur = read(spark, dir)
-    val n = cur.count()
-    val nOut = math.max(1L, (n + targetRows - 1) / targetRows).toInt
-    val shaped =
-      if (sortCols.nonEmpty)
-        cur.repartitionByRange(nOut, sortCols.map(col): _*)
-          .sortWithinPartitions(sortCols.map(col): _*)
-      else cur.repartition(nOut)
-    val rel = writeDataFiles(shaped, dir)
-    val (newStats, newStr) = collectStats(spark, dir, rel, statsCols)
-    // carry the previous meta forward (minus the schema, re-stamped):
-    // a maintenance commit must not reset stream watermarks like the
-    // CDC writer's batchId (r15 advice #3). A lost race rebases only
-    // when the racer left the FILE SET untouched (metadata-only
-    // commit) — compaction rewrote everything, so any concurrent data
-    // change conflicts.
-    commitRebase(spark, dir) { latestOpt =>
-      val latest = latestOpt.getOrElse(sn)
-      if (latest.version != sn.version &&
-          latest.files.toSet != sn.files.toSet)
-        throw new java.util.ConcurrentModificationException(
-          s"[graft] compactInPlace: table advanced from v${sn.version} to " +
-            s"v${latest.version} with a different file set while compacting — " +
-            "re-run against the new version")
-      CommitPlan(rel, newStats, latest.meta + (SchemaKey -> cur.schema.toDDL),
-        newStr)
-    }
+    // every file is touched, so only a metadata-only racer rebases;
+    // the schema is re-stamped from the rows read
+    rewriteCommit(spark, dir, "compactInPlace", snapshot(spark, dir), _.files,
+      statsCols, shape = Some((targetRows, sortCols)),
+      meta = Some(Map.empty))((_, rows) => rows)
   }
 
   /** C30g (r16): REPLACE commit under the hive-partitioned data
@@ -811,11 +797,7 @@ object SnapshotLog {
                          meta: Map[String, String] = Map.empty): Long = {
     require(df.columns.contains(partCol),
       s"[graft] writePartitionedBy: unknown partition column '$partCol'")
-    val rel = writeDataFiles(df, dir, partitionBy = Some(partCol))
-    val (stats, strStats) = collectStats(df.sparkSession, dir, rel, statsCols)
-    commitRebase(df.sparkSession, dir) { _ =>
-      CommitPlan(rel, stats, meta + (SchemaKey -> df.schema.toDDL), strStats)
-    }
+    replace(df, dir, Some(partCol), statsCols, meta)
   }
 
   /** C30g (r16): PARTITIONED live compaction — compact ONE hive
@@ -837,57 +819,16 @@ object SnapshotLog {
                               targetRows: Long, sortCols: Seq[String] = Nil,
                               statsCols: Seq[String] = Nil): Long = {
     require(targetRows >= 1, s"targetRows must be >= 1, got $targetRows")
-    import org.apache.spark.sql.functions.col
     val sn = snapshot(spark, dir)
     val unpartitioned = sn.files.filter(f => filePartition(f).isEmpty)
     require(unpartitioned.isEmpty,
       s"[graft] compactPartitionInPlace: ${unpartitioned.size} file(s) carry " +
         "no _p= partition segment — the table is not (fully) partition-" +
         "laid-out; write it with writePartitionedBy first")
-    def partFiles(s0: Snapshot) =
-      s0.files.filter(f => filePartition(f).contains(value))
-    val touchedAbs = partFiles(sn)
-    if (touchedAbs.isEmpty) return sn.version
-    val touched = touchedAbs.toSet
-    val base = fs(spark, dir).makeQualified(
-      new org.apache.hadoop.fs.Path(dir)).toString
-    def toRel(abs: String) = abs.stripPrefix(base).stripPrefix("/")
-    val reader = sn.meta.get(SchemaKey) match {
-      case Some(ddl) => spark.read.schema(
-        org.apache.spark.sql.types.StructType.fromDDL(ddl))
-        .parquet(touchedAbs: _*)
-      case None => spark.read.parquet(touchedAbs: _*)
-    }
-    val n = reader.count()
-    val nOut = math.max(1L, (n + targetRows - 1) / targetRows).toInt
-    val shaped =
-      if (sortCols.nonEmpty)
-        reader.repartitionByRange(nOut, sortCols.map(col): _*)
-          .sortWithinPartitions(sortCols.map(col): _*)
-      else reader.repartition(nOut)
-    val newRel = writeDataFiles(shaped, dir, partitionBy = Some(partCol))
-    val statCols = (sn.stats.values.flatMap(_.keys) ++
-      sn.strStats.values.flatMap(_.keys) ++ statsCols).toSeq.distinct.sorted
-    val (newStats, newStr) = collectStats(spark, dir, newRel, statCols)
-    commitRebase(spark, dir) { latestOpt =>
-      val latest = latestOpt.getOrElse(sn)
-      if (latest.version != sn.version) {
-        if (!touchedAbs.forall(latest.files.contains) ||
-            (partFiles(latest).toSet -- touched).nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"[graft] compactPartitionInPlace: partition '$value' changed " +
-              s"concurrently (table at v${latest.version}) — re-run")
-      }
-      val untouchedRelNow = latest.files.filterNot(touched).map(toRel)
-      val carriedNow = latest.stats.collect {
-        case (abs, m) if !touched(abs) => toRel(abs) -> m
-      }
-      val carriedStrNow = latest.strStats.collect {
-        case (abs, m) if !touched(abs) => toRel(abs) -> m
-      }
-      CommitPlan(untouchedRelNow ++ newRel, carriedNow ++ newStats,
-        latest.meta, carriedStrNow ++ newStr)
-    }
+    rewriteCommit(spark, dir, s"compactPartitionInPlace (partition '$value')", sn,
+      _.files.filter(f => filePartition(f).contains(value)),
+      tableStatCols(sn, statsCols), layout = Some(partCol),
+      shape = Some((targetRows, sortCols)))((_, rows) => rows)
   }
 
   /** Manifest-level DATA SKIPPING (r15 — the Delta/Iceberg core
@@ -906,41 +847,32 @@ object SnapshotLog {
                  lo: Long, hi: Long, version: Long = -1L): DataFrame = {
     import org.apache.spark.sql.functions.col
     val sn = snapshot(spark, dir, version)
-    val kept = prunedFiles(sn, colName, lo, hi)
     // the manifest-recorded schema is table truth here exactly as in
     // [[read]] — r15 advice #2: after a schema-evolving append, a
     // pruned read over mixed old/new files must null-fill evolved
-    // columns, not depend on which file Spark infers the schema from
-    val schemaOpt = sn.meta.get(SchemaKey)
-      .map(org.apache.spark.sql.types.StructType.fromDDL)
-    def readFiles(fs: Seq[String]): DataFrame = schemaOpt match {
-      case Some(sch) => spark.read.schema(sch).parquet(fs: _*)
-      case None => spark.read.parquet(fs: _*)
-    }
-    val base =
-      if (kept.nonEmpty) readFiles(kept)
-      else schemaOpt match {
-        case Some(sch) =>
-          // every file skipped: zero rows under the committed schema
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
-        case None =>
-          require(sn.files.nonEmpty,
-            s"[graft] SnapshotLog: version ${sn.version} has no data files")
-          // filter-false over one file keeps the inferred schema
-          readFiles(Seq(sn.files.head))
-            .filter(org.apache.spark.sql.functions.lit(false))
-      }
-    base.filter(col(colName).cast("long").between(lo, hi))
+    // columns, not depend on which file Spark infers the schema from.
+    // Every file skipped: zero rows (filter-false over one file keeps
+    // an inferred schema)
+    readUnder(spark, sn, prunedFiles(sn, colName, lo, hi), sn.files.take(1))
+      .filter(col(colName).cast("long").between(lo, hi))
   }
 
   /** The files [[readPruned]] would open. */
   def prunedFiles(sn: Snapshot, colName: String, lo: Long, hi: Long): Seq[String] =
+    overlapping(sn, sn.stats, colName, lo, hi)
+
+  /** The files [[readPrunedStr]] would open. */
+  def prunedFilesStr(sn: Snapshot, colName: String, lo: String, hi: String): Seq[String] =
+    overlapping(sn, sn.strStats, colName, lo, hi)
+
+  /** `sn`'s files whose recorded [min, max] for `colName` overlaps
+    * [lo, hi]; a file without a bound for the column is always kept.
+    */
+  private def overlapping[A](sn: Snapshot, bounds: Bounds[A], colName: String,
+                             lo: A, hi: A)(implicit ord: Ordering[A]): Seq[String] =
     sn.files.filter { f =>
-      sn.stats.get(f).flatMap(_.get(colName)) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      }
+      bounds.get(f).flatMap(_.get(colName))
+        .forall { case (mn, mx) => ord.gteq(mx, lo) && ord.lteq(mn, hi) }
     }
 
   /** C35i (r16): STRING data skipping — [[readPruned]]'s sibling over
@@ -959,26 +891,8 @@ object SnapshotLog {
                     lo: String, hi: String, version: Long = -1L): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val sn = snapshot(spark, dir, version)
-    val kept = prunedFilesStr(sn, colName, lo, hi)
-    val schemaOpt = sn.meta.get(SchemaKey)
-      .map(org.apache.spark.sql.types.StructType.fromDDL)
-    def readFiles(fs: Seq[String]): DataFrame = schemaOpt match {
-      case Some(sch) => spark.read.schema(sch).parquet(fs: _*)
-      case None => spark.read.parquet(fs: _*)
-    }
-    val base =
-      if (kept.nonEmpty) readFiles(kept)
-      else schemaOpt match {
-        case Some(sch) =>
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
-        case None =>
-          require(sn.files.nonEmpty,
-            s"[graft] SnapshotLog: version ${sn.version} has no data files")
-          readFiles(Seq(sn.files.head))
-            .filter(org.apache.spark.sql.functions.lit(false))
-      }
-    base.filter(col(colName).between(lit(lo), lit(hi)))
+    readUnder(spark, sn, prunedFilesStr(sn, colName, lo, hi), sn.files.take(1))
+      .filter(col(colName).between(lit(lo), lit(hi)))
   }
 
   /** C35j (r16): CHANGE DATA FEED — the per-version row deltas
@@ -1027,20 +941,8 @@ object SnapshotLog {
       val gone = a.files.filterNot(bSet)
       if (added.isEmpty && gone.isEmpty) None // metadata-only commit
       else {
-        val schemaOpt = b.meta.get(SchemaKey)
-          .map(org.apache.spark.sql.types.StructType.fromDDL)
-        def side(files: Seq[String], other: Seq[String]): DataFrame =
-          if (files.nonEmpty) schemaOpt match {
-            case Some(sch) => spark.read.schema(sch).parquet(files: _*)
-            case None => spark.read.parquet(files: _*)
-          }
-          else schemaOpt match {
-            case Some(sch) => spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
-            case None => spark.read.parquet(other: _*).filter(lit(false))
-          }
-        val insRaw = noCdfColumns(side(added, gone), dir)
-        val delRaw = noCdfColumns(side(gone, added), dir)
+        val insRaw = noCdfColumns(readUnder(spark, b, added, gone), dir)
+        val delRaw = noCdfColumns(readUnder(spark, b, gone, added), dir)
         // pure-insert (append) / pure-delete steps skip the rewrite
         // anti-diff entirely (r16): the multiset difference against an
         // EMPTY side is the identity on one side and empty on the
@@ -1099,15 +1001,6 @@ object SnapshotLog {
     df
   }
 
-  /** The files [[readPrunedStr]] would open. */
-  def prunedFilesStr(sn: Snapshot, colName: String, lo: String, hi: String): Seq[String] =
-    sn.files.filter { f =>
-      sn.strStats.get(f).flatMap(_.get(colName)) match {
-        case Some((mn, mx)) => mx.compareTo(lo) >= 0 && mn.compareTo(hi) <= 0
-        case None => true
-      }
-    }
-
   /** Copy-on-write DELETE with manifest-level file pruning (r15 — the
     * Delta DELETE shape): drop rows whose `colName` falls in
     * [lo, hi]. Files whose recorded stats DON'T overlap the range are
@@ -1146,50 +1039,75 @@ object SnapshotLog {
     }
   }
 
-  /** The shared copy-on-write core of the pruned DML family:
-    * `touchedOf` names the files the operation may rewrite (from the
-    * manifest alone — [[prunedFiles]]/[[prunedFilesStr]] flavors),
-    * `modify` turns their rows into the rewrite; everything else —
-    * committed-schema read, stats recompute over the table's stat
-    * column set, full meta carry (the CDC batchId watermark), and
-    * the optimistic rebase (conflict iff a racer rewrote a touched
-    * file or landed a file `touchedOf` would now select) — is one
-    * code path for every flavor.
+  /** The pruned DML family's entry to [[rewriteCommit]]: rewritten
+    * files recompute the table's stat columns, and meta carries as is.
     */
   private def cowModify(spark: SparkSession, dir: String, op: String,
                         touchedOf: Snapshot => Seq[String])(
                         modify: DataFrame => DataFrame): Long = {
     val sn = snapshot(spark, dir)
+    rewriteCommit(spark, dir, op, sn, touchedOf, tableStatCols(sn, Nil))(
+      (_, rows) => modify(rows))
+  }
+
+  /** The stat columns `sn` records anywhere, plus `extra` — what a
+    * rewrite recomputes so pruning keeps working on the new files.
+    */
+  private def tableStatCols(sn: Snapshot, extra: Seq[String]): Seq[String] =
+    (sn.stats.values.flatMap(_.keys) ++ sn.strStats.values.flatMap(_.keys) ++
+      extra).toSeq.distinct.sorted
+
+  /** THE COPY-ON-WRITE COMMIT, the one rewrite path behind
+    * [[deleteRange]]/[[updateRange]] and their string flavors,
+    * [[mergeInto]], [[compactInPlace]] and [[compactPartitionInPlace]].
+    * `touchedOf` names, from the manifest alone, the files the
+    * operation rewrites. Their rows are read under `sn`'s committed
+    * schema ([[readUnder]], lazily: `rewrite` also gets the touched
+    * list and may not read at all) and `rewrite` turns them into the
+    * new rows. A compaction (`shape` = (targetRows, sortCols)) shapes
+    * them with [[shaped]] and always writes; any other rewrite writes
+    * only when it has rows (one `isEmpty` job). New files land under
+    * `layout` with stats over `statCols`.
+    *
+    * The rule — Delta's copy-on-write — stated once:
+    *  - the touched files leave the next version and the new files
+    *    join it; every other file carries forward PATH-IDENTICALLY
+    *    with both its stat maps: no read, no write, no recompute;
+    *  - meta carries in full (schema AND e.g. the CDC batchId
+    *    watermark — r15 advice #3: maintenance commits must not reset
+    *    it); `meta = Some(m)` adds `m` and re-stamps the schema from
+    *    the rewrite's output;
+    *  - a lost commit race rebases the carry onto the new latest
+    *    (data files are never rewritten on retry) unless the racer
+    *    removed a touched file or landed one `touchedOf` would now
+    *    select — then the serializable answer differs and the commit
+    *    fails with a `ConcurrentModificationException` naming `op`;
+    *  - touching nothing with no meta to stamp commits nothing: the
+    *    current version comes back.
+    */
+  private def rewriteCommit(spark: SparkSession, dir: String, op: String,
+                            sn: Snapshot, touchedOf: Snapshot => Seq[String],
+                            statCols: Seq[String], layout: Option[String] = None,
+                            shape: Option[(Long, Seq[String])] = None,
+                            meta: Option[Map[String, String]] = None)(
+                            rewrite: (Seq[String], => DataFrame) => DataFrame): Long = {
     val touchedAbs = touchedOf(sn)
-    if (touchedAbs.isEmpty) return sn.version
+    if (touchedAbs.isEmpty && meta.isEmpty) return sn.version
     val touched = touchedAbs.toSet
-    val base = fs(spark, dir).makeQualified(
-      new org.apache.hadoop.fs.Path(dir)).toString
-    def toRel(abs: String) = abs.stripPrefix(base).stripPrefix("/")
-    val reader = sn.meta.get(SchemaKey) match {
-      case Some(ddl) => spark.read.schema(
-        org.apache.spark.sql.types.StructType.fromDDL(ddl))
-        .parquet(touchedAbs: _*)
-      case None => spark.read.parquet(touchedAbs: _*)
+    val out = rewrite(touchedAbs, readUnder(spark, sn, touchedAbs))
+    val written = shape match {
+      case Some((targetRows, sortCols)) =>
+        writeDataFiles(shaped(out, targetRows, sortCols), dir, layout, statCols)
+      case None if out.isEmpty => FileSet(Nil)
+      case None => writeDataFiles(out, dir, layout, statCols)
     }
-    val out = modify(reader)
-    val newRel =
-      if (out.isEmpty) Seq.empty[String]
-      else writeDataFiles(out, dir)
-    // stats: carry the untouched files' entries; recompute the same
-    // column set for the rewritten files
-    val statCols = (sn.stats.values.flatMap(_.keys) ++
-      sn.strStats.values.flatMap(_.keys)).toSeq.distinct.sorted
-    val (newStats, newStr) = collectStats(spark, dir, newRel, statCols)
-    // full meta carries (schema AND e.g. the CDC batchId watermark —
-    // r15 advice #3: maintenance commits must not reset it). A lost
-    // race rebases when the racer neither rewrote our touched files
-    // nor added files this operation would now select; otherwise the
-    // serializable answer differs and we conflict loudly.
+    val stamp = meta.map(_ + (SchemaKey -> out.schema.toDDL))
+    val rel = toRel(spark, dir)
     commitRebase(spark, dir) { latestOpt =>
       val latest = latestOpt.getOrElse(sn)
       if (latest.version != sn.version) {
-        if (!touchedAbs.forall(latest.files.contains))
+        val live = latest.files.toSet
+        if (!touchedAbs.forall(live))
           throw new java.util.ConcurrentModificationException(
             s"[graft] $op: a concurrent commit rewrote files this " +
               s"operation read (table at v${latest.version}) — re-run")
@@ -1199,15 +1117,7 @@ object SnapshotLog {
             s"[graft] $op: a concurrent commit added ${extra.size} " +
               "overlapping file(s) — re-run to cover their rows")
       }
-      val untouchedRelNow = latest.files.filterNot(touched).map(toRel)
-      val carriedNow = latest.stats.collect {
-        case (abs, m) if !touched(abs) => toRel(abs) -> m
-      }
-      val carriedStrNow = latest.strStats.collect {
-        case (abs, m) if !touched(abs) => toRel(abs) -> m
-      }
-      CommitPlan(untouchedRelNow ++ newRel, carriedNow ++ newStats,
-        latest.meta, carriedStrNow ++ newStr)
+      (carried(latest, touched, rel) ++ written, stamp.fold(latest.meta)(latest.meta ++ _))
     }
   }
 
@@ -1361,70 +1271,34 @@ object SnapshotLog {
     import org.apache.spark.sql.functions.lit
     require(keyCols.nonEmpty, "[graft] mergeInto: keyCols must be non-empty")
     val sn = snapshot(spark, dir)
-    val touchedAbs = batchTouchedFiles(sn, batch, keyCols.head)
-    val touched = touchedAbs.toSet
-    val base = fs(spark, dir).makeQualified(
-      new org.apache.hadoop.fs.Path(dir)).toString
-    def toRel(abs: String) = abs.stripPrefix(base).stripPrefix("/")
     val batchCols = batch.columns.toSet
-    val merged =
-      if (touchedAbs.isEmpty)
-        // nothing the batch can collide with: dedupe the batch itself
-        // (multiple changes per key) and land it as new files only
-        graft.operators.Merge.compactLatest(batch, keyCols, versionCols,
-          opCol, deleteOp)
-      else {
-        val store = sn.meta.get(SchemaKey) match {
-          case Some(ddl) => spark.read.schema(
-            org.apache.spark.sql.types.StructType.fromDDL(ddl))
-            .parquet(touchedAbs: _*)
-          case None => spark.read.parquet(touchedAbs: _*)
+    // a racer's file overlapping the batch's keys conflicts: the merge
+    // result would be stale for those keys
+    rewriteCommit(spark, dir, "mergeInto", sn, batchTouchedFiles(_, batch, keyCols.head),
+      tableStatCols(sn, statsCols), meta = Some(meta)) { (touchedAbs, rows) =>
+      val merged =
+        if (touchedAbs.isEmpty)
+          // nothing the batch can collide with: dedupe the batch itself
+          // (multiple changes per key) and land it as new files only
+          graft.operators.Merge.compactLatest(batch, keyCols, versionCols,
+            opCol, deleteOp)
+        else {
+          val store = rows
+          val dropped = store.columns.filterNot(batchCols)
+          require(dropped.isEmpty,
+            s"[graft] mergeInto: table columns ${dropped.mkString(",")} absent " +
+              "from the batch — schema evolves by ADDING batch columns (old " +
+              "rows null-fill), never by dropping table columns")
+          // evolution: new batch columns null-fill on the store side
+          val conformed = batch.columns
+            .filterNot(c => store.columns.contains(c) || opCol.contains(c))
+            .foldLeft(store) { (df, c) =>
+              df.withColumn(c, lit(null).cast(batch.schema(c).dataType))
+            }
+          graft.operators.Merge.mergeLatest(conformed, batch, keyCols,
+            versionCols, opCol, deleteOp)
         }
-        val dropped = store.columns.filterNot(batchCols)
-        require(dropped.isEmpty,
-          s"[graft] mergeInto: table columns ${dropped.mkString(",")} absent " +
-            "from the batch — schema evolves by ADDING batch columns (old " +
-            "rows null-fill), never by dropping table columns")
-        // evolution: new batch columns null-fill on the store side
-        val conformed = batch.columns
-          .filterNot(c => store.columns.contains(c) || opCol.contains(c))
-          .foldLeft(store) { (df, c) =>
-            df.withColumn(c, lit(null).cast(batch.schema(c).dataType))
-          }
-        graft.operators.Merge.mergeLatest(conformed, batch, keyCols,
-          versionCols, opCol, deleteOp)
-      }
-    val out = opCol.fold(merged)(merged.drop(_))
-    val newRel = if (out.isEmpty) Seq.empty[String] else writeDataFiles(out, dir)
-    val statCols = (sn.stats.values.flatMap(_.keys).toSeq ++
-      sn.strStats.values.flatMap(_.keys) ++ statsCols).distinct.sorted
-    val (newStats, newStr) = collectStats(spark, dir, newRel, statCols)
-    // rebase rule: a racer may neither rewrite our touched files nor
-    // land files whose key range overlaps the batch's keys (the merge
-    // result would be stale for those keys) — otherwise conflict.
-    commitRebase(spark, dir) { latestOpt =>
-      val latest = latestOpt.getOrElse(sn)
-      if (latest.version != sn.version) {
-        if (!touchedAbs.forall(latest.files.contains))
-          throw new java.util.ConcurrentModificationException(
-            s"[graft] mergeInto: a concurrent commit rewrote files this " +
-              s"merge read (table at v${latest.version}) — re-run")
-        val extra = batchTouchedFiles(latest, batch, keyCols.head).toSet -- touched
-        if (extra.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"[graft] mergeInto: a concurrent commit added ${extra.size} " +
-              "file(s) overlapping the batch's keys — re-run to merge them")
-      }
-      val untouchedRelNow = latest.files.filterNot(touched).map(toRel)
-      val carriedNow = latest.stats.collect {
-        case (abs, m) if !touched(abs) => toRel(abs) -> m
-      }
-      val carriedStrNow = latest.strStats.collect {
-        case (abs, m) if !touched(abs) => toRel(abs) -> m
-      }
-      CommitPlan(untouchedRelNow ++ newRel, carriedNow ++ newStats,
-        latest.meta ++ meta + (SchemaKey -> out.schema.toDDL),
-        carriedStrNow ++ newStr)
+      opCol.fold(merged)(merged.drop(_))
     }
   }
 
@@ -1472,7 +1346,7 @@ object SnapshotLog {
     keep.lastOption.foreach(v => writeCheckpointHint(f, dir, v))
     if (orphanAgeMs >= 0L) {
       val cutoff = System.currentTimeMillis() - orphanAgeMs
-      val root = f.makeQualified(new org.apache.hadoop.fs.Path(dir))
+      val root = qualified(spark, dir)
       val keptDirs = keptFiles
         .map(p => new org.apache.hadoop.fs.Path(p).getParent.toString)
       Option(f.listStatus(root)).getOrElse(Array.empty).foreach { st =>

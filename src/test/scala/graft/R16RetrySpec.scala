@@ -63,41 +63,74 @@ class R16RetrySpec extends SparkSpec {
       .toSeq == (500L to 503L))
   }
 
+  /** The pruned DML flavors over one keyed table: `run(dir, lo, hi)`
+    * acts on ids in [lo, hi] (the Str flavors through the zero-padded
+    * `key`, whose order is the ids' order); `deletes` says whether the
+    * matching rows go or get `text = "upd"`.
+    */
+  private final case class RangeOp(name: String, deletes: Boolean,
+                                    run: (String, Long, Long) => Long)
+  private def key(i: Long) = f"k$i%05d"
+  private val upd = Map("text" -> lit("upd"))
+  private val rangeOps = Seq(
+    RangeOp("deleteRange", deletes = true,
+      (d, lo, hi) => SnapshotLog.deleteRange(spark, d, "id", lo, hi)),
+    RangeOp("updateRange", deletes = false,
+      (d, lo, hi) => SnapshotLog.updateRange(spark, d, "id", lo, hi, upd)),
+    RangeOp("deleteRangeStr", deletes = true,
+      (d, lo, hi) => SnapshotLog.deleteRangeStr(spark, d, "key", key(lo), key(hi))),
+    RangeOp("updateRangeStr", deletes = false,
+      (d, lo, hi) => SnapshotLog.updateRangeStr(spark, d, "key", key(lo), key(hi), upd)))
+  private val keyStats = Seq("id", "key")
+  private def keyed(r: Range) =
+    r.map(i => (i.toLong, s"t$i", key(i.toLong))).toDF("id", "text", "key")
+
   test("deleteRange rebases over a non-overlapping concurrent append") {
-    val dir = tmp("graft_race_del_ok")
-    SnapshotLog.write(ids(1 to 100).repartition(4), dir)
-    SnapshotLog.compactInPlace(spark, dir, 25L, Seq("id"), Seq("id"))
-    val appended = ids(200 to 210)
-    val v = withRaceOnce {
-      SnapshotLog.append(appended, dir, statsCols = Seq("id"))
-    } {
-      SnapshotLog.deleteRange(spark, dir, "id", 1L, 20L)
+    for (op <- rangeOps) withClue(op.name) {
+      val dir = tmp("graft_race_del_ok")
+      SnapshotLog.write(keyed(1 to 100).repartition(4), dir)
+      SnapshotLog.compactInPlace(spark, dir, 25L, Seq("id"), keyStats)
+      val appended = keyed(200 to 210)
+      val v = withRaceOnce {
+        SnapshotLog.append(appended, dir, statsCols = keyStats)
+      } {
+        op.run(dir, 1L, 20L)
+      }
+      val sn = SnapshotLog.snapshot(spark, dir)
+      assert(sn.version == v)
+      // rebase carried the racer's file AND applied the operation
+      val cur = SnapshotLog.read(spark, dir)
+      if (op.deletes) {
+        assert(cur.count() == 80 + 11)
+        assert(cur.filter(col("id") <= 20L).count() == 0)
+      } else {
+        assert(cur.count() == 100 + 11)
+        assert(cur.filter(col("id") <= 20L && col("text") === "upd").count() == 20)
+        assert(cur.filter(col("text") === "upd").count() == 20)
+      }
+      assert(cur.filter(col("id") >= 200L).count() == 11)
     }
-    val sn = SnapshotLog.snapshot(spark, dir)
-    assert(sn.version == v)
-    // rebase carried the racer's file AND applied the delete
-    assert(SnapshotLog.read(spark, dir).count() == 80 + 11)
-    assert(SnapshotLog.read(spark, dir).filter(col("id") <= 20L).count() == 0)
-    assert(SnapshotLog.read(spark, dir).filter(col("id") >= 200L).count() == 11)
   }
 
   test("deleteRange conflicts when the racer's files overlap the range (or are statless)") {
-    val dir = tmp("graft_race_del_no")
-    SnapshotLog.write(ids(1 to 100).repartition(4), dir)
-    SnapshotLog.compactInPlace(spark, dir, 25L, Seq("id"), Seq("id"))
-    intercept[java.util.ConcurrentModificationException] {
-      withRaceOnce {
-        SnapshotLog.append(ids(5 to 8), dir, statsCols = Seq("id")) // inside [1,20]
-      } {
-        SnapshotLog.deleteRange(spark, dir, "id", 1L, 20L)
+    for (op <- rangeOps) withClue(op.name) {
+      val dir = tmp("graft_race_del_no")
+      SnapshotLog.write(keyed(1 to 100).repartition(4), dir)
+      SnapshotLog.compactInPlace(spark, dir, 25L, Seq("id"), keyStats)
+      intercept[java.util.ConcurrentModificationException] {
+        withRaceOnce {
+          SnapshotLog.append(keyed(5 to 8), dir, statsCols = keyStats) // inside [1,20]
+        } {
+          op.run(dir, 1L, 20L)
+        }
       }
-    }
-    // statless appended file = could contain anything -> also conflicts
-    intercept[java.util.ConcurrentModificationException] {
-      withRaceOnce {
-        SnapshotLog.append(ids(900 to 905), dir) // no stats
-      } {
-        SnapshotLog.deleteRange(spark, dir, "id", 30L, 40L)
+      // statless appended file = could contain anything -> also conflicts
+      intercept[java.util.ConcurrentModificationException] {
+        withRaceOnce {
+          SnapshotLog.append(keyed(900 to 905), dir) // no stats
+        } {
+          op.run(dir, 30L, 40L)
+        }
       }
     }
   }
@@ -156,6 +189,48 @@ class R16RetrySpec extends SparkSpec {
     assert(sn.version == v)
     assert(sn.meta.get("batchId").contains("3")) // racer's meta carried
     assert(SnapshotLog.read(spark, dir).count() == 65)
+  }
+
+  test("compactPartitionInPlace races: same partition conflicts, different partitions both land") {
+    def laidOut(name: String): String = {
+      val dir = tmp(name)
+      SnapshotLog.writePartitionedBy(
+        (1 to 40).map(i => (i.toLong, s"t$i", if (i % 2 == 0) "a" else "b"))
+          .toDF("id", "text", "part").repartition(4),
+        dir, "part", statsCols = Seq("id"))
+      dir
+    }
+    def inPart(p: String)(f: String) = SnapshotLog.filePartition(f).contains(p)
+    val same = laidOut("graft_race_part_same")
+    intercept[java.util.ConcurrentModificationException] {
+      withRaceOnce {
+        SnapshotLog.compactPartitionInPlace(spark, same, "part", "a", 1000L)
+      } {
+        SnapshotLog.compactPartitionInPlace(spark, same, "part", "a", 1000L)
+      }
+    }
+    assert(SnapshotLog.versions(spark, same) == Seq(0L, 1L)) // only the racer landed
+
+    val dir = laidOut("graft_race_part_diff")
+    val before = SnapshotLog.snapshot(spark, dir)
+    assert(before.files.count(inPart("a")) > 1 && before.files.count(inPart("b")) > 1)
+    val v = withRaceOnce {
+      SnapshotLog.compactPartitionInPlace(spark, dir, "part", "b", 1000L)
+    } {
+      SnapshotLog.compactPartitionInPlace(spark, dir, "part", "a", 1000L)
+    }
+    assert(v == 2L)
+    val racer = SnapshotLog.snapshot(spark, dir, 1L)
+    val after = SnapshotLog.snapshot(spark, dir)
+    // the racer's partition-b files carry path-identically, stats and all
+    val racerB = racer.files.filter(inPart("b"))
+    assert(racerB.size == 1 && after.files.filter(inPart("b")) == racerB)
+    assert(after.stats(racerB.head) == racer.stats(racerB.head))
+    // ours rewrote partition a into one new file
+    val afterA = after.files.filter(inPart("a"))
+    assert(afterA.size == 1 && !racer.files.contains(afterA.head))
+    assert(SnapshotLog.read(spark, dir).select("id").as[Long].collect().sorted
+      .toSeq == (1L to 40L))
   }
 
   test("a contention storm exhausts the bounded retry loudly") {

@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import org.apache.hadoop.fs.Path
 import graft.sources.SnapshotLog
 import org.apache.spark.sql.functions._
 
@@ -296,5 +298,160 @@ class SnapshotLogSpec extends SparkSpec {
     SnapshotLog.updateRange(spark, dir, "id", 3L, 4L, Map("_cdf_side" -> lit(7L)))
     val e = intercept[IllegalArgumentException](SnapshotLog.readChanges(spark, dir, 0L))
     assert(e.getMessage.contains("'_cdf_side'"))
+  }
+
+  /** The version files of `dir` in commit order, with the names that
+    * differ run to run — `data-<uuid>` subdirs (numbered by first
+    * appearance), part-file uuids and commit times — replaced.
+    */
+  private def normalizedManifests(dir: String): Seq[String] = {
+    val logDir = Paths.get(dir, "_graft_log")
+    val docs = SnapshotLog.versions(spark, dir).map(v =>
+      new String(Files.readAllBytes(logDir.resolve(f"v$v%020d.json")), UTF_8))
+    val subdirs = "data-[0-9a-f]{32}".r.findAllIn(docs.mkString).toSeq.distinct
+    docs.map { d =>
+      subdirs.zipWithIndex.foldLeft(d) { case (acc, (s, i)) => acc.replace(s, s"data-$i") }
+        .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "U")
+        .replaceAll("\"commitTimeMs\" : \"[0-9]+\"", "\"commitTimeMs\" : \"T\"")
+    }
+  }
+
+  test("manifest format: a hand-written version file reads back; commits write pinned JSON") {
+    // today's layout, written by hand
+    val hand = tmp("graft_log_fmt_hand")
+    Files.createDirectories(Paths.get(hand, "_graft_log"))
+    Files.write(Paths.get(hand, "_graft_log", f"v${3L}%020d.json"),
+      """{
+        |  "format" : "graft-log-v1",
+        |  "version" : 3,
+        |  "files" : [ "data-a/part-0.parquet", "data-b/_p=x/part-1.parquet" ],
+        |  "stats" : {
+        |    "data-a/part-0.parquet" : {
+        |      "id" : [ -4, 9000000000 ],
+        |      "n" : [ 0, 1 ]
+        |    }
+        |  },
+        |  "strStats" : {
+        |    "data-a/part-0.parquet" : {
+        |      "s" : [ "a", "q" ]
+        |    },
+        |    "data-b/_p=x/part-1.parquet" : {
+        |      "s" : [ "", "zz" ]
+        |    }
+        |  },
+        |  "meta" : {
+        |    "batchId" : "7",
+        |    "commitTimeMs" : "1700000000000",
+        |    "schemaDdl" : "id BIGINT,n INT,s STRING"
+        |  }
+        |}""".stripMargin.getBytes(UTF_8))
+    val base = new Path(hand).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(new Path(hand))
+    def abs(rel: String) = new Path(base, rel).toString
+    val (f0, f1) = (abs("data-a/part-0.parquet"), abs("data-b/_p=x/part-1.parquet"))
+    assert(SnapshotLog.snapshot(spark, hand) == SnapshotLog.Snapshot(3L, Seq(f0, f1),
+      Map(f0 -> Map("id" -> ((-4L, 9000000000L)), "n" -> ((0L, 1L)))),
+      Map("batchId" -> "7", "commitTimeMs" -> "1700000000000",
+        "schemaDdl" -> "id BIGINT,n INT,s STRING"),
+      Map(f0 -> Map("s" -> (("a", "q"))), f1 -> Map("s" -> (("", "zz"))))))
+
+    // write (Long + String stats) → deleteRange → mergeInto → compactInPlace
+    val dir = tmp("graft_log_fmt")
+    SnapshotLog.write((1L to 6L).map(i => (i, s"s$i", 1L)).toDF("id", "s", "version")
+      .coalesce(1), dir, statsCols = Seq("id", "s"), meta = Map("batchId" -> "0"))
+    SnapshotLog.deleteRange(spark, dir, "id", 2L, 3L)
+    SnapshotLog.mergeInto(spark, dir, Seq((9L, "s9", 2L, "U")).toDF("id", "s", "version", "op"),
+      Seq("id"), Seq("version"), Some("op"), meta = Map("batchId" -> "1"))
+    SnapshotLog.compactInPlace(spark, dir, targetRows = 100L, sortCols = Seq("id"),
+      statsCols = Seq("id"))
+    // the files array, stats and strStats in file order, columns and
+    // meta keys by name; compactInPlace keeps only its own statsCols
+    val pinned = Seq(
+      """{
+        |  "format" : "graft-log-v1",
+        |  "version" : 0,
+        |  "files" : [ "data-0/part-00000-U-c000.snappy.parquet" ],
+        |  "stats" : {
+        |    "data-0/part-00000-U-c000.snappy.parquet" : {
+        |      "id" : [ 1, 6 ]
+        |    }
+        |  },
+        |  "strStats" : {
+        |    "data-0/part-00000-U-c000.snappy.parquet" : {
+        |      "s" : [ "s1", "s6" ]
+        |    }
+        |  },
+        |  "meta" : {
+        |    "batchId" : "0",
+        |    "commitTimeMs" : "T",
+        |    "schemaDdl" : "id BIGINT NOT NULL,s STRING,version BIGINT NOT NULL"
+        |  }
+        |}""".stripMargin,
+      """{
+        |  "format" : "graft-log-v1",
+        |  "version" : 1,
+        |  "files" : [ "data-1/part-00000-U-c000.snappy.parquet" ],
+        |  "stats" : {
+        |    "data-1/part-00000-U-c000.snappy.parquet" : {
+        |      "id" : [ 1, 6 ]
+        |    }
+        |  },
+        |  "strStats" : {
+        |    "data-1/part-00000-U-c000.snappy.parquet" : {
+        |      "s" : [ "s1", "s6" ]
+        |    }
+        |  },
+        |  "meta" : {
+        |    "batchId" : "0",
+        |    "commitTimeMs" : "T",
+        |    "schemaDdl" : "id BIGINT NOT NULL,s STRING,version BIGINT NOT NULL"
+        |  }
+        |}""".stripMargin,
+      """{
+        |  "format" : "graft-log-v1",
+        |  "version" : 2,
+        |  "files" : [ "data-1/part-00000-U-c000.snappy.parquet", "data-2/part-00000-U-c000.snappy.parquet" ],
+        |  "stats" : {
+        |    "data-1/part-00000-U-c000.snappy.parquet" : {
+        |      "id" : [ 1, 6 ]
+        |    },
+        |    "data-2/part-00000-U-c000.snappy.parquet" : {
+        |      "id" : [ 9, 9 ]
+        |    }
+        |  },
+        |  "strStats" : {
+        |    "data-1/part-00000-U-c000.snappy.parquet" : {
+        |      "s" : [ "s1", "s6" ]
+        |    },
+        |    "data-2/part-00000-U-c000.snappy.parquet" : {
+        |      "s" : [ "s9", "s9" ]
+        |    }
+        |  },
+        |  "meta" : {
+        |    "batchId" : "1",
+        |    "commitTimeMs" : "T",
+        |    "schemaDdl" : "id BIGINT NOT NULL,version BIGINT,s STRING"
+        |  }
+        |}""".stripMargin,
+      """{
+        |  "format" : "graft-log-v1",
+        |  "version" : 3,
+        |  "files" : [ "data-3/part-00000-U-c000.snappy.parquet" ],
+        |  "stats" : {
+        |    "data-3/part-00000-U-c000.snappy.parquet" : {
+        |      "id" : [ 1, 9 ]
+        |    }
+        |  },
+        |  "meta" : {
+        |    "batchId" : "1",
+        |    "commitTimeMs" : "T",
+        |    "schemaDdl" : "id BIGINT,version BIGINT,s STRING"
+        |  }
+        |}""".stripMargin)
+    val got = normalizedManifests(dir)
+    assert(got.size == pinned.size)
+    got.zip(pinned).zipWithIndex.foreach { case ((g, p), v) =>
+      assert(g == p, s"v$v differs:\n$g")
+    }
   }
 }

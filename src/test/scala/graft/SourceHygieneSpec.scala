@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `Par.scala` creates a thread pool, only `operators/Rank.scala`
   * reads partition ids and only `dedup/Dedup.scala` encodes token
   * bitmaps, once. No `CacheScope.persist` call drops the pin it
-  * returns, and no file builds Theta or KLL sketches itself.
+  * returns, no file builds Theta or KLL sketches itself, and
+  * `SnapshotLog` parses its committed schema and maps absolute paths
+  * to manifest names in one place each.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -87,5 +89,17 @@ class SourceHygieneSpec extends AnyFunSuite {
     val home = Files.readAllLines(Paths.get("src/main/scala/graft/dedup/Dedup.scala"))
       .asScala.count(_.contains(pattern))
     assert(home == 1, s"$pattern appears $home times in Dedup.scala")
+  }
+
+  test("SnapshotLog parses the committed schema and relativizes paths once each") {
+    // one committed-schema reader and one table-relative name mapping
+    // serve every operation: a second copy is how the rewrite paths
+    // drifted apart before
+    val lines = Files.readAllLines(Paths.get("src/main/scala/graft/sources/SnapshotLog.scala"))
+      .asScala
+    for (pattern <- Seq("StructType.fromDDL", "def toRel")) {
+      val n = lines.count(_.contains(pattern))
+      assert(n <= 1, s"$pattern appears $n times in SnapshotLog.scala")
+    }
   }
 }
