@@ -55,28 +55,14 @@ object Ann {
       graft.functions.HyperplaneKeys.planeBank(dim, planes, 1, seed)), 1)
 
   /** LSH-bucketed ANN top-k: score only the vectors falling in the
-    * query's bucket (and optionally neighboring buckets via fewer
-    * planes). Recall < 1 by construction; candidates shrink ~2^planes.
+    * query's bucket — [[lshTopKMultiProbe]] with no extra probes (its
+    * one-key `isin` plans as an equality filter). Recall < 1 by
+    * construction; candidates shrink ~2^planes.
     */
   def lshTopK(emb: DataFrame, vecCol: String, idCol: String,
               query: Array[Double], k: Int, planes: Int = 6,
-              seed: Long = 42L): DataFrame = {
-    val dim = query.length
-    val qKey = { // query key computed with the same plane family
-      val rnd = new scala.util.Random(seed)
-      (0 until planes).map { p =>
-        val plane = Array.fill(dim)(rnd.nextGaussian())
-        val d = query.zip(plane).map { case (x, y) => x * y }.sum
-        if (d >= 0) 1L << p else 0L
-      }.reduce(_ | _)
-    }
-    emb.withColumn("_bucket", hyperplaneKey(col(vecCol), dim, planes, seed))
-      .filter(col("_bucket") === qKey)
-      .select(col(idCol),
-        round(cosine(col(vecCol), litVec(query)), 4).as("cosine_sim"))
-      .orderBy(desc("cosine_sim"), asc(idCol))
-      .limit(k)
-  }
+              seed: Long = 42L): DataFrame =
+    lshTopKMultiProbe(emb, vecCol, idCol, query, k, planes, seed, probes = 0)
 
   /** Multi-probe LSH top-k: additionally probe the buckets reached by
     * flipping the `probes` sign bits whose hyperplanes the query lies

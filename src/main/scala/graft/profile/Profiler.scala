@@ -14,6 +14,13 @@ import org.apache.spark.sql.types._
   * column count, where the reference does one pandas pass per column
   * per interaction. All expressions are built-ins (whole-stage
   * codegen, vectorized parquet reader, column pruning intact).
+  *
+  * Each scalar metric (null/fill counts, describe() stats, moments,
+  * sign counts, string-length extrema, distinct counts, pearson) is
+  * written once, as a private (name, aggregate) builder, and the one
+  * unpivot is written once too: a standalone operator and the
+  * [[report]] grid call the same builders and differ only in rounding
+  * and layout.
   */
 object Profiler {
 
@@ -33,73 +40,144 @@ object Profiler {
       .withColumn("numeric_column_count", lit(numeric))
   }
 
+  /** The per-column unpivot every multi-column profile shares: ONE
+    * aggregation (per `group` value, named `group`, when given) of an
+    * array holding one struct per column or column pair, exploded to
+    * one row per struct. Callers order the rows.
+    */
+  private def unpivot(df: DataFrame, structs: Seq[Column],
+                      group: Option[Column] = None): DataFrame = {
+    val keys = group.map(_ => col("group")).toSeq
+    df.groupBy(group.toSeq: _*).agg(array(structs: _*).as("_c"))
+      .select(keys :+ explode(col("_c")).as("c"): _*)
+      .select(keys :+ col("c.*"): _*)
+  }
+
+  // Each scalar metric below is written once, as (name, aggregate)
+  // pairs: the standalone operators and the [[report]] grid both call
+  // these builders and differ only in rounding and layout.
+
+  private def named(metrics: Seq[(String, Column)]): Seq[Column] =
+    metrics.map { case (k, e) => e.as(k) }
+
+  private def rounded(dp: Int, metrics: Seq[(String, Column)]): Seq[(String, Column)] =
+    metrics.map { case (k, e) => k -> round(e, dp) }
+
+  /** One struct per column: its name as `column`, then `metrics`. */
+  private def fields(c: String, metrics: Seq[(String, Column)]): Column =
+    struct(lit(c).as("column") +: named(metrics): _*)
+
+  /** Null/fill counts of column `c` among `n` rows. fill_pct is
+    * guarded: ANSI mode turns 0/0 on an empty table into a runtime
+    * error, and empty partitions/tables are routine.
+    */
+  private def nullMetrics(c: String, n: Column): Seq[(String, Column)] = Seq(
+    "non_null" -> count(col(c)),
+    "null_count" -> (n - count(col(c))),
+    "fill_pct" -> when(n > 0, count(col(c)) * 100.0 / n))
+
+  /** describe() of a double column: count/mean/std/min/q1/median/q3/max.
+    * Quartiles are exact `percentile` (interpolated, matches
+    * quantile_cont semantics), or the bounded GK `approx_percentile`
+    * when `accuracy` is given. ONE array-percentile aggregate per
+    * column: the three quartiles reference the semantically-same
+    * aggregate, which Catalyst dedupes to a single buffer (for the
+    * exact flavor, one hold-all-values buffer instead of three).
+    */
+  private def describeMetrics(v: Column, accuracy: Option[Int]): Seq[(String, Column)] = {
+    val ps = array(lit(0.25), lit(0.5), lit(0.75))
+    val qArr = accuracy.fold(percentile(v, ps))(a => approx_percentile(v, ps, lit(a)))
+    Seq("cnt" -> count(v), "mean" -> avg(v), "std" -> stddev_samp(v), "min" -> min(v),
+      "q1" -> element_at(qArr, 1), "median" -> element_at(qArr, 2),
+      "q3" -> element_at(qArr, 3), "max" -> max(v))
+  }
+
+  /** Skewness / excess kurtosis of a double column from raw moments
+    * (m3/m2^1.5, m4/m2^2 - 3), with an explicit E[x^k] formula rather
+    * than builtin skewness()/kurtosis() so the definition is
+    * engine-independent (Spark and DuckDB builtins disagree on
+    * sample-vs-population corrections). m2 = 0 (constant column,
+    * single-row group) makes the ratios 0/0 — an ANSI runtime error,
+    * not NaN; the shape of a constant distribution is undefined -> null.
+    */
+  private def momentMetrics(v: Column): Seq[(String, Column)] = {
+    val e1 = avg(v); val e2 = avg(v * v); val e3 = avg(v * v * v)
+    val e4 = avg(v * v * v * v)
+    val m2 = e2 - e1 * e1
+    val m3 = e3 - e1 * e2 * 3 + e1 * e1 * e1 * 2
+    val m4 = e4 - e1 * e3 * 4 + e1 * e1 * e2 * 6 - e1 * e1 * e1 * e1 * 3
+    Seq("skewness" -> when(m2 > 0, m3 / pow(m2, 1.5)),
+      "kurtosis" -> when(m2 > 0, m4 / (m2 * m2) - 3))
+  }
+
+  private def signMetrics(v: Column): Seq[(String, Column)] = Seq(
+    "positive" -> count(when(v > 0, 1)),
+    "zero" -> count(when(v === 0, 1)),
+    "negative" -> count(when(v < 0, 1)))
+
+  /** String length + alphabetic extrema of the non-null values (see
+    * [[stringLengthStats]]).
+    */
+  private def lengthMetrics(s: Column): Seq[(String, Column)] = {
+    val sl = length(s)
+    Seq("min_len" -> min(sl), "max_len" -> max(sl),
+      "value_at_min_len" ->
+        min(when(s.isNotNull, struct(sl.as("l"), s.as("v")))).getField("v"),
+      "value_at_max_len" ->
+        min(when(s.isNotNull, struct((-sl).as("l"), s.as("v")))).getField("v"),
+      "min_alpha" -> min(s), "max_alpha" -> max(s))
+  }
+
+  private def distinctMetrics(c: String): Seq[(String, Column)] = Seq(
+    "distinct_cnt" -> countDistinct(col(c)),
+    "approx_distinct" -> approx_count_distinct(col(c)))
+
+  private def pearson(a: String, b: String): Column =
+    corr(col(a).cast(DoubleType), col(b).cast(DoubleType))
+
+  /** Every column pair (a, b) with a before b in `cols`. */
+  private def pairs(cols: Seq[String]): Seq[(String, String)] =
+    cols.tails.flatMap { case a +: rest => rest.map(a -> _); case _ => Nil }.toSeq
+
+  /** `cnt` as a tie-safe 2-dp percentage of `of`: the integer-space
+    * `(2a+b) DIV 2b` rounding both engines agree on; 0 when `of` is 0.
+    */
+  private def pct2(cnt: String, of: String): Column =
+    expr(s"(2*$cnt*10000 + greatest($of,1L)) DIV (2*greatest($of,1L))") / 100.0
+
   /** Per-column null/fill profile (home.py:146-152), one scan for all
     * columns.
     */
-  def nullProfile(df: DataFrame): DataFrame = {
-    val perCol = df.columns.map { c =>
-      struct(lit(c).as("column"), count(col(c)).as("non_null"))
-    }
-    df.agg(count(lit(1)).as("_n"), array(perCol.toIndexedSeq: _*).as("_c"))
-      .select(explode(col("_c")).as("c"), col("_n"))
-      .select(
-        col("c.column").as("column"),
-        col("c.non_null").as("non_null"),
-        (col("_n") - col("c.non_null")).as("null_count"),
-        // guarded: ANSI 0/0 on an empty table is a runtime error
-        round(when(col("_n") > 0, col("c.non_null") * 100.0 / col("_n")), 2)
-          .as("fill_pct"))
+  def nullProfile(df: DataFrame): DataFrame =
+    unpivot(df, df.columns.toSeq.map(c => fields(c, nullMetrics(c, count(lit(1))))))
+      .withColumn("fill_pct", round(col("fill_pct"), 2))
       .orderBy("column")
-  }
 
   /** describe() equivalent for numeric columns (home.py:167-170):
     * count/mean/std/min/max/q1/median/q3, one scan for all columns.
     * Quantiles use exact `percentile` (interpolated, matches
     * quantile_cont semantics); doubles rounded for stable comparison.
     */
-  def numericStats(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val perCol = cols.map { c =>
-      val v = col(c).cast(DoubleType)
-      // one array-percentile aggregate per column: the three quantile
-      // fields reference the semantically-same aggregate, which
-      // Catalyst dedupes to a SINGLE hold-all-values buffer (vs three)
-      val qArr = percentile(v, array(lit(0.25), lit(0.5), lit(0.75)))
-      struct(
-        lit(c).as("column"),
-        count(v).as("cnt"),
-        round(avg(v), 4).as("mean"),
-        round(stddev_samp(v), 4).as("std"),
-        round(min(v), 4).as("min"),
-        round(element_at(qArr, 1), 4).as("q1"),
-        round(element_at(qArr, 2), 4).as("median"),
-        round(element_at(qArr, 3), 4).as("q3"),
-        round(max(v), 4).as("max"))
-    }
-    df.agg(array(perCol.toIndexedSeq: _*).as("_c"))
-      .select(explode(col("_c")).as("c"))
-      .select("c.*")
-      .orderBy("column")
-  }
+  def numericStats(df: DataFrame, cols: Seq[String]): DataFrame =
+    describe(df, cols, None)
+
+  /** [[numericStats]] and [[numericStatsApprox]]: doubles round to 4 dp. */
+  private def describe(df: DataFrame, cols: Seq[String], accuracy: Option[Int]): DataFrame =
+    unpivot(df, cols.map { c =>
+      val ms = describeMetrics(col(c).cast(DoubleType), accuracy)
+      fields(c, ms.head +: rounded(4, ms.tail))
+    }).orderBy("column")
 
   /** String length + alphabetic extrema (home.py:133-144). The
     * "value at min/max length" is made deterministic: among the
     * shortest (longest) values, the lexicographically smallest wins.
     */
   def stringLengthStats(df: DataFrame, c: String): DataFrame = {
-    val s = col(c)
-    df.filter(s.isNotNull)
-      .agg(
-        min(length(s)).as("min_len"),
-        min(struct(length(s).as("l"), s.as("v"))).as("_minlv"),
-        max(length(s)).as("max_len"),
-        min(struct((-length(s)).as("l"), s.as("v"))).as("_maxlv"),
-        min(s).as("min_alpha"),
-        max(s).as("max_alpha"))
-      .select(
-        lit(c).as("column"),
-        col("min_len"), col("_minlv.v").as("value_at_min_len"),
-        col("max_len"), col("_maxlv.v").as("value_at_max_len"),
-        col("min_alpha"), col("max_alpha"))
+    val ms = named(lengthMetrics(col(c)))
+    df.filter(col(c).isNotNull)
+      .agg(ms.head, ms.tail: _*)
+      .select(lit(c).as("column") +: Seq("min_len", "value_at_min_len", "max_len",
+        "value_at_max_len", "min_alpha", "max_alpha").map(col): _*)
   }
 
   /** Total row count of a grouped `cnt` frame, attached as a `_total`
@@ -114,15 +192,19 @@ object Profiler {
   private def withTotal(grouped: DataFrame): DataFrame =
     grouped.crossJoin(broadcast(grouped.agg(sum(col("cnt")).as("_total"))))
 
+  /** (value, cnt) for every non-null value of `c`. */
+  private def valueCounts(df: DataFrame, c: String): DataFrame =
+    df.filter(col(c).isNotNull)
+      .groupBy(col(c).as("value"))
+      .agg(count(lit(1)).as("cnt"))
+
   /** Frequency table: value counts + percentage (home.py:172-191;
     * like pandas value_counts(normalize=True), nulls are excluded
     * from rows AND the denominator — the null share lives in
     * [[nullProfile]]). Single scan (reused-exchange total).
     */
   def frequencyTable(df: DataFrame, c: String): DataFrame =
-    withTotal(df.filter(col(c).isNotNull)
-        .groupBy(col(c).as("value"))
-        .agg(count(lit(1)).as("cnt")))
+    withTotal(valueCounts(df, c))
       .withColumn("pct", round(col("cnt") * 100.0 / col("_total"), 1))
       .drop("_total")
       .orderBy(desc("cnt"), asc("value"))
@@ -131,21 +213,13 @@ object Profiler {
     * (home.py:177-185 "5 most frequent values").
     */
   def topK(df: DataFrame, c: String, k: Int): DataFrame =
-    df.filter(col(c).isNotNull)
-      .groupBy(col(c).as("value"))
-      .agg(count(lit(1)).as("cnt"))
-      .orderBy(desc("cnt"), asc("value"))
-      .limit(k)
+    valueCounts(df, c).orderBy(desc("cnt"), asc("value")).limit(k)
 
   /** Bottom-k least frequent (non-null) values (home.py:182-185 "5
     * least frequent values"), deterministic tie-break.
     */
   def bottomK(df: DataFrame, c: String, k: Int): DataFrame =
-    df.filter(col(c).isNotNull)
-      .groupBy(col(c).as("value"))
-      .agg(count(lit(1)).as("cnt"))
-      .orderBy(asc("cnt"), asc("value"))
-      .limit(k)
+    valueCounts(df, c).orderBy(asc("cnt"), asc("value")).limit(k)
 
   /** Character-class mask used by the pattern profile: letters -> A,
     * digits -> 9 (home.py:229-231; Turkish letter classes included as
@@ -171,48 +245,30 @@ object Profiler {
     * value_counts(normalize=True) semantics). Single scan.
     */
   def unexpectedValues(df: DataFrame, c: String, maxPct: Double): DataFrame =
-    withTotal(df.filter(col(c).isNotNull)
-        .groupBy(col(c).as("value"))
-        .agg(count(lit(1)).as("cnt")))
+    withTotal(valueCounts(df, c))
       .filter(col("cnt") * 100.0 / col("_total") < maxPct)
       .drop("_total")
       .orderBy(asc("value"))
 
   /** Positive / zero / negative split (home.py:216-227 "Show p-0-n"). */
   def signCounts(df: DataFrame, c: String): DataFrame = {
-    val v = col(c)
-    df.agg(
-        count(when(v > 0, 1)).as("positive"),
-        count(when(v === 0, 1)).as("zero"),
-        count(when(v < 0, 1)).as("negative"),
-        count(lit(1)).as("_n"))
-      .select(
-        lit(c).as("column"),
-        col("positive"), col("zero"), col("negative"),
-        // guarded: ANSI 0/0 on an empty table is a runtime error
-        round(when(col("_n") > 0, col("positive") * 100.0 / col("_n")), 1).as("positive_pct"),
-        round(when(col("_n") > 0, col("zero") * 100.0 / col("_n")), 1).as("zero_pct"),
-        round(when(col("_n") > 0, col("negative") * 100.0 / col("_n")), 1).as("negative_pct"))
+    val signs = Seq("positive", "zero", "negative")
+    val counts = named(signMetrics(col(c))) :+ count(lit(1)).as("_n")
+    // guarded: ANSI 0/0 on an empty table is a runtime error
+    def pct(k: String) = round(when(col("_n") > 0, col(k) * 100.0 / col("_n")), 1)
+    df.agg(counts.head, counts.tail: _*)
+      .select((lit(c).as("column") +: signs.map(col)) ++
+        signs.map(k => pct(k).as(s"${k}_pct")): _*)
   }
 
   /** Exact + approximate (HLL) distinct counts per column, one scan.
     * The approximate path is the 100 TB default; exact is kept for
     * oracle checks and small dims.
     */
-  def distinctProfile(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val perCol = cols.map { c =>
-      struct(
-        lit(c).as("column"),
-        countDistinct(col(c)).as("distinct_cnt"),
-        approx_count_distinct(col(c)).as("approx_distinct"))
-    }
+  def distinctProfile(df: DataFrame, cols: Seq[String]): DataFrame =
     // countDistinct of several columns in one agg => Spark expands to
     // a single multi-distinct aggregate (one shuffle, AQE-planned).
-    df.agg(array(perCol.toIndexedSeq: _*).as("_c"))
-      .select(explode(col("_c")).as("c"))
-      .select("c.*")
-      .orderBy("column")
-  }
+    unpivot(df, cols.map(c => fields(c, distinctMetrics(c)))).orderBy("column")
 
   /** MERGEABLE per-column distinct sketches (Apache DataSketches HLL
     * via Spark's `hll_sketch_agg`) — the incremental-profiling path a
@@ -330,17 +386,10 @@ object Profiler {
   }
 
   /** Pearson correlation for each column pair, one scan. */
-  def correlationMatrix(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val pairs = for {
-      (a, i) <- cols.zipWithIndex; (b, j) <- cols.zipWithIndex if i < j
-    } yield struct(
-      lit(a).as("col_a"), lit(b).as("col_b"),
-      round(corr(col(a), col(b)), 4).as("pearson"))
-    df.agg(array(pairs.toIndexedSeq: _*).as("_c"))
-      .select(explode(col("_c")).as("c"))
-      .select("c.*")
-      .orderBy("col_a", "col_b")
-  }
+  def correlationMatrix(df: DataFrame, cols: Seq[String]): DataFrame =
+    unpivot(df, pairs(cols).map { case (a, b) =>
+      struct(lit(a).as("col_a"), lit(b).as("col_b"), round(pearson(a, b), 4).as("pearson"))
+    }).orderBy("col_a", "col_b")
 
   /** Approximate numeric stats for the 100 TB path: exact
     * `percentile` holds all values per group; `approx_percentile`
@@ -348,27 +397,8 @@ object Profiler {
     * Same output shape as [[numericStats]].
     */
   def numericStatsApprox(df: DataFrame, cols: Seq[String],
-                         accuracy: Int = 10000): DataFrame = {
-    val perCol = cols.map { c =>
-      val v = col(c).cast(DoubleType)
-      // single GK sketch per column for all three quantiles (dedup'd)
-      val qArr = approx_percentile(v, array(lit(0.25), lit(0.5), lit(0.75)), lit(accuracy))
-      struct(
-        lit(c).as("column"),
-        count(v).as("cnt"),
-        round(avg(v), 4).as("mean"),
-        round(stddev_samp(v), 4).as("std"),
-        round(min(v), 4).as("min"),
-        round(element_at(qArr, 1), 4).as("q1"),
-        round(element_at(qArr, 2), 4).as("median"),
-        round(element_at(qArr, 3), 4).as("q3"),
-        round(max(v), 4).as("max"))
-    }
-    df.agg(array(perCol.toIndexedSeq: _*).as("_c"))
-      .select(explode(col("_c")).as("c"))
-      .select("c.*")
-      .orderBy("column")
-  }
+                         accuracy: Int = 10000): DataFrame =
+    describe(df, cols, Some(accuracy))
 
   /** Certification query for [[numericStatsApprox]]'s GK quantiles:
     * for each column × quantile q emits the EXACT order statistics at
@@ -426,31 +456,13 @@ object Profiler {
   }
 
   /** Skewness / excess kurtosis per numeric column, one scan, from
-    * raw moments (m3/m2^1.5, m4/m2^2 - 3). Computed with an explicit
-    * E[x^k] formula rather than builtin skewness()/kurtosis() so the
-    * definition is engine-independent (Spark and DuckDB builtins
-    * disagree on sample-vs-population corrections).
+    * raw moments (see `momentMetrics`), rounded to 4 dp.
     */
-  def moments(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val perCol = cols.map { c =>
+  def moments(df: DataFrame, cols: Seq[String]): DataFrame =
+    unpivot(df, cols.map { c =>
       val v = col(c).cast(DoubleType)
-      val e1 = avg(v); val e2 = avg(v * v); val e3 = avg(v * v * v)
-      val e4 = avg(v * v * v * v)
-      val m2 = e2 - e1 * e1
-      val m3 = e3 - e1 * e2 * 3 + e1 * e1 * e1 * 2
-      val m4 = e4 - e1 * e3 * 4 + e1 * e1 * e2 * 6 - e1 * e1 * e1 * e1 * 3
-      struct(
-        lit(c).as("column"),
-        count(v).as("cnt"),
-        // guarded: m2 = 0 (constant column) is ANSI divide-by-zero
-        round(when(m2 > 0, m3 / pow(m2, 1.5)), 4).as("skewness"),
-        round(when(m2 > 0, m4 / (m2 * m2) - 3), 4).as("kurtosis"))
-    }
-    df.agg(array(perCol.toIndexedSeq: _*).as("_c"))
-      .select(explode(col("_c")).as("c"))
-      .select("c.*")
-      .orderBy("column")
-  }
+      fields(c, ("cnt" -> count(v)) +: rounded(4, momentMetrics(v)))
+    }).orderBy("column")
 
   /** Equi-width histogram with an explicit bucket width anchored at 0
     * (deterministic, no extra min/max pass; pandas_profiling
@@ -489,16 +501,8 @@ object Profiler {
     * not per-column scalars, and stay separate calls.
     */
   def report(df: DataFrame, approx: Boolean = true,
-             accuracy: Int = 10000): DataFrame = {
-    val (main, card) = reportMetricStructs(df, approx, accuracy)
-    def tall(metrics: Seq[Column]) =
-      df.agg(array(metrics: _*).as("_c"))
-        .select(explode(col("_c")).as("c"))
-        .select("c.*")
-    val base = tall(main ++ (if (approx) card else Nil))
-    (if (approx) base else base.union(tall(card)))
-      .orderBy("column", "metric")
-  }
+             accuracy: Int = 10000): DataFrame =
+    reportGrid(df, None, approx, accuracy).orderBy("column", "metric")
 
   /** Per-GROUP [[report]]: the same metric grid computed for every
     * value of `groupCol` — per-source / per-language / per-split
@@ -509,26 +513,17 @@ object Profiler {
     * group). Output `(group, column, metric, value, value_str)`.
     */
   def reportBy(df: DataFrame, groupCol: String, approx: Boolean = true,
-               accuracy: Int = 10000): DataFrame = {
-    val (main, card) = reportMetricStructs(df, approx, accuracy, exclude = Set(groupCol))
-    def tall(metrics: Seq[Column]) =
-      df.groupBy(col(groupCol).cast(StringType).as("group"))
-        .agg(array(metrics: _*).as("_c"))
-        .select(col("group"), explode(col("_c")).as("c"))
-        .select("group", "c.*")
-    val base = tall(main ++ (if (approx) card else Nil))
-    (if (approx) base else base.union(tall(card)))
-      .orderBy("group", "column", "metric")
-  }
+               accuracy: Int = 10000): DataFrame =
+    reportGrid(df, Some(groupCol), approx, accuracy).orderBy("group", "column", "metric")
 
-  /** Returns (main metrics, cardinality metrics) — cardinality is
-    * split out so the exact flavor can aggregate it separately (see
+  /** [[report]] and [[reportBy]]: the metric grid of every column but
+    * `groupCol`, per group value when there is one. Cardinality is
+    * kept apart so the exact flavor can aggregate it separately (see
     * [[report]]'s scale-shape note on the distinct-rewrite blowup).
     */
-  private def reportMetricStructs(df: DataFrame, approx: Boolean,
-                                  accuracy: Int,
-                                  exclude: Set[String] = Set.empty): (Seq[Column], Seq[Column]) = {
-    val fields = df.schema.fields.filterNot(f => exclude.contains(f.name))
+  private def reportGrid(df: DataFrame, groupCol: Option[String], approx: Boolean,
+                         accuracy: Int): DataFrame = {
+    val fields = df.schema.fields.filterNot(f => groupCol.contains(f.name))
     val cols = fields.map(_.name).toSeq
     val numCols = fields
       .filter(_.dataType.isInstanceOf[NumericType]).map(_.name).toSeq
@@ -538,84 +533,37 @@ object Profiler {
     val n = count(lit(1))
     // `+ 0.0` normalizes -0.0 (a near-zero moment can round to -0.0
     // in one engine and +0.0 in another; IEEE -0.0 + 0.0 = +0.0)
-    def m(c: String, metric: String, v: Column): Column =
-      struct(lit(c).as("column"), lit(metric).as("metric"),
-        (round(v.cast(DoubleType), 4) + lit(0.0)).as("value"),
+    def m(c: String, metric: (String, Column)): Column =
+      struct(lit(c).as("column"), lit(metric._1).as("metric"),
+        (round(metric._2.cast(DoubleType), 4) + lit(0.0)).as("value"),
         lit(null).cast(StringType).as("value_str"))
-    def ms(c: String, metric: String, v: Column): Column =
-      struct(lit(c).as("column"), lit(metric).as("metric"),
-        lit(null).cast(DoubleType).as("value"), v.cast(StringType).as("value_str"))
+    def ms(c: String, metric: (String, Column)): Column =
+      struct(lit(c).as("column"), lit(metric._1).as("metric"),
+        lit(null).cast(DoubleType).as("value"), metric._2.cast(StringType).as("value_str"))
     val shape = Seq(
-      m("*", "row_count", n),
-      m("*", "column_count", lit(fields.length)),
-      m("*", "nominal_column_count", lit(nominal)),
-      m("*", "numeric_column_count", lit(fields.length - nominal)))
-    val nulls = cols.flatMap { c =>
-      Seq(
-        m(c, "non_null", count(col(c))),
-        m(c, "null_count", n - count(col(c))),
-        // when-guard: ANSI mode turns 0/0 on an empty table into a
-        // runtime error, and empty partitions/tables are routine
-        m(c, "fill_pct", when(n > 0, count(col(c)) * 100.0 / n)))
-    }
+      "row_count" -> n,
+      "column_count" -> lit(fields.length),
+      "nominal_column_count" -> lit(nominal),
+      "numeric_column_count" -> lit(fields.length - nominal)).map(m("*", _))
+    val nulls = cols.flatMap(c => nullMetrics(c, n).map(m(c, _)))
     val card = cols.map { c =>
-      if (approx) m(c, "approx_distinct", approx_count_distinct(col(c)))
-      else m(c, "distinct_cnt", countDistinct(col(c)))
+      val Seq(exact, est) = distinctMetrics(c)
+      m(c, if (approx) est else exact)
     }
-    val numeric = numCols.flatMap { cName =>
-      val v = col(cName).cast(DoubleType)
-      // ONE array-percentile aggregate per column, not three scalar
-      // ones: the three q-metrics reference the semantically-same
-      // aggregate, which Catalyst dedupes to a single buffer — for
-      // the exact flavor that is one hold-all-values buffer per
-      // column instead of three
-      val ps = array(lit(0.25), lit(0.5), lit(0.75))
-      val qArr =
-        if (approx) approx_percentile(v, ps, lit(accuracy))
-        else percentile(v, ps)
-      def q(p: Double) =
-        element_at(qArr, p match { case 0.25 => 1; case 0.5 => 2; case _ => 3 })
-      val e1 = avg(v); val e2 = avg(v * v); val e3 = avg(v * v * v)
-      val e4 = avg(v * v * v * v)
-      val m2 = e2 - e1 * e1
-      val m3 = e3 - e1 * e2 * 3 + e1 * e1 * e1 * 2
-      val m4 = e4 - e1 * e3 * 4 + e1 * e1 * e2 * 6 - e1 * e1 * e1 * e1 * 3
-      Seq(
-        m(cName, "cnt", count(v)),
-        m(cName, "mean", avg(v)),
-        m(cName, "std", stddev_samp(v)),
-        m(cName, "min", min(v)),
-        m(cName, "q1", q(0.25)),
-        m(cName, "median", q(0.5)),
-        m(cName, "q3", q(0.75)),
-        m(cName, "max", max(v)),
-        // m2 = 0 (constant column / single-row group) makes the
-        // moment ratios 0/0 — an ANSI runtime error, not NaN; the
-        // shape of a constant distribution is undefined -> null
-        m(cName, "skewness", when(m2 > 0, m3 / pow(m2, 1.5))),
-        m(cName, "kurtosis", when(m2 > 0, m4 / (m2 * m2) - 3)),
-        m(cName, "positive", count(when(v > 0, 1))),
-        m(cName, "zero", count(when(v === 0, 1))),
-        m(cName, "negative", count(when(v < 0, 1))))
+    val numeric = numCols.flatMap { c =>
+      val v = col(c).cast(DoubleType)
+      (describeMetrics(v, if (approx) Some(accuracy) else None) ++ momentMetrics(v) ++
+        signMetrics(v)).map(m(c, _))
     }
-    val corrs = for {
-      (a, i) <- numCols.zipWithIndex; (b, j) <- numCols.zipWithIndex if i < j
-    } yield m(a, s"pearson:$b",
-      corr(col(a).cast(DoubleType), col(b).cast(DoubleType)))
-    val strs = strCols.flatMap { cName =>
-      val s = col(cName)
-      val sl = length(s)
-      Seq(
-        m(cName, "min_len", min(sl)),
-        m(cName, "max_len", max(sl)),
-        ms(cName, "value_at_min_len",
-          min(when(s.isNotNull, struct(sl.as("l"), s.as("v")))).getField("v")),
-        ms(cName, "value_at_max_len",
-          min(when(s.isNotNull, struct((-sl).as("l"), s.as("v")))).getField("v")),
-        ms(cName, "min_alpha", min(s)),
-        ms(cName, "max_alpha", max(s)))
+    val corrs = pairs(numCols).map { case (a, b) => m(a, s"pearson:$b" -> pearson(a, b)) }
+    val strs = strCols.flatMap { c =>
+      val (lens, values) = lengthMetrics(col(c)).splitAt(2)
+      lens.map(m(c, _)) ++ values.map(ms(c, _))
     }
-    (shape ++ nulls ++ numeric ++ corrs ++ strs, card)
+    def tall(metrics: Seq[Column]) =
+      unpivot(df, metrics, groupCol.map(g => col(g).cast(StringType).as("group")))
+    val main = shape ++ nulls ++ numeric ++ corrs ++ strs
+    if (approx) tall(main ++ card) else tall(main).union(tall(card))
   }
 
   /** String-column type inference (SURVEY §2 A19 — the engine form of
@@ -652,15 +600,13 @@ object Profiler {
         count(when(try_to_timestamp(c, lit("yyyy-MM-dd")).isNotNull, 1))
           .as("date_cnt"))
     }
-    df.agg(array(perCol.toIndexedSeq: _*).as("_c"))
-      .select(explode(col("_c")).as("c"))
-      .select(col("c.*"))
+    unpivot(df, perCol)
       .select(
         col("column"), col("nn").as("non_null"),
-        (expr("(2*bool_cnt*10000 + greatest(nn,1L)) DIV (2*greatest(nn,1L))") / 100.0).as("bool_pct"),
-        (expr("(2*int_cnt*10000 + greatest(nn,1L)) DIV (2*greatest(nn,1L))") / 100.0).as("int_pct"),
-        (expr("(2*dbl_cnt*10000 + greatest(nn,1L)) DIV (2*greatest(nn,1L))") / 100.0).as("double_pct"),
-        (expr("(2*date_cnt*10000 + greatest(nn,1L)) DIV (2*greatest(nn,1L))") / 100.0).as("date_pct"),
+        pct2("bool_cnt", "nn").as("bool_pct"),
+        pct2("int_cnt", "nn").as("int_pct"),
+        pct2("dbl_cnt", "nn").as("double_pct"),
+        pct2("date_cnt", "nn").as("date_pct"),
         when(col("nn") === 0, "string")
           .when(col("bool_cnt") * 100 >= col("nn") * thresholdPct, "boolean")
           .when(col("int_cnt") * 100 >= col("nn") * thresholdPct, "bigint")
@@ -678,15 +624,10 @@ object Profiler {
     */
   def duplicateColumns(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.size >= 2, "duplicateColumns: need >= 2 columns")
-    val pairs = for {
-      (a, i) <- cols.zipWithIndex; (b, j) <- cols.zipWithIndex if i < j
-    } yield struct(lit(a).as("col_a"), lit(b).as("col_b"),
-      count(when(!(col(a) <=> col(b)), 1)).as("mismatch_rows"))
-    df.agg(array(pairs.toIndexedSeq: _*).as("_p"))
-      .select(explode(col("_p")).as("p"))
-      .select(col("p.col_a").as("col_a"), col("p.col_b").as("col_b"),
-        col("p.mismatch_rows").as("mismatch_rows"),
-        (col("p.mismatch_rows") === 0).as("identical"))
+    unpivot(df, pairs(cols).map { case (a, b) =>
+      struct(lit(a).as("col_a"), lit(b).as("col_b"),
+        count(when(!(col(a) <=> col(b)), 1)).as("mismatch_rows"))
+    }).withColumn("identical", col("mismatch_rows") === 0)
       .orderBy("col_a", "col_b")
   }
 
@@ -709,9 +650,7 @@ object Profiler {
       // rationale: a crossJoin'd total would re-scan the table)
       .withColumn("_t", sum(col("rows")).over(
         org.apache.spark.sql.expressions.Window.partitionBy()))
-      .select(col("pattern"), col("rows"),
-        (expr("(2*rows*10000 + greatest(_t, 1L))" +
-          " DIV (2*greatest(_t, 1L))") / 100.0).as("pct"))
+      .select(col("pattern"), col("rows"), pct2("rows", "_t").as("pct"))
       .orderBy("pattern")
   }
 
@@ -721,16 +660,12 @@ object Profiler {
     */
   def coMissingness(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.size >= 2, "coMissingness: need >= 2 columns")
-    val pairs = for {
-      (a, i) <- cols.zipWithIndex; (b, j) <- cols.zipWithIndex if i < j
-    } yield struct(lit(a).as("col_a"), lit(b).as("col_b"),
-      count(when(col(a).isNull && col(b).isNull, 1)).as("both_null"),
-      count(when(col(a).isNull, 1)).as("a_null"),
-      count(when(col(b).isNull, 1)).as("b_null"))
-    df.agg(array(pairs.toIndexedSeq: _*).as("_p"))
-      .select(explode(col("_p")).as("p"))
-      .select("p.*")
-      .orderBy("col_a", "col_b")
+    unpivot(df, pairs(cols).map { case (a, b) =>
+      struct(lit(a).as("col_a"), lit(b).as("col_b"),
+        count(when(col(a).isNull && col(b).isNull, 1)).as("both_null"),
+        count(when(col(a).isNull, 1)).as("a_null"),
+        count(when(col(b).isNull, 1)).as("b_null"))
+    }).orderBy("col_a", "col_b")
   }
 
   /** Semi-structured (JSON) column profiling (SURVEY §2 A20 — the
@@ -757,9 +692,7 @@ object Profiler {
     base.select(explode(expr(s"json_object_keys(`$c`)")).as("key"))
       .groupBy("key").agg(count(lit(1)).as("cnt"))
       .crossJoin(broadcast(total))
-      .select(col("key"), col("cnt"),
-        (expr("(2*cnt*10000 + greatest(_t,1L)) DIV (2*greatest(_t,1L))") / 100.0)
-          .as("presence_pct"))
+      .select(col("key"), col("cnt"), pct2("cnt", "_t").as("presence_pct"))
       .orderBy("key")
   }
 
@@ -928,10 +861,7 @@ object Profiler {
         count(when(abs(v(i) - med) * 0.6745 > mad * madZ, 1))
           .as("robust_outliers"))
     }
-    df.agg(array(cntStructs: _*).as("_c"))
-      .select(explode(col("_c")).as("c"))
-      .select("c.*")
-      .orderBy("column")
+    unpivot(df, cntStructs).orderBy("column")
   }
 
   /** Spark's own ROUND(x, 4), evaluated on the driver: the same

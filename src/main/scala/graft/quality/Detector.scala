@@ -10,6 +10,11 @@ import org.apache.spark.sql.functions._
   * All reports are single-pass aggregations or hash-shuffled
   * group-bys on the interesting key only — nothing collects to the
   * driver, so the same code runs on 100 TB inputs.
+  *
+  * The DQ counters and the guarded score are written once
+  * ([[dqCounts]], [[dqScore]]): [[dqReport]], [[dqSummary]],
+  * [[beforeAfterOneScan]] and the windowed operators of
+  * [[graft.streaming.StreamingDQ]] all count and score with them.
   */
 object Detector {
 
@@ -47,56 +52,55 @@ object Detector {
       .when(score <= 75, "MEDIUM")
       .otherwise("HIGH")
 
+  /** The DQ counters of column `c` under `rules` (home.py:1132-1138),
+    * as aggregates: (total rows, null records, non-null records that
+    * violate any rule). Every DQ operator, batch and streaming, counts
+    * with these and names them itself.
+    */
+  private[graft] def dqCounts(c: Column, rules: Seq[Rule]): (Column, Column, Column) =
+    (count(lit(1)), count(when(c.isNull, 1)),
+      count(when(c.isNotNull && Rule.anyViolation(c, rules), 1)))
+
+  /** score = proper / total · 100 at 2 dp, proper = total − nulls −
+    * out-of-format. Guarded: ANSI 0/0 on an empty input is a runtime
+    * error, so an empty input scores null.
+    */
+  private[graft] def dqScore(total: Column, nulls: Column, oof: Column): Column =
+    round(when(total > 0, (total - nulls - oof) * 100.0 / total), 2)
+
+  /** `proper_format_records` and `dq_score` from the three counters. */
+  private[graft] def dqScored(total: Column, nulls: Column, oof: Column): Seq[Column] =
+    Seq((total - nulls - oof).as("proper_format_records"),
+      dqScore(total, nulls, oof).as("dq_score"))
+
   /** Column DQ report (home.py:1132-1138): null records,
     * out-of-format records (violating any rule), proper records, and
-    * score = proper/total*100. One aggregation pass.
+    * score = proper/total*100. One aggregation pass; [[dqSummary]]'s
+    * row for the one column.
     */
-  def dqReport(df: DataFrame, column: String, rules: Seq[Rule]): DataFrame = {
-    val c = col(column)
-    val viol = Rule.anyViolation(c, rules)
-    df.agg(
-        count(lit(1)).as("total"),
-        count(when(c.isNull, 1)).as("null_records"),
-        count(when(c.isNotNull && viol, 1)).as("out_of_format_records"))
-      .select(
-        lit(column).as("column"),
-        col("null_records"),
-        col("out_of_format_records"),
-        (col("total") - col("null_records") - col("out_of_format_records"))
-          .as("proper_format_records"),
-        round(when(col("total") > 0,
-          (col("total") - col("null_records") - col("out_of_format_records"))
-            * 100.0 / col("total")), 2).as("dq_score"))
-      .withColumn("dq_band", band(col("dq_score")))
-  }
+  def dqReport(df: DataFrame, column: String, rules: Seq[Rule]): DataFrame =
+    dqRows(df, Seq(column -> rules))
 
   /** Multi-column DQ report in a single scan: one row per (column,
     * rule set) pair — the engine-side equivalent of filling the
     * reference's Before/After summary table column by column.
     */
-  def dqSummary(df: DataFrame, specs: Seq[(String, Seq[Rule])]): DataFrame = {
+  def dqSummary(df: DataFrame, specs: Seq[(String, Seq[Rule])]): DataFrame =
+    dqRows(df, specs).orderBy("column")
+
+  private def dqRows(df: DataFrame, specs: Seq[(String, Seq[Rule])]): DataFrame = {
     val perCol = specs.map { case (name, rules) =>
-      val c = col(name)
-      val viol = Rule.anyViolation(c, rules)
-      struct(
-        lit(name).as("column"),
-        count(when(c.isNull, 1)).as("null_records"),
-        count(when(c.isNotNull && viol, 1)).as("out_of_format_records"),
-        count(lit(1)).as("total"))
+      val (total, nulls, oof) = dqCounts(col(name), rules)
+      struct(lit(name).as("column"), nulls.as("null_records"),
+        oof.as("out_of_format_records"), total.as("total"))
     }
+    val Seq(t, n, o) = Seq("total", "null_records", "out_of_format_records")
+      .map(k => col(s"c.$k"))
     df.agg(array(perCol.toIndexedSeq: _*).as("_c"))
       .select(explode(col("_c")).as("c"))
-      .select(
-        col("c.column").as("column"),
-        col("c.null_records").as("null_records"),
-        col("c.out_of_format_records").as("out_of_format_records"),
-        (col("c.total") - col("c.null_records") - col("c.out_of_format_records"))
-          .as("proper_format_records"),
-        round(when(col("c.total") > 0,
-          (col("c.total") - col("c.null_records") - col("c.out_of_format_records"))
-            * 100.0 / col("c.total")), 2).as("dq_score"))
+      .select(Seq(col("c.column").as("column"), n.as("null_records"),
+        o.as("out_of_format_records")) ++ dqScored(t, n, o): _*)
       .withColumn("dq_band", band(col("dq_score")))
-      .orderBy("column")
   }
 
   /** Before/after comparison: join the two summaries on column name
@@ -273,24 +277,19 @@ object Detector {
   def beforeAfterOneScan(df: DataFrame, specs: Seq[(String, Seq[Rule])],
                          repairs: Map[String, Column]): DataFrame = {
     val perCol = specs.map { case (name, rules) =>
-      val b = col(name)
-      val a = repairs.getOrElse(name, col(name))
-      def nulls(c: Column) = count(when(c.isNull, 1))
-      def oof(c: Column) = count(when(c.isNotNull && Rule.anyViolation(c, rules), 1))
+      val (total, bNull, bOof) = dqCounts(col(name), rules)
+      val (_, aNull, aOof) = dqCounts(repairs.getOrElse(name, col(name)), rules)
       struct(
-        lit(name).as("column"), count(lit(1)).as("total"),
-        nulls(b).as("b_null"), oof(b).as("b_oof"),
-        nulls(a).as("a_null"), oof(a).as("a_oof"))
+        lit(name).as("column"), total.as("total"),
+        bNull.as("b_null"), bOof.as("b_oof"),
+        aNull.as("a_null"), aOof.as("a_oof"))
     }
-    def score(n: Column, o: Column, total: Column): Column =
-      // guarded: ANSI 0/0 on an empty table is a runtime error
-      round(when(total > 0, (total - n - o) * 100.0 / total), 2)
     df.agg(array(perCol.toIndexedSeq: _*).as("_c"))
       .select(explode(col("_c")).as("c"))
       .select(
         col("c.column").as("column"),
-        score(col("c.b_null"), col("c.b_oof"), col("c.total")).as("before_score"),
-        score(col("c.a_null"), col("c.a_oof"), col("c.total")).as("after_score"))
+        dqScore(col("c.total"), col("c.b_null"), col("c.b_oof")).as("before_score"),
+        dqScore(col("c.total"), col("c.a_null"), col("c.a_oof")).as("after_score"))
       .withColumn("delta", round(col("after_score") - col("before_score"), 2))
       .orderBy("column")
   }

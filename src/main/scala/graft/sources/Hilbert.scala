@@ -1,9 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** D103: Hilbert-curve write clustering — the locality upgrade over
@@ -19,11 +18,11 @@ import org.apache.spark.sql.types._
   * Index math is John Skilling's public-domain transpose algorithm
   * ("Programming the Hilbert curve", AIP Conf. Proc. 707, 2004):
   * an O(bits) loop of shifts/XORs per row — implemented as ONE
-  * codegen'd binary expression ([[HilbertIndex2]]; a pure-Column
+  * codegen'd expression ([[HilbertIndexN]]; a pure-Column
   * formulation would double the expression tree per bit step), fully
   * integer, so an external SQL engine re-derives it by unrolling the
-  * same steps (the q_d103 oracle does exactly that). Bucketing
-  * mirrors [[Zorder]] verbatim — the same integer DIV bucket rule.
+  * same steps (the q_d103 oracle does exactly that). Bucketing is
+  * [[Zorder]]'s: the same integer DIV bucket rule, written once.
   */
 object Hilbert {
 
@@ -34,19 +33,7 @@ object Hilbert {
   def withHilbertValue(df: DataFrame, c1: String, c2: String,
                        bits: Int = 16, hCol: String = "h_value"): DataFrame = {
     require(bits >= 1 && bits <= 31, s"bits out of [1,31]: $bits")
-    val bounds = df.agg(
-      min(col(c1)).as("_min1"), max(col(c1)).as("_max1"),
-      min(col(c2)).as("_min2"), max(col(c2)).as("_max2"))
-    // operands cast to BIGINT: for an IntegerType column the multiply by
-    // 2^bits overflows int (ANSI ArithmeticException) once the value range
-    // exceeds ~2^(31-bits); widening first keeps the whole product in long
-    val b1 = expr(s"((CAST(`$c1` AS BIGINT) - CAST(_min1 AS BIGINT)) * ${1L << bits})" +
-      s" DIV (CAST(_max1 AS BIGINT) - CAST(_min1 AS BIGINT) + 1)")
-    val b2 = expr(s"((CAST(`$c2` AS BIGINT) - CAST(_min2 AS BIGINT)) * ${1L << bits})" +
-      s" DIV (CAST(_max2 AS BIGINT) - CAST(_min2 AS BIGINT) + 1)")
-    df.crossJoin(broadcast(bounds))
-      .withColumn(hCol, HilbertIndex2(b1, b2, bits))
-      .drop("_min1", "_max1", "_min2", "_max2")
+    withHilbertValueN(df, Seq(c1, c2), bits, hCol)
   }
 
   /** n-D generalization (r15, D103b): real clustering keys are often
@@ -60,111 +47,16 @@ object Hilbert {
     require(cols.size >= 2, s"need >= 2 columns, got ${cols.size}")
     require(bits >= 1 && cols.size * bits <= 63,
       s"n*bits must fit 63 value bits: n=${cols.size}, bits=$bits")
-    val boundCols = cols.zipWithIndex.flatMap { case (c, i) =>
-      Seq(min(col(c)).as(s"_min$i"), max(col(c)).as(s"_max$i"))
-    }
-    val bounds = df.agg(boundCols.head, boundCols.tail: _*)
-    val buckets = cols.zipWithIndex.map { case (c, i) =>
-      expr(s"((CAST(`$c` AS BIGINT) - CAST(_min$i AS BIGINT)) * ${1L << bits})" +
-        s" DIV (CAST(_max$i AS BIGINT) - CAST(_min$i AS BIGINT) + 1)")
-    }
-    df.crossJoin(broadcast(bounds))
-      .withColumn(hCol, HilbertIndexN(buckets, bits))
-      .drop(cols.indices.flatMap(i => Seq(s"_min$i", s"_max$i")): _*)
-  }
-}
-
-/** 2-D Hilbert index of two bucket values (low `bits` bits each) —
-  * Skilling's axes→transpose transform + MSB-first bit interleave
-  * (x's bit j at position 2j+1, y's at 2j). Nulls propagate; inputs
-  * outside [0, 2^bits) are masked to their low bits (the bucketing
-  * caller never produces them).
-  */
-case class HilbertIndex2(left: Expression, right: Expression, bits: Int)
-    extends BinaryExpression {
-
-  require(bits >= 1 && bits <= 31, s"bits out of [1,31]: $bits")
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (LongType | IntegerType | ShortType | ByteType,
-            LongType | IntegerType | ShortType | ByteType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"expected two integral columns, got $other")
-    }
-
-  private def asLong(dt: DataType, v: Any): Long = dt match {
-    case LongType    => v.asInstanceOf[Long]
-    case IntegerType => v.asInstanceOf[Int].toLong
-    case ShortType   => v.asInstanceOf[Short].toLong
-    case ByteType    => v.asInstanceOf[Byte].toLong
-    case dt0 => throw new IllegalStateException(s"unsupported integral $dt0")
-  }
-
-  def index(a0: Long, a1: Long): Long = {
-    val mask = (1L << bits) - 1
-    val x = Array(a0 & mask, a1 & mask)
-    // inverse undo (Skilling AxestoTranspose)
-    var q = 1L << (bits - 1)
-    while (q > 1) {
-      val p = q - 1
-      var i = 0
-      while (i < 2) {
-        if ((x(i) & q) != 0) x(0) ^= p
-        else { val t = (x(0) ^ x(i)) & p; x(0) ^= t; x(i) ^= t }
-        i += 1
-      }
-      q >>= 1
-    }
-    // Gray encode
-    x(1) ^= x(0)
-    var t = 0L
-    q = 1L << (bits - 1)
-    while (q > 1) { if ((x(1) & q) != 0) t ^= q - 1; q >>= 1 }
-    x(0) ^= t; x(1) ^= t
-    // transpose -> index: MSB-first interleave, dim 0 first
-    var h = 0L
-    var j = bits - 1
-    while (j >= 0) {
-      h = (h << 1) | ((x(0) >> j) & 1L)
-      h = (h << 1) | ((x(1) >> j) & 1L)
-      j -= 1
-    }
-    h
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    index(asLong(left.dataType, a), asLong(right.dataType, b))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("hilbertIndex2", this, classOf[HilbertIndex2].getName)
-    defineCodeGen(ctx, ev, (a, b) => s"$ref.index((long)$a, (long)$b)")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): HilbertIndex2 =
-    copy(left = newLeft, right = newRight)
-}
-
-object HilbertIndex2 {
-  def apply(x: Column, y: Column, bits: Int): Column = {
-    import org.apache.spark.sql.graft.SqlBridge
-    SqlBridge.column(
-      HilbertIndex2(SqlBridge.expression(x), SqlBridge.expression(y), bits))
+    Zorder.withBuckets(df, cols, bits, hCol)(HilbertIndexN(_, bits))
   }
 }
 
 /** n-D Hilbert index (r15): Skilling's transpose transform for any
-  * dimension count — the SAME inverse-undo / Gray-encode loops as
-  * [[HilbertIndex2]], just iterated over n axes (the published
-  * algorithm is dimension-generic; the 2-D case above is its n=2
-  * specialization and the two agree bit-for-bit, spec-gated) —
-  * followed by the MSB-first interleave with dim 0 taking the highest
-  * bit of each group. Nulls propagate; inputs are masked to their low
+  * dimension count — the inverse-undo / Gray-encode loops iterated
+  * over n axes (the published algorithm is dimension-generic; n = 2 is
+  * the 2-D curve [[Hilbert.withHilbertValue]] writes) — followed by
+  * the MSB-first interleave with dim 0 taking the highest bit of each
+  * group (for n = 2: x's bit j at position 2j+1, y's at 2j). Nulls propagate; inputs are masked to their low
   * `bits` bits. One codegen'd call per row, n·bits ≤ 63.
   */
 case class HilbertIndexN(children: Seq[Expression], bits: Int)

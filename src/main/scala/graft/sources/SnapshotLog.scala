@@ -282,7 +282,7 @@ object SnapshotLog {
     */
   private def readUnder(spark: SparkSession, sn: Snapshot, files: Seq[String],
                         like: => Seq[String] = Nil): DataFrame =
-    sn.meta.get(SchemaKey).map(org.apache.spark.sql.types.StructType.fromDDL) match {
+    committedSchema(sn) match {
       case Some(sch) if files.isEmpty =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
       case Some(sch) => spark.read.schema(sch).parquet(files: _*)
@@ -294,6 +294,10 @@ object SnapshotLog {
             "and no recorded schema to read an empty table under")
         spark.read.parquet(from: _*).filter(org.apache.spark.sql.functions.lit(false))
     }
+
+  /** `sn`'s manifest-recorded schema (none before r15). */
+  private def committedSchema(sn: Snapshot): Option[org.apache.spark.sql.types.StructType] =
+    sn.meta.get(SchemaKey).map(org.apache.spark.sql.types.StructType.fromDDL)
 
   /** The manifest meta key carrying the committed schema DDL. */
   val SchemaKey = "schemaDdl"
@@ -779,10 +783,12 @@ object SnapshotLog {
                      statsCols: Seq[String] = Nil): Long = {
     require(targetRows >= 1, s"targetRows must be >= 1, got $targetRows")
     // every file is touched, so only a metadata-only racer rebases;
-    // the schema is re-stamped from the rows read
-    rewriteCommit(spark, dir, "compactInPlace", snapshot(spark, dir), _.files,
+    // the compacted version's schema is re-stamped as it was (the rows
+    // read back from parquet are all nullable)
+    val sn = snapshot(spark, dir)
+    rewriteCommit(spark, dir, "compactInPlace", sn, _.files,
       statsCols, shape = Some((targetRows, sortCols)),
-      meta = Some(Map.empty))((_, rows) => rows)
+      meta = Some(sn.meta.filter(_._1 == SchemaKey)))((_, rows) => rows)
   }
 
   /** C30g (r16): REPLACE commit under the hive-partitioned data
@@ -1076,7 +1082,7 @@ object SnapshotLog {
     *  - meta carries in full (schema AND e.g. the CDC batchId
     *    watermark — r15 advice #3: maintenance commits must not reset
     *    it); `meta = Some(m)` adds `m` and re-stamps the schema from
-    *    the rewrite's output;
+    *    the rewrite's output, unless `m` carries the schema itself;
     *  - a lost commit race rebases the carry onto the new latest
     *    (data files are never rewritten on retry) unless the racer
     *    removed a touched file or landed one `touchedOf` would now
@@ -1101,7 +1107,7 @@ object SnapshotLog {
       case None if out.isEmpty => FileSet(Nil)
       case None => writeDataFiles(out, dir, layout, statCols)
     }
-    val stamp = meta.map(_ + (SchemaKey -> out.schema.toDDL))
+    val stamp = meta.map(Map(SchemaKey -> out.schema.toDDL) ++ _)
     val rel = toRel(spark, dir)
     commitRebase(spark, dir) { latestOpt =>
       val latest = latestOpt.getOrElse(sn)
@@ -1272,6 +1278,10 @@ object SnapshotLog {
     require(keyCols.nonEmpty, "[graft] mergeInto: keyCols must be non-empty")
     val sn = snapshot(spark, dir)
     val batchCols = batch.columns.toSet
+    // the table keeps its column order; new batch columns follow in
+    // batch order (Merge orders its output keys ++ versions ++ payload)
+    val tableCols = committedSchema(sn).fold(Seq.empty[String])(_.fieldNames.toSeq)
+    val order = tableCols ++ batch.columns.filterNot(c => tableCols.contains(c) || opCol.contains(c))
     // a racer's file overlapping the batch's keys conflicts: the merge
     // result would be stale for those keys
     rewriteCommit(spark, dir, "mergeInto", sn, batchTouchedFiles(_, batch, keyCols.head),
@@ -1298,7 +1308,9 @@ object SnapshotLog {
           graft.operators.Merge.mergeLatest(conformed, batch, keyCols,
             versionCols, opCol, deleteOp)
         }
-      opCol.fold(merged)(merged.drop(_))
+      val out = opCol.fold(merged)(merged.drop(_))
+      out.select((order.filter(out.columns.contains) ++ out.columns.filterNot(order.contains))
+        .map(out.col): _*)
     }
   }
 

@@ -37,20 +37,32 @@ object Zorder {
   def withZValue(df: DataFrame, c1: String, c2: String,
                  bits: Int = 16, zCol: String = "z_value"): DataFrame = {
     require(bits >= 1 && bits <= 31, s"bits out of [1,31]: $bits")
-    val bounds = df.agg(
-      min(col(c1)).as("_min1"), max(col(c1)).as("_max1"),
-      min(col(c2)).as("_min2"), max(col(c2)).as("_max2"))
+    withBuckets(df, Seq(c1, c2), bits, zCol) { case Seq(b1, b2) => interleave(b1, b2, bits) }
+  }
+
+  /** `df` plus `outCol` = `index` of each column's bucket
+    * `((v − min)·2^bits) DIV (max − min + 1)`, in [0, 2^bits), with
+    * the bounds from ONE extra min/max aggregate (broadcast — no
+    * driver collect). The bucket rule of both curve layouts
+    * ([[withZValue]], [[Hilbert.withHilbertValueN]]).
+    */
+  private[sources] def withBuckets(df: DataFrame, cols: Seq[String], bits: Int,
+                                   outCol: String)(index: Seq[Column] => Column): DataFrame = {
+    val bounds = cols.indices.map(i => (s"_min${i + 1}", s"_max${i + 1}"))
+    val agg = cols.zip(bounds).flatMap { case (c, (lo, hi)) =>
+      Seq(min(col(c)).as(lo), max(col(c)).as(hi))
+    }
     // integer DIV, not float division: (v-min)·2^bits exceeds 2^53 on
     // wide domains, where double division silently corrupts the bucket
     // operands cast to BIGINT: an IntegerType column with range > ~2^(31-bits)
     // would overflow the int multiply (ANSI ArithmeticException) before the DIV
-    val b1 = expr(s"((CAST(`$c1` AS BIGINT) - CAST(_min1 AS BIGINT)) * ${1L << bits})" +
-      s" DIV (CAST(_max1 AS BIGINT) - CAST(_min1 AS BIGINT) + 1)")
-    val b2 = expr(s"((CAST(`$c2` AS BIGINT) - CAST(_min2 AS BIGINT)) * ${1L << bits})" +
-      s" DIV (CAST(_max2 AS BIGINT) - CAST(_min2 AS BIGINT) + 1)")
-    df.crossJoin(broadcast(bounds))
-      .withColumn(zCol, interleave(b1, b2, bits))
-      .drop("_min1", "_max1", "_min2", "_max2")
+    val buckets = cols.zip(bounds).map { case (c, (lo, hi)) =>
+      expr(s"((CAST(`$c` AS BIGINT) - CAST($lo AS BIGINT)) * ${1L << bits})" +
+        s" DIV (CAST($hi AS BIGINT) - CAST($lo AS BIGINT) + 1)")
+    }
+    df.crossJoin(broadcast(df.agg(agg.head, agg.tail: _*)))
+      .withColumn(outCol, index(buckets))
+      .drop(bounds.flatMap { case (lo, hi) => Seq(lo, hi) }: _*)
   }
 
   /** Z-ordered parquet write: range-partition on the Morton code

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
   OutputMode, Trigger}
-import graft.quality.Rule
+import graft.quality.{Detector, Rule}
 
 /** Structured-Streaming data-quality monitoring: the reference's
   * batch DQ loop (detect → score), recast as a continuous watermarked
@@ -25,22 +25,14 @@ object StreamingDQ {
   def windowedDqScore(stream: DataFrame, tsCol: String, column: String,
                       rules: Seq[Rule], windowDur: String = "1 minute",
                       watermark: String = "2 minutes"): DataFrame = {
-    val c = col(column)
-    val viol = Rule.anyViolation(c, rules)
+    val (total, nulls, oof) = Detector.dqCounts(col(column), rules)
+    val counters = Seq("total", "null_records", "out_of_format_records").map(col)
     stream
       .withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), windowDur).as("w"))
-      .agg(
-        count(lit(1)).as("total"),
-        count(when(c.isNull, 1)).as("null_records"),
-        count(when(c.isNotNull && viol, 1)).as("out_of_format_records"))
-      .select(
-        col("w.start").as("window_start"),
-        col("total"), col("null_records"), col("out_of_format_records"),
-        (col("total") - col("null_records") - col("out_of_format_records"))
-          .as("proper_format_records"),
-        round((col("total") - col("null_records") - col("out_of_format_records"))
-          * 100.0 / col("total"), 2).as("dq_score"))
+      .agg(total.as("total"), nulls.as("null_records"), oof.as("out_of_format_records"))
+      .select((col("w.start").as("window_start") +: counters) ++
+        Detector.dqScored(counters(0), counters(1), counters(2)): _*)
   }
 
   /** Multi-COLUMN windowed DQ: one row per (window, column) — the
@@ -56,34 +48,20 @@ object StreamingDQ {
                         windowDur: String = "1 minute",
                         watermark: String = "2 minutes"): DataFrame = {
     val perCol = specs.map { case (name, rules) =>
-      val c = col(name)
-      val viol = Rule.anyViolation(c, rules)
-      struct(
-        lit(name).as("column"),
-        count(lit(1)).as("total"),
-        count(when(c.isNull, 1)).as("null_records"),
-        count(when(c.isNotNull && viol, 1)).as("out_of_format_records"))
+      val (total, nulls, oof) = Detector.dqCounts(col(name), rules)
+      struct(lit(name).as("column"), total.as("total"), nulls.as("null_records"),
+        oof.as("out_of_format_records"))
     }
+    val counters = Seq("total", "null_records", "out_of_format_records")
     stream
       .withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), windowDur).as("w"))
       .agg(array(perCol: _*).as("_c"))
       .select(col("w.start").as("window_start"), explode(col("_c")).as("c"))
-      .select(
-        col("window_start"),
-        col("c.column").as("column"),
-        col("c.total").as("total"),
-        col("c.null_records").as("null_records"),
-        col("c.out_of_format_records").as("out_of_format_records"),
-        (col("c.total") - col("c.null_records") - col("c.out_of_format_records"))
-          .as("proper_format_records"),
-        // total >= 1 is invariant here (a window group only exists with
-        // at least one row), but guard the division anyway — mirroring
-        // Detector.dqSummary — so a future reshape of the aggregation
-        // can't surface an ANSI 0/0
-        when(col("c.total") > 0,
-          round((col("c.total") - col("c.null_records") - col("c.out_of_format_records"))
-            * 100.0 / col("c.total"), 2)).as("dq_score"))
+      .select((col("window_start") +: col("c.column").as("column") +:
+        counters.map(k => col(s"c.$k").as(k))) ++
+        Detector.dqScored(col("c.total"), col("c.null_records"),
+          col("c.out_of_format_records")): _*)
   }
 
   /** Streaming dedup on a key with bounded state:

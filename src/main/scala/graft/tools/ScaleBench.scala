@@ -35,6 +35,10 @@ object ScaleBench {
 
     def minhash() =
       Dedup.minhashPairs(docs, "text", "doc_id", 0.75, allPairsMaxSets = 0)
+    // D97b blocked margin mining: even vec_ids mine odd ones over 16
+    // IVF cells (the first 16 vectors as centroids)
+    def mining() = (emb.filter(col("vec_id") % 2 === 0), emb.filter(col("vec_id") % 2 === 1),
+      Ann.trainCentroidsBySample(emb, "embedding", "vec_id", 16))
 
     val queries: Seq[(String, () => Long)] = Seq(
       "d1_exact_stats" -> (() => Dedup.exactDedupStats(docs, "text").count()),
@@ -319,7 +323,24 @@ object ScaleBench {
           docs, "text", "doc_id", minCount = 5, k = 20).count()),
       "a21_entropy" -> (() =>
         graft.profile.Profiler.entropyProfile(
-          cust, Seq("c_mktsegment", "c_nationkey")).count()))
+          cust, Seq("c_mktsegment", "c_nationkey")).count()),
+      // rows = mined pairs, with 4 salt buckets per cell
+      "d97b_margin_blocked" -> (() => {
+        val (src, tgt, cents) = mining()
+        Ann.marginMiningBlocked(src, "vec_id", "embedding", tgt, "vec_id", "embedding",
+          cents, k = 4, thresholdMicro = 1000000L, saltBuckets = 4).count()
+      }),
+      // rows = the cosine evaluations the blocked path performs,
+      // sum over cells of |src_c|·|tgt_c| (the exact path does
+      // |src|·|tgt|): two map-only assignment scans and a 16-row join
+      "d97b_cell_volume" -> (() => {
+        val (src, tgt, cents) = mining()
+        def cells(df: DataFrame, n: String) = df
+          .groupBy(graft.functions.NearestCentroid(col("embedding"), cents).as("_cell"))
+          .agg(count(lit(1)).as(n))
+        cells(src, "ns").join(cells(tgt, "nt"), Seq("_cell"))
+          .agg(coalesce(sum(col("ns") * col("nt")), lit(0L))).head().getLong(0)
+      }))
 
     def loadAvg: Double = {
       val la = java.lang.management.ManagementFactory

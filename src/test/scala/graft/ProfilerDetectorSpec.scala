@@ -110,6 +110,118 @@ class ProfilerDetectorSpec extends SparkSpec {
     assert(rep(("x", "*", "column_count")).getAs[Double]("value") == 2.0)
   }
 
+  test("each standalone profile equals its rows of the report grid") {
+    // nulls, negatives, zeros, constant columns, an empty string and
+    // string-length ties ("ab"/"ba", "aa"/"bb"/"dd")
+    val f = Seq(
+      (Some(1L), Some(-2.5), Some(""), "k", Some("bb")),
+      (Some(2L), Some(0.0), Some("ab"), "k", Some("aa")),
+      (None, Some(3.25), Some("ba"), "k", None),
+      (Some(4L), None, None, "k", Some("c")),
+      (Some(-5L), Some(10.0), Some("xyz"), "k", Some("dd")),
+      (Some(0L), Some(-0.5), Some("q"), "k", Some("ee"))
+    ).toDF("i", "d", "s", "k", "t")
+    val texts = agreeWithReport(f)
+    assert(texts(("s", "value_at_min_len")).contains(""))
+    assert(texts(("t", "value_at_min_len")).contains("c"))
+    assert(texts(("t", "value_at_max_len")).contains("aa"))
+    assert(texts(("k", "max_alpha")).contains("k"))
+    // a constant numeric column: std 0, no shape (m2 = 0). It is the
+    // only numeric column: a pearson pair with it divides by zero.
+    val shape = agreeWithReport(f.select(col("s"), lit(7).as("seven")))
+    assert(shape(("seven", "skewness")).isEmpty && shape(("seven", "std")).contains("0.0"))
+  }
+
+  /** Asserts that every standalone scalar profile of `f` equals its
+    * rows of `report(f, approx = false)` (`approx = true` for the GK
+    * quartiles and HLL counts), and returns the exact grid as
+    * (column, metric) → value, as text.
+    */
+  private def agreeWithReport(f: org.apache.spark.sql.DataFrame): Map[(String, String), Option[String]] = {
+    import org.apache.spark.sql.types.{NumericType, StringType}
+    val nums = f.schema.fields.filter(_.dataType.isInstanceOf[NumericType]).map(_.name).toSeq
+    val strs = f.schema.fields.filter(_.dataType == StringType).map(_.name).toSeq
+    def grid(approx: Boolean) = Profiler.report(f, approx).collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r).toMap
+    val exact = grid(approx = false)
+    val approx = grid(approx = true)
+    def value(g: Map[(String, String), org.apache.spark.sql.Row], c: String, m: String) =
+      Option(g((c, m)).get(2)).map(_.asInstanceOf[Double])
+    def text(c: String, m: String) = Option(exact((c, m)).getString(3))
+    def num(r: org.apache.spark.sql.Row, k: String) =
+      Option(r.get(r.fieldIndex(k))).map(_.asInstanceOf[Number].doubleValue)
+    def agree(c: String, r: org.apache.spark.sql.Row, metrics: Seq[String],
+              g: Map[(String, String), org.apache.spark.sql.Row] = exact): Unit =
+      metrics.foreach { m =>
+        assert(num(r, m) == value(g, c, m), s"$c.$m: ${num(r, m)} vs ${value(g, c, m)}")
+      }
+
+    // null/fill: counts exact; fill_pct is 2 dp standalone, 4 dp in the grid
+    Profiler.nullProfile(f).collect().foreach { r =>
+      val c = r.getString(0)
+      agree(c, r, Seq("non_null", "null_count"))
+      assert(num(r, "fill_pct") == value(exact, c, "fill_pct")
+        .map(v => BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble))
+    }
+    val stats = Profiler.numericStats(f, nums).collect()
+    assert(stats.map(_.getString(0)).toSeq == nums.sorted)
+    stats.foreach(r => agree(r.getString(0), r,
+      Seq("cnt", "mean", "std", "min", "q1", "median", "q3", "max")))
+    Profiler.numericStatsApprox(f, nums).collect()
+      .foreach(r => agree(r.getString(0), r, Seq("q1", "median", "q3"), approx))
+    Profiler.moments(f, nums).collect()
+      .foreach(r => agree(r.getString(0), r, Seq("cnt", "skewness", "kurtosis")))
+    nums.foreach { c =>
+      agree(c, Profiler.signCounts(f, c).collect()(0), Seq("positive", "zero", "negative"))
+    }
+    strs.foreach { c =>
+      val r = Profiler.stringLengthStats(f, c).collect()(0)
+      agree(c, r, Seq("min_len", "max_len"))
+      Seq("value_at_min_len", "value_at_max_len", "min_alpha", "max_alpha").foreach { m =>
+        assert(Option(r.getAs[String](m)) == text(c, m), s"$c.$m")
+      }
+    }
+    Profiler.distinctProfile(f, f.columns.toSeq).collect().foreach { r =>
+      agree(r.getString(0), r, Seq("distinct_cnt"))
+      agree(r.getString(0), r, Seq("approx_distinct"), approx)
+    }
+    // (a pair list needs two columns)
+    val corr = if (nums.size < 2) Array.empty[org.apache.spark.sql.Row]
+               else Profiler.correlationMatrix(f, nums).collect()
+    assert(corr.length == nums.size * (nums.size - 1) / 2)
+    corr.foreach { r =>
+      assert(num(r, "pearson") == value(exact, r.getString(0), s"pearson:${r.getString(1)}"))
+    }
+    exact.map { case (k, r) =>
+      k -> Option(r.get(3)).orElse(Option(r.get(2))).map(_.toString)
+    }
+  }
+
+  test("dqReport is dqSummary's row; windowedDqScore is windowedDqSummary's") {
+    val rules = Seq(Rule.NumBetween(0, 15))
+    val frames = Seq(
+      df -> "v",
+      Seq.empty[(Long, String)].toDF("doc_id", "text") -> "text",
+      Seq((1L, None: Option[Double]), (2L, None)).toDF("id", "v") -> "v")
+    frames.foreach { case (frame, c) =>
+      val rs = if (c == "text") Seq(Rule.NoDigits) else rules
+      assert(Detector.dqReport(frame, c, rs).collect().toSeq ==
+        Detector.dqSummary(frame, Seq(c -> rs)).collect().toSeq, c)
+    }
+    val events = Seq(
+      ("2024-01-01 00:00:10", Some(5.0)), ("2024-01-01 00:00:20", None),
+      ("2024-01-01 00:00:30", Some(50.0)), ("2024-01-01 00:01:10", Some(1.0)),
+      ("2024-01-01 00:02:05", None), ("2024-01-01 00:02:50", Some(-3.0))
+    ).toDF("ts", "value").withColumn("ts", to_timestamp(col("ts")))
+    val one = graft.streaming.StreamingDQ.windowedDqScore(events, "ts", "value", rules)
+    val many = graft.streaming.StreamingDQ.windowedDqSummary(events, "ts", Seq("value" -> rules))
+      .drop("column")
+    assert(one.columns.toSeq == many.columns.toSeq)
+    assert(one.orderBy("window_start").collect().toSeq ==
+      many.orderBy("window_start").collect().toSeq)
+    assert(one.count() == 3)
+  }
+
   test("dot_product registers as a SQL function") {
     graft.functions.GraftFunctions.register(spark)
     val v = spark.sql("SELECT dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")

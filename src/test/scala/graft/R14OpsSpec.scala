@@ -184,13 +184,13 @@ class R14OpsSpec extends SparkSpec {
     assert(wide == Seq(2L), "a wider shortlist lets exact cosine win")
   }
 
-  // ---------------- D103: Hilbert curve ----------------
+  // ---------------- D103: Hilbert curve (HilbertIndexN at n = 2) ----------------
 
   test("D103: bijective with unit-step adjacency over the full 8x8 grid; Morton jumps") {
     val pts = for (a <- 0 until 8; b <- 0 until 8) yield (a.toLong, b.toLong)
     val df = pts.toDF("x", "y")
     val got = df.select(col("x"), col("y"),
-        graft.sources.HilbertIndex2(col("x"), col("y"), 3).as("h"))
+        graft.sources.HilbertIndexN(Seq(col("x"), col("y")), 3).as("h"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(got.map(_._3).toSet == (0L until 64L).toSet, "must be a bijection onto 0..63")
     val byH = got.map(t => t._3 -> ((t._1, t._2))).toMap
@@ -212,13 +212,13 @@ class R14OpsSpec extends SparkSpec {
   test("D103: starts at the origin; nulls propagate; high input bits are masked") {
     val df = Seq((Some(0L), Some(0L)), (None, Some(1L)), (Some(9L), Some(0L)))
       .toDF("x", "y")
-    val got = df.select(graft.sources.HilbertIndex2(col("x"), col("y"), 3).as("h"))
+    val got = df.select(graft.sources.HilbertIndexN(Seq(col("x"), col("y")), 3).as("h"))
       .collect().map(r => Option(r.get(0)))
     assert(got(0).contains(0L), "curve starts at (0,0)")
     assert(got(1).isEmpty, "null coordinate -> null index")
     // 9 & 7 = 1: same as (1, 0)
     val ref = Seq((1L, 0L)).toDF("x", "y")
-      .select(graft.sources.HilbertIndex2(col("x"), col("y"), 3)).collect()(0).getLong(0)
+      .select(graft.sources.HilbertIndexN(Seq(col("x"), col("y")), 3)).collect()(0).getLong(0)
     assert(got(2).contains(ref))
   }
 

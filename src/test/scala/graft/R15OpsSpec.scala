@@ -255,15 +255,6 @@ class R15OpsSpec extends SparkSpec {
     }
   }
 
-  test("HilbertIndexN at n=2 agrees bit-for-bit with HilbertIndex2") {
-    val pts = for (x <- 0 until 8; y <- 0 until 8) yield (x.toLong, y.toLong)
-    val df = pts.toDF("x", "y")
-    val both = df.select(
-      graft.sources.HilbertIndex2(col("x"), col("y"), 3).as("h2"),
-      graft.sources.HilbertIndexN(Seq(col("x"), col("y")), 3).as("hn")).collect()
-    assert(both.forall(r => r.getLong(0) == r.getLong(1)))
-  }
-
   test("withHilbertValueN: nulls propagate, wide int ranges don't overflow, guard rails") {
     val df = Seq((Some(0), Some(5L), 1), (Some(1000000000), Some(7L), 2),
       (None, Some(9L), 3), (Some(-2000000000), None, 4))

@@ -316,6 +316,23 @@ class SnapshotLogSpec extends SparkSpec {
     }
   }
 
+  test("mergeInto keeps the table's column order; new batch columns follow in batch order") {
+    val dir = tmp("graft_log_merge_order")
+    SnapshotLog.write(Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("id", "s", "version"), dir,
+      statsCols = Seq("id"))
+    // a pure insert (no file can hold key 9), batch columns in another order
+    SnapshotLog.mergeInto(spark, dir, Seq((9L, 2L, "z")).toDF("id", "version", "s"),
+      Seq("id"), Seq("version"))
+    assert(SnapshotLog.read(spark, dir).columns.toSeq == Seq("id", "s", "version"))
+    // an update of key 1 that also adds two columns
+    SnapshotLog.mergeInto(spark, dir,
+      Seq((7, 1L, "a2", 3L, "x")).toDF("n", "id", "s", "version", "m"), Seq("id"), Seq("version"))
+    val out = SnapshotLog.read(spark, dir)
+    assert(out.columns.toSeq == Seq("id", "s", "version", "n", "m"))
+    assert(out.orderBy("id").collect().map(_.toSeq).toSeq == Seq(
+      Seq(1L, "a2", 3L, 7, "x"), Seq(2L, "b", 1L, null, null), Seq(9L, "z", 2L, null, null)))
+  }
+
   test("manifest format: a hand-written version file reads back; commits write pinned JSON") {
     // today's layout, written by hand
     val hand = tmp("graft_log_fmt_hand")
@@ -430,7 +447,7 @@ class SnapshotLogSpec extends SparkSpec {
         |  "meta" : {
         |    "batchId" : "1",
         |    "commitTimeMs" : "T",
-        |    "schemaDdl" : "id BIGINT NOT NULL,version BIGINT,s STRING"
+        |    "schemaDdl" : "id BIGINT NOT NULL,s STRING,version BIGINT"
         |  }
         |}""".stripMargin,
       """{
@@ -445,7 +462,7 @@ class SnapshotLogSpec extends SparkSpec {
         |  "meta" : {
         |    "batchId" : "1",
         |    "commitTimeMs" : "T",
-        |    "schemaDdl" : "id BIGINT,version BIGINT,s STRING"
+        |    "schemaDdl" : "id BIGINT NOT NULL,s STRING,version BIGINT"
         |  }
         |}""".stripMargin)
     val got = normalizedManifests(dir)

@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * bitmaps, once. No `CacheScope.persist` call drops the pin it
   * returns, no file builds Theta or KLL sketches itself, and
   * `SnapshotLog` parses its committed schema and maps absolute paths
-  * to manifest names in one place each.
+  * to manifest names in one place each. The 2-D Hilbert index is the
+  * n-D one, `Profiler` unpivots in one place and the DQ score is
+  * written once.
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -101,5 +103,19 @@ class SourceHygieneSpec extends AnyFunSuite {
       val n = lines.count(_.contains(pattern))
       assert(n <= 1, s"$pattern appears $n times in SnapshotLog.scala")
     }
+  }
+
+  test("one Hilbert index, one profile unpivot, one DQ score formula") {
+    def lines(f: String) = Files.readAllLines(Paths.get("src/main/scala/graft", f)).asScala
+    // the 2-D index is HilbertIndexN at n = 2
+    val hits = strayUses(Map("HilbertIndex2" -> "<no file>"))
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+    // every multi-column profile goes through Profiler's one unpivot
+    val unpivots = lines("profile/Profiler.scala").count(_.contains("explode(col(\"_c\"))"))
+    assert(unpivots <= 1, s"explode(col(\"_c\")) appears $unpivots times in Profiler.scala")
+    // the DQ score is Detector.dqScore; StreamingDQ calls it
+    val scores = Seq("quality/Detector.scala", "streaming/StreamingDQ.scala")
+      .map(f => lines(f).count(_.contains("* 100.0 /"))).sum
+    assert(scores == 1, s"the DQ score's `* 100.0 /` appears $scores times")
   }
 }
